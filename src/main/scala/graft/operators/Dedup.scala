@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashes, Text, Vectors}
@@ -22,7 +23,7 @@ import graft.functions.{Hashes, Text, Vectors}
   * min-id propagation (connected components for the shallow clusters
   * dedup produces).
   */
-object Dedup {
+object Dedup extends Logging {
 
   private val cacheLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
@@ -1369,8 +1370,7 @@ object Dedup {
       converged = nextSig == curSig
       curSig = nextSig
       it += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"cc round $it sig=$nextSig converged=$converged")
+      logDebug(s"cc round $it sig=$nextSig converged=$converged")
     }
     // Below the local-finish threshold (possibly before any star
     // round ran): one-task union-find over the current — possibly

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
+import graft.plans.DriverPool
 
 /** Approximate/exact nearest-neighbor search over an embedding column.
   *
@@ -1363,34 +1364,6 @@ object Knn {
     ids.map(id => java.lang.Math.floorMod(id, buckets.toLong).toInt)
       .toSeq.distinct.sorted
 
-  /** Run independent Spark actions from a small driver thread pool
-    * (guide §2.6: actions are only sequential because the driver
-    * calls them sequentially; overlapping lets a tiny write's commit
-    * latency hide under a big sibling job's tail). Strictly for
-    * MUTUALLY INDEPENDENT work — distinct output paths, no shared
-    * mutable state. NOT nestable: thunks must not call awaitAll
-    * themselves (current callers never do).
-    *
-    * Failure semantics (round 16, r15 advice): EVERY sibling is
-    * awaited before the first failure propagates, so no store write
-    * outlives the operator call — a thrown thunk must not leave a
-    * sibling overwrite racing a caller's retry/rebuild or committing
-    * after withStaticOverwrite restored the session's overwrite mode.
-    * Thunks run under scala.concurrent.blocking so the blocking Spark
-    * actions expand the global pool instead of starving it when
-    * operator calls overlap. */
-  private[operators] def awaitAll[T](work: Seq[() => T]): Seq[T] =
-    if (work.size <= 1) work.map(_())
-    else {
-      import scala.concurrent.{Await, Future, ExecutionContext, blocking}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fs = work.map(w => Future(blocking { w() }))
-      val results = fs.map(f =>
-        scala.util.Try(Await.result(f, Duration.Inf)))
-      results.map(_.get) // first Failure rethrows AFTER all have landed
-    }
-
   /** Existence-gated optional-component read. A MISSING directory is
     * the common case for these probes (pre-r11 stores have no
     * deletes table, most stores have no codes sidecar), and
@@ -1545,24 +1518,12 @@ object Knn {
     // (layer, bucket) directories — value-identical store.
     // The five independent table writes (meta, deletes, centroids,
     // nodes, edges — distinct paths, no read of each other) overlap
-    // from a driver pool ([[awaitAll]], guide §2.6) so the tiny
-    // writes' commit latency hides under the edge build; only the
-    // entry table, which reads centroids and nodes back, waits.
-    awaitAll(Seq(
-      () => Seq((k, buckets, topEff, portableHash, alphaMicro, kCandEff))
-        .toDF("k", "buckets", "layers", "portable", "alphamicro", "kcand")
-        .write.mode("overwrite").parquet(s"$path/meta"),
-      // empty tombstone table — the delete/compact lifecycle handle
-      // (same convention as every other persisted store)
-      () => Seq.empty[Long].toDF("id")
-        .write.mode("overwrite").parquet(s"$path/deletes"),
-      () => sampleCentroids(canon, "id", "vec", cEff, portableHash)
-        .write.mode("overwrite").parquet(s"$path/centroids"),
-      () => canon.select(col("id") +:
-          transform(col("vec"), _.cast("double")).as("vec") +:
-          keep.map(col): _*)
-        .withColumn("bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/nodes"),
+    // from a driver pool ([[DriverPool.awaitAll]], guide §2.6) so the
+    // tiny writes' commit latency hides under the edge build; only the
+    // entry table, which reads centroids and nodes back, waits. The
+    // edge build goes first: the pool is capped at defaultParallelism,
+    // so a thunk listed late may queue behind the others.
+    DriverPool.awaitAll(spark, Seq(
       () => (0 to topEff).map { l =>
           val sub =
             if (l == 0) canon
@@ -1580,7 +1541,21 @@ object Knn {
               pmod(col("src"), lit(buckets.toLong)).cast("int"))
         }.reduce(_ unionByName _)
         .write.mode("overwrite")
-        .partitionBy("layer", "bucket").parquet(s"$path/edges")))
+        .partitionBy("layer", "bucket").parquet(s"$path/edges"),
+      () => Seq((k, buckets, topEff, portableHash, alphaMicro, kCandEff))
+        .toDF("k", "buckets", "layers", "portable", "alphamicro", "kcand")
+        .write.mode("overwrite").parquet(s"$path/meta"),
+      // empty tombstone table — the delete/compact lifecycle handle
+      // (same convention as every other persisted store)
+      () => Seq.empty[Long].toDF("id")
+        .write.mode("overwrite").parquet(s"$path/deletes"),
+      () => sampleCentroids(canon, "id", "vec", cEff, portableHash)
+        .write.mode("overwrite").parquet(s"$path/centroids"),
+      () => canon.select(col("id") +:
+          transform(col("vec"), _.cast("double")).as("vec") +:
+          keep.map(col): _*)
+        .withColumn("bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/nodes")))
     val cents = spark.read.parquet(s"$path/centroids")
     val writtenNodes = spark.read.parquet(s"$path/nodes") // read-back once
     val allEntries = (0 to topEff).map { l =>
@@ -1678,8 +1653,8 @@ object Knn {
     // checkpointed so no later write invalidates its lineage.
     // The layers are MUTUALLY INDEPENDENT (every one beam-searches
     // the same PRE-append store), so they run from a driver pool
-    // ([[awaitAll]], guide §2.6) and overlap their many small jobs;
-    // kept sequential under countCandidates (the probe-budget
+    // ([[DriverPool.awaitAll]], guide §2.6) and overlap their many
+    // small jobs; kept sequential under countCandidates (the probe-budget
     // accumulator is not an atomic counter) — that flag is
     // instrumentation-only, never set in gate/bench paths.
     def layerDelta(l: Int): Option[DataFrame] = {
@@ -1786,7 +1761,8 @@ object Knn {
     }
     val mergedPerLayer: Seq[DataFrame] =
       if (countCandidates) (0 to layers).flatMap(layerDelta)
-      else awaitAll((0 to layers).map(l => () => layerDelta(l))).flatten
+      else DriverPool.awaitAll(spark,
+        (0 to layers).map(l => () => layerDelta(l))).flatten
     // Phase 2 — WRITES, nodes FIRST (round-11 advice): an interrupted
     // append leaves unlinked nodes, never dangling edges.
     newNodes

@@ -97,7 +97,7 @@ object MinhashStore {
     // coalesces to advisory-sized files, never to one). Both exchanges
     // carry keys-only rows AFTER the cache, so the widened compute
     // stage is untouched.
-    graft.operators.Knn.awaitAll(Seq(
+    graft.plans.DriverPool.awaitAll(df.sparkSession, Seq(
       () => signed.hint("rebalance").write.mode(mode).parquet(s"$path/sigs"),
       () => {
         banded.repartition(col("band"))

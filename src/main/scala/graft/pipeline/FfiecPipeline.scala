@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Ffiec
 import graft.operators.{CombineParts, KeyChecks, LongPivot}
+import graft.plans.DriverPool
 import graft.schema.FfiecSchema
 import graft.sources.ZipTsv
 
@@ -18,11 +19,16 @@ import graft.sources.ZipTsv
   * per written file.
   *
   * Scale shape: each (schedule, date) group reads its members in
-  * parallel tasks, writes are independent, and the long-table pass is
-  * a per-schedule unpivot + union + distinct (one shuffle per dtype).
-  * Fleet-level parallelism comes from processing many zips at once —
-  * the reference's furrr::future_map_dfr becomes a plain loop of
-  * independent Spark jobs (or one job per zip on a cluster scheduler).
+  * parallel tasks (one task per member). Within a zip, processZip runs
+  * two phases of independent writes, each submitted together from a
+  * driver pool bounded by the session's defaultParallelism: phase 1
+  * writes every wide schedule table and every POR table; phase 2 writes
+  * every (date, dtype) long table (a per-schedule unpivot + union +
+  * distinct, one shuffle each) and every date's schedules metadata.
+  * The many small jobs of a zip thus share the cores
+  * instead of queueing behind each other's dispatch. Fleet-level
+  * parallelism comes from processing many zips at once (processAll's
+  * `concurrency`) — the reference's furrr::future_map_dfr.
   */
 object FfiecPipeline {
 
@@ -127,7 +133,17 @@ object FfiecPipeline {
 
   /** Process one bulk zip into `outDir`. Returns the manifest. With no
     * `schemaMap`, resolves one from taxonomy/XBRL siblings (see
-    * resolveSchemaMap). */
+    * resolveSchemaMap).
+    *
+    * Every multipart (schedule, date) group is validated before any job
+    * starts, so a broken zip writes nothing. Then two phases, each a
+    * set of independent writes submitted together from a driver pool
+    * ([[graft.plans.DriverPool.awaitAll]]): phase 1 writes every wide
+    * schedule table and every POR table; phase 2 writes every
+    * (date, dtype) long table and every date's schedules metadata from
+    * the phase-1 tables. Manifest rows keep the order schedules, long,
+    * meta, POR. Under `strict`, a pct_to_prop failure is raised once
+    * every phase-1 sibling has settled. */
   def processZip(spark: SparkSession, zipPath: String, outDir: String,
                  schemaMap: Map[String, String] = FfiecSchema.defaultSchemaMap,
                  overrides: Map[String, String] = FfiecSchema.defaultColOverrides,
@@ -136,16 +152,22 @@ object FfiecPipeline {
     val resolved =
       if (schemaMap.nonEmpty) schemaMap else resolveSchemaMap(spark, zipPath)
     val members = ZipTsv.listMembers(spark, zipPath)
-    val written = Seq.newBuilder[Written]
 
-    // ---- schedules: combine parts, write wide parquet per (schedule, date)
+    // ---- validate every multipart group before any job starts
     val schedGroups = members.filter(_.schedule.isDefined)
       .groupBy(m => (m.schedule.get.toLowerCase, m.dateRaw.getOrElse("unknown")))
       .toSeq.sortBy(_._1)
-    val widePaths = schedGroups.map { case ((schedule, dateRaw), ms) =>
-      val sorted = ms.sortBy(_.part.getOrElse(1))
-      val nParts = CombineParts.resolveNParts(
-        sorted.map(_.part), sorted.map(_.nParts), s"$schedule ($dateRaw)")
+      .map { case ((schedule, dateRaw), ms) =>
+        val sorted = ms.sortBy(_.part.getOrElse(1))
+        val nParts = CombineParts.resolveNParts(
+          sorted.map(_.part), sorted.map(_.nParts), s"$schedule ($dateRaw)")
+        (schedule, dateRaw, sorted, nParts)
+      }
+    val porMembers = members.filterNot(_.schedule.isDefined)
+
+    // ---- phase 1: wide parquet per (schedule, date), and POR
+    def writeWide(schedule: String, dateRaw: String, sorted: Seq[ZipTsv.Member],
+                  nParts: Int): (Written, Option[Wide]) = {
       // Per-part diagnostics ride the write job via observed metrics —
       // no second pass over the zip members (ref: ffiec_process.R:225
       // ok/repairs recorded per written file).
@@ -204,54 +226,14 @@ object FfiecPipeline {
         (if (metrics.exists(metric(_, "tab") > 0)) Seq("tab-repair") else Nil) ++
         badPure.map(c => s"pure-pct-bad: $c")
       val ok = metrics.map(metric(_, "problems")).sum == 0 && badPure.isEmpty
-      written += Written(schedule, "schedule", dateRaw, out, nParts,
-        ok = ok, repairs = repairs, innerFiles = sorted.map(_.file))
-      out
+      (Written(schedule, "schedule", dateRaw, out, nParts,
+          ok = ok, repairs = repairs, innerFiles = sorted.map(_.file)),
+        Some(Wide(dateRaw, out, fixed.schema)))
     }
 
-    // ---- long parquet per arrow dtype (ref: make_long_pq)
-    val dtypes: Seq[(String, DataType)] = Seq(
-      "float" -> DoubleType, "int" -> IntegerType, "str" -> StringType,
-      "date" -> DateType, "bool" -> BooleanType)
-    val dateRaws = schedGroups.map(_._1._2).distinct
-    for (dateRaw <- dateRaws; (dname, dtype) <- dtypes) {
-      val longs = widePaths.filter(_.endsWith(s"_$dateRaw.parquet")).flatMap { p =>
-        val wide = spark.read.parquet(p)
-        val cols = LongPivot.colsOfType(wide, dtype, Seq("IDRSSD", "date"))
-        if (cols.isEmpty) None
-        else Some(LongPivot.long(wide, Seq("IDRSSD", "date"), dtype, distinct = false))
-      }
-      if (longs.nonEmpty) {
-        val all = longs.reduce(_.unionByName(_)).distinct()
-        KeyChecks.assertNoDups(all, Seq("IDRSSD", "date", "item"))
-        val out = s"$outDir/$prefix${dname}_$dateRaw.parquet"
-        all.write.mode("overwrite").parquet(out)
-        written += Written(dname, "long", dateRaw, out, 1, ok = true, Nil, Nil)
-      }
-    }
-
-    // ---- item → schedules metadata (ref: make_schedule_pq)
-    for (dateRaw <- dateRaws) {
-      val pairs = widePaths.filter(_.endsWith(s"_$dateRaw.parquet")).flatMap { p =>
-        val schedule = graft.sources.Scan.extractSchedule(
-          p.split('/').last, prefix)
-        spark.read.parquet(p).columns
-          .filterNot(c => c == "IDRSSD" || c == "date")
-          .map(item => (schedule, item))
-      }
-      if (pairs.nonEmpty) {
-        val out = s"$outDir/${prefix}schedules_$dateRaw.parquet"
-        LongPivot.itemSchedules(pairs.toDF("schedule", "item"))
-          .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
-          .write.mode("overwrite").parquet(out)
-        written += Written("schedules", "meta", dateRaw, out, 1, ok = true, Nil, Nil)
-      }
-    }
-
-    // ---- POR files (no schedule token in the member name). Repairs are
+    // POR files (no schedule token in the member name). Repairs are
     // recorded; ok stays true as in the reference (ffiec_process.R:442).
-    members.filterNot(_.schedule.isDefined).foreach { m =>
-      val dateRaw = m.dateRaw.getOrElse("unknown")
+    def writePor(m: ZipTsv.Member, dateRaw: String): (Written, Option[Wide]) = {
       val out = s"$outDir/por_$dateRaw.parquet"
       val obs = org.apache.spark.sql.Observation(s"diag_por_$dateRaw")
       ZipTsv.readPor(spark, zipPath, m.file)
@@ -263,12 +245,87 @@ object FfiecPipeline {
         .write.mode("overwrite").parquet(out)
       val tab = Option(obs.get.getOrElse("tab", null))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
-      written += Written("por", "por", dateRaw, out, 1, ok = true,
-        repairs = if (tab > 0) Seq("tab-repair") else Nil,
-        innerFiles = Seq(m.file))
+      (Written("por", "por", dateRaw, out, 1, ok = true,
+          repairs = if (tab > 0) Seq("tab-repair") else Nil,
+          innerFiles = Seq(m.file)), None)
     }
 
-    written.result().toDF()
+    val phase1 = DriverPool.awaitAll(spark,
+      schedGroups.map { case (s, d, ms, n) => () =>
+        labelled(spark, s"ffiec $d $s wide")(writeWide(s, d, ms, n)) } ++
+      porMembers.map { m => () =>
+        val d = m.dateRaw.getOrElse("unknown")
+        labelled(spark, s"ffiec $d por")(writePor(m, d)) })
+    val (schedRows, porRows) = phase1.map(_._1).splitAt(schedGroups.size)
+    val wides = phase1.flatMap(_._2)
+
+    // ---- phase 2: long parquet per (date, arrow dtype) (ref:
+    // make_long_pq) and item → schedules metadata per date (ref:
+    // make_schedule_pq), all from the phase-1 tables. Each wide table
+    // is read once with the schema phase 1 wrote, so no read pays a
+    // schema-inference job.
+    val dtypes: Seq[(String, DataType)] = Seq(
+      "float" -> DoubleType, "int" -> IntegerType, "str" -> StringType,
+      "date" -> DateType, "bool" -> BooleanType)
+    val dateRaws = wides.map(_.dateRaw).distinct
+    val wideDfs = wides.map(w => w ->
+      spark.read.schema(StructType(w.schema.map(_.copy(nullable = true))))
+        .parquet(w.path))
+
+    def writeLong(dateRaw: String, dname: String, dtype: DataType): Option[Written] = {
+      val longs = wideDfs.filter(_._1.dateRaw == dateRaw).flatMap { case (_, wide) =>
+        val cols = LongPivot.colsOfType(wide, dtype, Seq("IDRSSD", "date"))
+        if (cols.isEmpty) None
+        else Some(LongPivot.long(wide, Seq("IDRSSD", "date"), dtype, distinct = false))
+      }
+      if (longs.isEmpty) None
+      else {
+        val all = longs.reduce(_.unionByName(_)).distinct()
+        KeyChecks.assertNoDups(all, Seq("IDRSSD", "date", "item"))
+        val out = s"$outDir/$prefix${dname}_$dateRaw.parquet"
+        all.write.mode("overwrite").parquet(out)
+        Some(Written(dname, "long", dateRaw, out, 1, ok = true, Nil, Nil))
+      }
+    }
+
+    def writeMeta(dateRaw: String): Option[Written] = {
+      val pairs = wides.filter(_.dateRaw == dateRaw).flatMap { w =>
+        val schedule = graft.sources.Scan.extractSchedule(
+          w.path.split('/').last, prefix)
+        w.schema.fieldNames
+          .filterNot(c => c == "IDRSSD" || c == "date")
+          .map(item => (schedule, item))
+      }
+      if (pairs.isEmpty) None
+      else {
+        val out = s"$outDir/${prefix}schedules_$dateRaw.parquet"
+        LongPivot.itemSchedules(pairs.toDF("schedule", "item"))
+          .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
+          .write.mode("overwrite").parquet(out)
+        Some(Written("schedules", "meta", dateRaw, out, 1, ok = true, Nil, Nil))
+      }
+    }
+
+    val phase2 = DriverPool.awaitAll(spark,
+      (for (d <- dateRaws; (dname, dtype) <- dtypes) yield () =>
+        labelled(spark, s"ffiec $d $dname long")(writeLong(d, dname, dtype))) ++
+      dateRaws.map(d => () =>
+        labelled(spark, s"ffiec $d schedules meta")(writeMeta(d))))
+
+    (schedRows ++ phase2.flatten ++ porRows).toDF()
+  }
+
+  /** A phase-1 wide table: its date, path and the schema written. */
+  private case class Wide(dateRaw: String, path: String, schema: StructType)
+
+  /** Run `body` with `label` as the calling thread's Spark job
+    * description, restoring the previous one after — pool threads keep
+    * their local properties from one thunk to the next. */
+  private def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
   }
 
   /** pureItemType columns arrive as strings, possibly percent-encoded —
@@ -293,7 +350,11 @@ object FfiecPipeline {
   /** Run `one` over every zip, `concurrency` at a time — the
     * Spark-native analogue of the reference's future/furrr multisession
     * (concurrent driver threads submit independent Spark jobs that
-    * share the executor pool; the scheduler interleaves stages). */
+    * share the executor pool; the scheduler interleaves stages). This
+    * is the zip level; inside each zip, processZip's two phases
+    * overlap its own schedule, POR, long and metadata writes from a
+    * pool of up to `defaultParallelism` threads, so a run can hold
+    * `concurrency` × `defaultParallelism` driver threads. */
   private def mapZips[A](zips: Seq[(String, String)], concurrency: Int)
                         (one: (String, String) => A): Seq[A] =
     if (concurrency <= 1) zips.map { case (zip, d) => one(zip, d) }

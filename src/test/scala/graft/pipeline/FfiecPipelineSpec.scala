@@ -27,6 +27,78 @@ class FfiecPipelineSpec extends SparkSpec {
     "RCON3838" -> "xbrli:pureItemType",
     "RIAD4340" -> "xbrli:integerItemType")
 
+  /** Three schedules (RC in two parts, RCB, RI) and a POR member: every
+    * output kind — wide, all five long dtypes, metadata, POR. `rcRate`
+    * is bank 39's RCON3838 cell; a bare number there is a pct_to_prop
+    * error in a percent-bearing column. */
+  private def threeScheduleZip(dir: File, rcRate: String = "3%"): String =
+    writeZip(dir, "FFIEC CDR Call Bulk All Schedules 03312024.zip",
+      "FFIEC CDR Call Schedule RC 03312024(1 of 2).txt" ->
+        "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t100.5\t\n38\t200.0\t\n",
+      "FFIEC CDR Call Schedule RC 03312024(2 of 2).txt" ->
+        ("IDRSSD\tRCFD0020\tRCON3838\t\nID\tOther\tRate\t\n" +
+         s"37\t7.5\t28%\t\n39\t9.0\t$rcRate\t\n"),
+      "FFIEC CDR Call Schedule RCB 03312024.txt" ->
+        ("IDRSSD\tRCFDB999\tRCON9999\tTEXTB\t\nID\tFlag\tAs of\tNote\t\n" +
+         "37\ttrue\t20240331\tfirst\t\n39\tfalse\t0\tthird\t\n"),
+      "FFIEC CDR Call Schedule RI 03312024.txt" ->
+        "IDRSSD\tRIAD4340\t\nID\tNet income\t\n37\t42\t\n38\tCONF\t\n",
+      "FFIEC CDR Call Bulk POR 03312024.txt" ->
+        ("IDRSSD\tFinancial Institution Name\tFDIC Certificate Number\n" +
+         "37\tFirst Bank\t0\n38\tSecond Bank\t1234\n"),
+      "Readme.txt" -> "ignore")
+
+  private val threeScheduleMap =
+    schemaMap + ("RCFDB999" -> "xbrli:booleanItemType")
+
+  private def render(r: org.apache.spark.sql.Row): String =
+    r.toSeq.map {
+      case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")
+
+  /** A parquet table's schema, then every row rendered and sorted. */
+  private def rowsOf(path: String): Seq[String] = {
+    val t = spark.read.parquet(path)
+    t.schema.simpleString +: t.collect().map(render).toSeq.sorted
+  }
+
+  /** The descriptions of the jobs `body` launches ("" when unset),
+    * collected by a SparkListener on a job group the calling thread
+    * sets (driver-pool threads inherit it). A fence job in a second
+    * group marks when every earlier event was delivered. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(
+            props.flatMap(p => Option(p.getProperty("spark.job.description")))
+              .getOrElse(""))
+          case Some(g) if g == s"$group-fence" => fence.countDown()
+          case _ =>
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, null) // no description: unlabelled jobs read ""
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.toArray(Array.empty[String]).toSeq
+  }
+
+  private def allFiles(f: File): Seq[File] =
+    Option(f.listFiles()).toSeq.flatten.flatMap(c => c +: allFiles(c))
+
   test("fetchPlan: quarter ends in range; names round-trip through " +
     "listZips' pattern for both kinds") {
     val s = spark
@@ -421,15 +493,121 @@ class FfiecPipelineSpec extends SparkSpec {
   test("processZip rejects broken multipart structure") {
     val dir = java.nio.file.Files.createTempDirectory("ffiec_raw2").toFile
     val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq2").toFile
+    // a valid schedule that sorts before the broken one, and a POR
+    // member: validation runs before any write, so none of them lands
     writeZip(dir, "FFIEC CDR Call Bulk All Schedules 06302024.zip",
+      "FFIEC CDR Call Schedule ENT 06302024.txt" ->
+        "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.0\t\n",
       "FFIEC CDR Call Schedule RC 06302024(1 of 3).txt" ->
         "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.0\t\n",
       "FFIEC CDR Call Schedule RC 06302024(2 of 3).txt" ->
-        "IDRSSD\tRCFD0020\t\nID\tOther\t\n37\t2.0\t\n")
+        "IDRSSD\tRCFD0020\t\nID\tOther\t\n37\t2.0\t\n",
+      "FFIEC CDR Call Bulk POR 06302024.txt" ->
+        "IDRSSD\tFinancial Institution Name\n37\tFirst Bank\n")
     intercept[IllegalArgumentException] {
       FfiecPipeline.processZip(spark,
         s"$dir/FFIEC CDR Call Bulk All Schedules 06302024.zip",
         outDir.getAbsolutePath, schemaMap)
     }
+    assert(outDir.list().isEmpty, outDir.list().mkString(", "))
+  }
+
+  test("processZip: three schedules + POR — every table and the manifest " +
+    "equal across runs and as expected") {
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_raw9").toFile
+    val zip = threeScheduleZip(dir)
+    val tables = Seq("ffiec_rc", "ffiec_rcb", "ffiec_ri", "ffiec_float",
+      "ffiec_int", "ffiec_str", "ffiec_date", "ffiec_bool",
+      "ffiec_schedules", "por").map(t => s"${t}_20240331.parquet")
+    def run(): (Seq[String], Seq[Seq[String]], Seq[String]) = {
+      val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq9").toFile
+      val manifest = FfiecPipeline.processZip(spark, zip,
+        outDir.getAbsolutePath, threeScheduleMap)
+        .drop("parquet").collect().map(render).toSeq
+      val written = outDir.list().toSeq.sorted
+      (manifest, tables.map(t => rowsOf(s"$outDir/$t")), written)
+    }
+    val first = run()
+    assert(run() == first)
+    val (manifest, rows, written) = first
+    // manifest order: schedules, long (dtype order), meta, POR
+    val rc = "FFIEC CDR Call Schedule RC 03312024"
+    assert(manifest == Seq(
+      s"rc|schedule|20240331|2|true|[]|[$rc(1 of 2).txt,$rc(2 of 2).txt]",
+      "rcb|schedule|20240331|1|true|[]|[FFIEC CDR Call Schedule RCB 03312024.txt]",
+      "ri|schedule|20240331|1|true|[]|[FFIEC CDR Call Schedule RI 03312024.txt]",
+      "float|long|20240331|1|true|[]|[]",
+      "int|long|20240331|1|true|[]|[]",
+      "str|long|20240331|1|true|[]|[]",
+      "date|long|20240331|1|true|[]|[]",
+      "bool|long|20240331|1|true|[]|[]",
+      "schedules|meta|20240331|1|true|[]|[]",
+      "por|por|20240331|1|true|[]|[FFIEC CDR Call Bulk POR 03312024.txt]"))
+    assert(written == tables.sorted)
+    val d = "2024-03-31"
+    def long(t: String) = s"struct<IDRSSD:int,date:date,item:string,value:$t>"
+    assert(rows == Seq(
+      Seq("struct<IDRSSD:int,RCFD0010:double,RCFD0020:double,RCON3838:double,date:date>",
+        s"37|100.5|7.5|0.28|$d", s"38|200.0|null|null|$d",
+        s"39|null|9.0|0.03|$d"),
+      Seq("struct<IDRSSD:int,RCFDB999:boolean,RCON9999:date,TEXTB:string,date:date>",
+        s"37|true|$d|first|$d", s"39|false|null|third|$d"),
+      Seq("struct<IDRSSD:int,RIAD4340:int,date:date>", s"37|42|$d", s"38|null|$d"),
+      Seq(long("double"), s"37|$d|RCFD0010|100.5", s"37|$d|RCFD0020|7.5",
+        s"37|$d|RCON3838|0.28", s"38|$d|RCFD0010|200.0",
+        s"39|$d|RCFD0020|9.0", s"39|$d|RCON3838|0.03"),
+      Seq(long("int"), s"37|$d|RIAD4340|42"),
+      Seq(long("string"), s"37|$d|TEXTB|first", s"39|$d|TEXTB|third"),
+      Seq(long("date"), s"37|$d|RCON9999|$d"),
+      Seq(long("boolean"), s"37|$d|RCFDB999|true", s"39|$d|RCFDB999|false"),
+      Seq("struct<item:string,schedules:array<string>,date:date>",
+        s"RCFD0010|[rc]|$d", s"RCFD0020|[rc]|$d", s"RCFDB999|[rcb]|$d",
+        s"RCON3838|[rc]|$d", s"RCON9999|[rcb]|$d", s"RIAD4340|[ri]|$d",
+        s"TEXTB|[rcb]|$d"),
+      Seq("struct<IDRSSD:int,financial_institution_name:string," +
+          "fdic_certificate_number:string,date:date>",
+        s"37|First Bank|null|$d", s"38|Second Bank|1234|$d")))
+  }
+
+  test("strict pct failure settles every sibling write before it throws") {
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_raw10").toFile
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq10").toFile
+    val zip = threeScheduleZip(dir, rcRate = "3")
+    val e = intercept[IllegalStateException] {
+      FfiecPipeline.processZip(spark, zip, outDir.getAbsolutePath,
+        threeScheduleMap, strict = true)
+    }
+    assert(e.getMessage.contains("RCON3838"))
+    // no write is still in flight: no task attempt directory remains,
+    // and every table the failed phase started has committed
+    val files = allFiles(outDir)
+    assert(!files.exists(_.getName == "_temporary"), files.mkString("\n"))
+    val tables = outDir.listFiles().toSeq
+    assert(tables.map(_.getName).sorted == Seq("ffiec_rc_20240331.parquet",
+      "ffiec_rcb_20240331.parquet", "ffiec_ri_20240331.parquet",
+      "por_20240331.parquet"))
+    assert(tables.forall(t => new File(t, "_SUCCESS").exists()))
+  }
+
+  test("processZip job budget: no per-dtype schema reads of the wide tables; " +
+    "every phase job labelled") {
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_raw11").toFile
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq11").toFile
+    val zip = threeScheduleZip(dir)
+    val jobs = jobsOf(FfiecPipeline.processZip(spark, zip,
+      outDir.getAbsolutePath, threeScheduleMap))
+    info(s"processZip launched ${jobs.size} jobs")
+    // 39 jobs for 3 schedules + POR; reading each wide table per dtype
+    // and again for its columns launched 18 more
+    assert(jobs.size <= 39, s"${jobs.size} jobs > budget 39")
+    // only the member listing runs outside the phases
+    val label = "ffiec 20240331 ([a-z]+ (wide|long|meta)|por)".r
+    assert(jobs.count(_.isEmpty) == 1, jobs.mkString("\n"))
+    assert(jobs.filter(_.nonEmpty).forall(label.matches), jobs.mkString("\n"))
+    assert(jobs.toSet.contains("ffiec 20240331 rcb wide") &&
+      jobs.toSet.contains("ffiec 20240331 float long") &&
+      jobs.toSet.contains("ffiec 20240331 schedules meta"))
+    // the caller's thread keeps no description
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
   }
 }
