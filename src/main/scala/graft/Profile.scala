@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import scala.collection.mutable
 
 /** Optimization-round instrumentation (guide §1): run the named gate
@@ -37,31 +37,10 @@ object Profile {
         } catch { case _: Throwable => }
       }
 
-    case class Job(id: Int, desc: String, start: Long, var end: Long = -1,
-                   var stages: Int = 0, var tasks: Int = 0)
-    val jobs = mutable.LinkedHashMap.empty[Int, Job]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs(e.jobId) = Job(e.jobId, desc, e.time)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-        jobs.get(e.jobId).foreach(_.end = e.time)
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
-        val sid = e.stageInfo.stageId
-        // attribute to the most recent unfinished job (approximation)
-        jobs.values.lastOption.foreach { j =>
-          j.stages += 1; j.tasks += e.stageInfo.numTasks
-        }
-      }
-    }
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => prefixes.isEmpty || prefixes.exists(n.startsWith))
     names.foreach { name =>
-      jobs.clear()
+      val listener = new Profile.JobListener
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).count()
@@ -70,7 +49,7 @@ object Profile {
       Thread.sleep(200) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
       graft.plans.Blocks.releaseAll(spark)
-      val done = jobs.values.toSeq.filter(_.end > 0)
+      val done = listener.jobs.filter(_.end > 0)
       val jobSec = done.map(j => (j.end - j.start) / 1e3).sum
       println(f"== $name wall=$wall%.3f s, jobs=${done.size}, " +
         f"job-time=$jobSec%.3f s, gap=${wall - jobSec}%.3f s")
@@ -80,5 +59,36 @@ object Profile {
       }
     }
     spark.stop()
+  }
+
+  final case class Job(id: Int, desc: String, start: Long, var end: Long = -1,
+                       var stages: Int = 0, var tasks: Int = 0)
+
+  /** Per-job wall, stage and task counts. Stages map to jobs exactly
+    * through `SparkListenerJobStart.stageInfos` (the first job that
+    * lists a stage owns it), so jobs that overlap in time — submitted
+    * from a driver pool or from two threads — keep their own stages. */
+  final class JobListener extends SparkListener {
+    private val byId = mutable.LinkedHashMap.empty[Int, Job]
+    private val stageOwner = mutable.HashMap.empty[Int, Int]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val desc = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse("")
+      byId(e.jobId) = Job(e.jobId, desc, e.time)
+      e.stageInfos.foreach(s => stageOwner.getOrElseUpdate(s.stageId, e.jobId))
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      byId.get(e.jobId).foreach(_.end = e.time)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      stageOwner.get(e.stageInfo.stageId).flatMap(byId.get).foreach { j =>
+        j.stages += 1; j.tasks += e.stageInfo.numTasks
+      }
+    }
+
+    /** The jobs seen so far, in start order. */
+    def jobs: Seq[Job] = synchronized(byId.values.toList)
   }
 }

@@ -71,9 +71,13 @@ object KeyChecks {
       .where(col("n_na") > 0)
   }
 
-  /** True iff `cols` form a non-NULL primary key of `df`. */
+  /** True iff `cols` form a non-NULL primary key of `df`. One scan: a
+    * key group fails if it repeats or any key column is NULL. */
   def checkPkAndNonNull(df: DataFrame, cols: Seq[String]): Boolean =
-    nullCounts(df, cols).isEmpty && pkViolations(df, cols).isEmpty
+    df.groupBy(cols.map(col): _*)
+      .agg(count(lit(1)).as("_n"))
+      .where(col("_n") > 1 || cols.map(col(_).isNull).reduce(_ || _))
+      .isEmpty
 
   /** Throw if duplicates exist on the key (the reference's hard gate
     * before writing long parquet). */

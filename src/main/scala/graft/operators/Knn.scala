@@ -738,14 +738,10 @@ object Knn {
           .localCheckpoint(true)
         val keptCells = survivors.select(col("cell").cast("long"))
           .distinct().collect().map(_.getLong(0)).toSet
-        val key = "spark.sql.sources.partitionOverwriteMode"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, "dynamic")
-        try survivors.repartition(col("cell"))
+        survivors.repartition(col("cell"))
           .sortWithinPartitions("cell", "id")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(cellsPath)
-        finally spark.conf.set(key, prev)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("cell").parquet(cellsPath)
         graft.plans.Blocks.free(survivors)
         val gone = rewriteSet.filterNot(keptCells)
         gone.foreach(c => fs.delete(
@@ -1404,22 +1400,6 @@ object Knn {
       delIds)
   }
 
-  /** Pin partitionOverwriteMode to STATIC for the store-table
-    * overwrites (round-12 advice): under a session-level `dynamic`
-    * mode (which appendGraphIndex itself toggles and restores), an
-    * overwrite only replaces the partitions PRESENT in the frame — a
-    * (layer, bucket) partition whose rows were all tombstoned would
-    * keep its old files and resurrect deleted nodes after compaction,
-    * and a rebuild at an existing path would keep stale partitions.
-    * Static mode replaces the whole table, which is what "overwrite
-    * the store" means. */
-  private def withStaticOverwrite[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "static")
-    try f finally spark.conf.set(key, prev)
-  }
-
   /** Build a PERSISTED kNN-graph (NSW / HNSW) index — the
     * build-once/probe-many store the graph ANN member was missing
     * (every other family — IVF/PQ/RQ/SQ8, inverted, trigram, Minhash —
@@ -1507,7 +1487,16 @@ object Knn {
       else math.min(layers,
         canon.agg(max(levelOf(col("id"), layers, portableHash)))
           .head().getInt(0))
-    withStaticOverwrite(spark) {
+    // The partitioned store tables overwrite with a per-write STATIC
+    // partitionOverwriteMode (round-12 advice): under a session-level
+    // `dynamic` mode an overwrite only replaces the partitions PRESENT
+    // in the frame — a (layer, bucket) partition whose rows were all
+    // tombstoned would keep its old files and resurrect deleted nodes
+    // after compaction, and a rebuild at an existing path would keep
+    // stale partitions. Static replaces the whole table, which is what
+    // "overwrite the store" means; the option leaves the session
+    // config alone, so no concurrent call observes a flip.
+    //
     // ONE unioned write per store table instead of one write per layer
     // (round 15, guide §2.6/§1.2): the per-layer kNN builds are
     // independent subtrees, so unioning them under a single write job
@@ -1540,7 +1529,7 @@ object Knn {
             .withColumn("bucket",
               pmod(col("src"), lit(buckets.toLong)).cast("int"))
         }.reduce(_ unionByName _)
-        .write.mode("overwrite")
+        .write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy("layer", "bucket").parquet(s"$path/edges"),
       () => Seq((k, buckets, topEff, portableHash, alphaMicro, kCandEff))
         .toDF("k", "buckets", "layers", "portable", "alphamicro", "kcand")
@@ -1555,7 +1544,8 @@ object Knn {
           transform(col("vec"), _.cast("double")).as("vec") +:
           keep.map(col): _*)
         .withColumn("bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/nodes")))
+        .write.mode("overwrite").option("partitionOverwriteMode", "static")
+        .partitionBy("bucket").parquet(s"$path/nodes")))
     val cents = spark.read.parquet(s"$path/centroids")
     val writtenNodes = spark.read.parquet(s"$path/nodes") // read-back once
     val allEntries = (0 to topEff).map { l =>
@@ -1569,7 +1559,6 @@ object Knn {
           col("m.vec").as("nvec"))
     }.reduce(_ unionByName _)
     allEntries.write.mode("overwrite").parquet(s"$path/entries")
-    }
   }
 
   /** NSW INSERT maintenance for a persisted graph index (round-9
@@ -1785,13 +1774,8 @@ object Knn {
     }
     if (mergedPerLayer.nonEmpty) {
       val allMerged = mergedPerLayer.reduce(_ unionByName _)
-      val prevMode =
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try allMerged.write.mode("overwrite").partitionBy("layer", "bucket")
-        .parquet(s"$path/edges")
-      finally spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-        prevMode)
+      allMerged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("layer", "bucket").parquet(s"$path/edges")
       mergedPerLayer.foreach(graft.plans.Blocks.free)
     }
     val cents = spark.read.parquet(s"$path/centroids")
@@ -1875,14 +1859,14 @@ object Knn {
         val row = nodes2.agg(max(levelOf(col("id"), layers, portable))).head()
         if (row.isNullAt(0)) 0 else math.min(layers, row.getInt(0))
       }
-    withStaticOverwrite(spark) {
+    // static overwrites: see writeGraphIndex.
     // repartition by the partition key → one file per directory:
     // compaction coalesces the per-append file accretion (round 15 —
     // [[maintainGraphStore]]'s files-per-bucket trigger relies on
     // this resetting the count)
     nodes2.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/nodes")
+      .write.mode("overwrite").option("partitionOverwriteMode", "static")
+      .partitionBy("bucket").parquet(s"$path/nodes")
     // codes sidecar follows the survivors (round 13): re-project the
     // compacted node table through the stored books so the ADC walk's
     // staleness guard holds post-compaction.
@@ -1891,12 +1875,12 @@ object Knn {
           pmod(col("id"), lit(buckets.toLong)).cast("int").as("bucket"),
           Pq.codesColumn(col("vec"), books).as("codes"))
         .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/codes")
+        .write.mode("overwrite").option("partitionOverwriteMode", "static")
+        .partitionBy("bucket").parquet(s"$path/codes")
     }
     edges2.repartition(col("layer"), col("bucket"))
-      .write.mode("overwrite").partitionBy("layer", "bucket")
-      .parquet(s"$path/edges")
+      .write.mode("overwrite").option("partitionOverwriteMode", "static")
+      .partitionBy("layer", "bucket").parquet(s"$path/edges")
     graft.plans.Blocks.free(edges2)
     val cents = spark.read.parquet(s"$path/centroids")
     val survivors = nodes2.select(col("id"), col("vec"))
@@ -1918,7 +1902,6 @@ object Knn {
       .write.mode("overwrite").parquet(s"$path/meta")
     Seq.empty[Long].toDF("id")
       .write.mode("overwrite").parquet(s"$path/deletes")
-    }
   }
 
   /** Maintenance dashboard for a persisted GRAPH store (round 15, r14
@@ -2010,16 +1993,15 @@ object Knn {
                       books: Array[Array[Array[Double]]]): Unit = {
     import spark.implicits._
     val nodes = spark.read.parquet(s"$path/nodes")
-    withStaticOverwrite(spark) {
-      (for (s <- books.indices; c <- books(s).indices)
-        yield (s, c, books(s)(c).toSeq))
-        .toDF("s", "c", "cw")
-        .write.mode("overwrite").parquet(s"$path/codes_books")
-      nodes.select(col("id"), col("bucket"),
-        Pq.codesColumn(col("vec"), books).as("codes"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/codes")
-    }
+    (for (s <- books.indices; c <- books(s).indices)
+      yield (s, c, books(s)(c).toSeq))
+      .toDF("s", "c", "cw")
+      .write.mode("overwrite").parquet(s"$path/codes_books")
+    // static overwrite: see writeGraphIndex
+    nodes.select(col("id"), col("bucket"),
+      Pq.codesColumn(col("vec"), books).as("codes"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "static")
+      .partitionBy("bucket").parquet(s"$path/codes")
   }
 
   /** The [[writeGraphCodes]] books, read back from the store — the

@@ -77,9 +77,10 @@ object Layout {
     * manifest ([[packBySize]]), then rewrite each bin as ONE output
     * file (coalesce(1) append — no shuffle; each task streams its
     * bin's files). Returns the bin manifest (bin, n_files, bytes).
-    * Bins are written sequentially here; at fleet scale wrap the bin
-    * loop in the bounded thread pool FfiecPipeline.processAll uses —
-    * Spark schedules concurrent jobs fine. */
+    * Bins are written sequentially here; at fleet scale run the bins
+    * through [[graft.plans.DriverPool.awaitAll]], as
+    * FfiecPipeline.processAll runs its writes — Spark schedules
+    * concurrent jobs fine. */
   def compact(spark: org.apache.spark.sql.SparkSession, inDir: String,
               outDir: String, targetBytes: Long): DataFrame = {
     import org.apache.hadoop.fs.Path

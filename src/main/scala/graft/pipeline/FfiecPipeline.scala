@@ -1,13 +1,16 @@
 package graft.pipeline
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Ffiec
-import graft.operators.{CombineParts, KeyChecks, LongPivot}
+import graft.operators.{CombineParts, LongPivot}
 import graft.plans.DriverPool
 import graft.schema.FfiecSchema
 import graft.sources.ZipTsv
@@ -19,16 +22,18 @@ import graft.sources.ZipTsv
   * per written file.
   *
   * Scale shape: each (schedule, date) group reads its members in
-  * parallel tasks (one task per member). Within a zip, processZip runs
-  * two phases of independent writes, each submitted together from a
-  * driver pool bounded by the session's defaultParallelism: phase 1
-  * writes every wide schedule table and every POR table; phase 2 writes
-  * every (date, dtype) long table (a per-schedule unpivot + union +
-  * distinct, one shuffle each) and every date's schedules metadata.
-  * The many small jobs of a zip thus share the cores
-  * instead of queueing behind each other's dispatch. Fleet-level
-  * parallelism comes from processing many zips at once (processAll's
-  * `concurrency`) — the reference's furrr::future_map_dfr.
+  * parallel tasks (one task per member). Every zip of a call (one for
+  * processZip, the whole directory for processAll, one micro-batch for
+  * processStream) shares ONE pair of phases of independent writes, each
+  * phase submitted together from a driver pool bounded by the session's
+  * defaultParallelism: phase 1 writes every zip's wide schedule tables
+  * and POR tables; phase 2 writes every (date, dtype) long table (a
+  * per-schedule unpivot + union + distinct with the key check in the
+  * same job, one shuffle each) and every date's schedules metadata.
+  * The many small jobs of a fleet thus share the cores instead of
+  * queueing behind each other's dispatch, with the driver's thread
+  * count fixed whatever the zip count — the reference's
+  * furrr::future_map_dfr.
   */
 object FfiecPipeline {
 
@@ -141,19 +146,94 @@ object FfiecPipeline {
     * ([[graft.plans.DriverPool.awaitAll]]): phase 1 writes every wide
     * schedule table and every POR table; phase 2 writes every
     * (date, dtype) long table and every date's schedules metadata from
-    * the phase-1 tables. Manifest rows keep the order schedules, long,
-    * meta, POR. Under `strict`, a pct_to_prop failure is raised once
-    * every phase-1 sibling has settled. */
+    * the phase-1 tables. A long table whose (IDRSSD, date, item) key is
+    * not unique is removed and raises IllegalArgumentException once
+    * every phase-2 sibling has settled. Manifest rows keep the order
+    * schedules, long, meta, POR. Under `strict`, a pct_to_prop failure
+    * is raised once every phase-1 sibling has settled. */
   def processZip(spark: SparkSession, zipPath: String, outDir: String,
                  schemaMap: Map[String, String] = FfiecSchema.defaultSchemaMap,
                  overrides: Map[String, String] = FfiecSchema.defaultColOverrides,
                  prefix: String = "ffiec_", strict: Boolean = false): DataFrame = {
     import spark.implicits._
+    processZips(spark, Seq(zipPath -> ""), outDir, schemaMap, overrides, prefix,
+      strict, tolerant = false).toDF()
+  }
+
+  /** Every zip of one call through ONE pair of phases: the plans of all
+    * zips (member listing, multipart validation) settle first, then
+    * phase 1 of all zips runs in one driver-pool call and phase 2 of all
+    * zips in another, so small jobs of different zips share the cores
+    * and the driver holds at most `defaultParallelism` pool threads
+    * whatever the zip count. The zips write concurrently, so their
+    * dates must be distinct.
+    *
+    * Not `tolerant`: the first failure in zip order is rethrown once
+    * its phase has settled; a failed plan writes nothing. `tolerant`: a
+    * zip whose plan or any write fails becomes one `error` row (ok =
+    * false) and skips its later phases; the other zips go on. Rows keep
+    * zip order. */
+  private def processZips(spark: SparkSession, zips: Seq[(String, String)],
+                          outDir: String, schemaMap: Map[String, String],
+                          overrides: Map[String, String], prefix: String,
+                          strict: Boolean, tolerant: Boolean): Seq[Written] = {
+    requireDistinctDates(zips)
+    /** Run the thunks of every zip still standing in one driver-pool
+      * call; a zip fails with its first failed thunk. */
+    def phase[A, B](in: Seq[Try[A]])(work: A => Seq[() => B]): Seq[Try[(A, Seq[B])]] = {
+      val planned = in.map(_.map(a => a -> work(a)))
+      val settled = DriverPool.awaitAll(spark,
+        planned.flatMap(_.toOption.toSeq.flatMap(_._2)).map(w => () => Try(w())))
+      val starts = planned.map(_.fold(_ => 0, _._2.size)).scanLeft(0)(_ + _)
+      val out = planned.zip(starts).map { case (p, from) =>
+        p.flatMap { case (a, ws) =>
+          Try(a -> settled.slice(from, from + ws.size).map(_.get)) }
+      }
+      if (!tolerant) out.foreach(_.get)
+      out
+    }
+    val plans = DriverPool.awaitAll(spark, zips.map { case (zip, _) => () =>
+      Try(planZip(spark, zip, outDir, schemaMap, overrides, prefix, strict)) })
+    if (!tolerant) plans.foreach(_.get)
+    val phase1 = phase(plans)(_.phase1)
+    val phase2 = phase(phase1) { case (plan, rows) => plan.phase2(rows.flatMap(_._2)) }
+    zips.zip(phase2).flatMap {
+      case (_, Success(((plan, rows1), rows2))) =>
+        val (sched, por) = rows1.map(_._1).splitAt(plan.nSchedules)
+        sched ++ rows2.flatten ++ por
+      case ((zip, dateRaw), Failure(e)) =>
+        Seq(Written("error", "zip", dateRaw, "", 0, ok = false,
+          repairs = Seq(s"error: ${e.getMessage}"), innerFiles = Seq(zip)))
+    }
+  }
+
+  private def requireDistinctDates(zips: Seq[(String, String)]): Unit = {
+    val dates = zips.map(_._2)
+    require(dates.distinct.size == dates.size,
+      s"zips of one call must have distinct dates: ${dates.mkString(", ")}")
+  }
+
+  /** One zip's work: the phase-1 writes (the first `nSchedules` are the
+    * wide schedule tables, the rest POR), and, from the wide tables
+    * phase 1 wrote, the phase-2 writes. */
+  private case class ZipPlan(phase1: Seq[() => (Written, Option[Wide])],
+                             nSchedules: Int,
+                             phase2: Seq[Wide] => Seq[() => Option[Written]])
+
+  /** A phase-1 wide table: its date, path and the schema written. */
+  private case class Wide(dateRaw: String, path: String, schema: StructType)
+
+  /** List a zip's members and validate every multipart group; no write
+    * runs until the plan's thunks are called. */
+  private def planZip(spark: SparkSession, zipPath: String, outDir: String,
+                      schemaMap: Map[String, String],
+                      overrides: Map[String, String], prefix: String,
+                      strict: Boolean): ZipPlan = {
+    import spark.implicits._
     val resolved =
       if (schemaMap.nonEmpty) schemaMap else resolveSchemaMap(spark, zipPath)
     val members = ZipTsv.listMembers(spark, zipPath)
 
-    // ---- validate every multipart group before any job starts
     val schedGroups = members.filter(_.schedule.isDefined)
       .groupBy(m => (m.schedule.get.toLowerCase, m.dateRaw.getOrElse("unknown")))
       .toSeq.sortBy(_._1)
@@ -174,7 +254,7 @@ object FfiecPipeline {
       val rawParts = ZipTsv.readSchedule(spark, zipPath, sorted.map(_.file),
         resolved, overrides)
       val observations = rawParts.indices.map(i =>
-        org.apache.spark.sql.Observation(s"diag_${schedule}_${dateRaw}_$i"))
+        Observation(s"diag_${schedule}_${dateRaw}_$i"))
       val parts = rawParts.zip(observations).map { case (p, o) =>
         p.observe(o,
           sum(col("_problems")).as("problems"),
@@ -198,7 +278,7 @@ object FfiecPipeline {
         .map(_.name).toSeq
       val pureObs =
         if (pureStr.isEmpty) None
-        else Some(org.apache.spark.sql.Observation(s"pure_${schedule}_$dateRaw"))
+        else Some(Observation(s"pure_${schedule}_$dateRaw"))
       val observed = pureObs.fold(combined) { o =>
         val aggs = pureStr.flatMap { c =>
           Seq(max(col(c).contains("%").cast("long")).as(s"haspct_$c"),
@@ -210,22 +290,18 @@ object FfiecPipeline {
       val fixed = fixPurePercentCols(observed, resolved)
       val out = s"$outDir/$prefix${schedule}_$dateRaw.parquet"
       fixed.write.mode("overwrite").parquet(out)
-      val metrics = observations.map(_.get)
-      def metric(m: Map[String, Any], k: String): Long =
-        Option(m.getOrElse(k, null)).map(_.asInstanceOf[Long]).getOrElse(0L)
       val badPure: Seq[String] = pureObs.toSeq.flatMap { o =>
-        val m = o.get
-        pureStr.filter(c => metric(m, s"haspct_$c") > 0 && metric(m, s"bad_$c") > 0)
+        pureStr.filter(c => metric(o, s"haspct_$c") > 0 && metric(o, s"bad_$c") > 0)
       }
       if (strict && badPure.nonEmpty)
         throw new IllegalStateException(
           s"pct_to_prop: numeric values not ending in '%' in pure columns " +
             s"${badPure.mkString(", ")} of $schedule ($dateRaw)")
       val repairs =
-        (if (metrics.exists(metric(_, "nl") > 0)) Seq("newline-join") else Nil) ++
-        (if (metrics.exists(metric(_, "tab") > 0)) Seq("tab-repair") else Nil) ++
+        (if (observations.exists(metric(_, "nl") > 0)) Seq("newline-join") else Nil) ++
+        (if (observations.exists(metric(_, "tab") > 0)) Seq("tab-repair") else Nil) ++
         badPure.map(c => s"pure-pct-bad: $c")
-      val ok = metrics.map(metric(_, "problems")).sum == 0 && badPure.isEmpty
+      val ok = observations.map(metric(_, "problems")).sum == 0 && badPure.isEmpty
       (Written(schedule, "schedule", dateRaw, out, nParts,
           ok = ok, repairs = repairs, innerFiles = sorted.map(_.file)),
         Some(Wide(dateRaw, out, fixed.schema)))
@@ -235,7 +311,7 @@ object FfiecPipeline {
     // recorded; ok stays true as in the reference (ffiec_process.R:442).
     def writePor(m: ZipTsv.Member, dateRaw: String): (Written, Option[Wide]) = {
       val out = s"$outDir/por_$dateRaw.parquet"
-      val obs = org.apache.spark.sql.Observation(s"diag_por_$dateRaw")
+      val obs = Observation(s"diag_por_$dateRaw")
       ZipTsv.readPor(spark, zipPath, m.file)
         .observe(obs,
           sum(when(array_contains(col("_repairs"), "tab-repair"), 1L)
@@ -243,80 +319,97 @@ object FfiecPipeline {
         .drop("_repairs", "_problems")
         .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
         .write.mode("overwrite").parquet(out)
-      val tab = Option(obs.get.getOrElse("tab", null))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
       (Written("por", "por", dateRaw, out, 1, ok = true,
-          repairs = if (tab > 0) Seq("tab-repair") else Nil,
+          repairs = if (metric(obs, "tab") > 0) Seq("tab-repair") else Nil,
           innerFiles = Seq(m.file)), None)
     }
 
-    val phase1 = DriverPool.awaitAll(spark,
+    val phase1 =
       schedGroups.map { case (s, d, ms, n) => () =>
         labelled(spark, s"ffiec $d $s wide")(writeWide(s, d, ms, n)) } ++
       porMembers.map { m => () =>
         val d = m.dateRaw.getOrElse("unknown")
-        labelled(spark, s"ffiec $d por")(writePor(m, d)) })
-    val (schedRows, porRows) = phase1.map(_._1).splitAt(schedGroups.size)
-    val wides = phase1.flatMap(_._2)
+        labelled(spark, s"ffiec $d por")(writePor(m, d)) }
 
     // ---- phase 2: long parquet per (date, arrow dtype) (ref:
     // make_long_pq) and item → schedules metadata per date (ref:
     // make_schedule_pq), all from the phase-1 tables. Each wide table
     // is read once with the schema phase 1 wrote, so no read pays a
     // schema-inference job.
-    val dtypes: Seq[(String, DataType)] = Seq(
-      "float" -> DoubleType, "int" -> IntegerType, "str" -> StringType,
-      "date" -> DateType, "bool" -> BooleanType)
-    val dateRaws = wides.map(_.dateRaw).distinct
-    val wideDfs = wides.map(w => w ->
-      spark.read.schema(StructType(w.schema.map(_.copy(nullable = true))))
-        .parquet(w.path))
+    def phase2(wides: Seq[Wide]): Seq[() => Option[Written]] = {
+      val dtypes: Seq[(String, DataType)] = Seq(
+        "float" -> DoubleType, "int" -> IntegerType, "str" -> StringType,
+        "date" -> DateType, "bool" -> BooleanType)
+      val dateRaws = wides.map(_.dateRaw).distinct
+      val wideDfs = wides.map(w => w ->
+        spark.read.schema(StructType(w.schema.map(_.copy(nullable = true))))
+          .parquet(w.path))
 
-    def writeLong(dateRaw: String, dname: String, dtype: DataType): Option[Written] = {
-      val longs = wideDfs.filter(_._1.dateRaw == dateRaw).flatMap { case (_, wide) =>
-        val cols = LongPivot.colsOfType(wide, dtype, Seq("IDRSSD", "date"))
-        if (cols.isEmpty) None
-        else Some(LongPivot.long(wide, Seq("IDRSSD", "date"), dtype, distinct = false))
+      // The key check (ref: assert_no_dups) rides the write, so the
+      // table is computed once. The exchange on (IDRSSD, date) serves
+      // both the distinct and the per-key count window, and an
+      // Observation reports rows that share a key; a table that breaks
+      // the key is removed before the error is raised.
+      def writeLong(dateRaw: String, dname: String, dtype: DataType): Option[Written] = {
+        val longs = wideDfs.filter(_._1.dateRaw == dateRaw).flatMap { case (_, wide) =>
+          val cols = LongPivot.colsOfType(wide, dtype, Seq("IDRSSD", "date"))
+          if (cols.isEmpty) None
+          else Some(LongPivot.long(wide, Seq("IDRSSD", "date"), dtype, distinct = false))
+        }
+        if (longs.isEmpty) None
+        else {
+          val out = s"$outDir/$prefix${dname}_$dateRaw.parquet"
+          val dups = Observation(s"dups_${dname}_$dateRaw")
+          longs.reduce(_.unionByName(_))
+            .repartition(col("IDRSSD"), col("date"))
+            .distinct()
+            .withColumn("_n", count(lit(1)).over(
+              Window.partitionBy(col("IDRSSD"), col("date"), col("item"))))
+            .observe(dups, sum(when(col("_n") > 1, 1L).otherwise(0L)).as("rows"))
+            .drop("_n")
+            .write.mode("overwrite").parquet(out)
+          val n = metric(dups, "rows")
+          if (n > 0) {
+            val p = new Path(out)
+            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+            throw new IllegalArgumentException(
+              s"Found $n rows sharing a key on {IDRSSD, date, item} in " +
+                s"$dname ($dateRaw); $out was removed")
+          }
+          Some(Written(dname, "long", dateRaw, out, 1, ok = true, Nil, Nil))
+        }
       }
-      if (longs.isEmpty) None
-      else {
-        val all = longs.reduce(_.unionByName(_)).distinct()
-        KeyChecks.assertNoDups(all, Seq("IDRSSD", "date", "item"))
-        val out = s"$outDir/$prefix${dname}_$dateRaw.parquet"
-        all.write.mode("overwrite").parquet(out)
-        Some(Written(dname, "long", dateRaw, out, 1, ok = true, Nil, Nil))
-      }
-    }
 
-    def writeMeta(dateRaw: String): Option[Written] = {
-      val pairs = wides.filter(_.dateRaw == dateRaw).flatMap { w =>
-        val schedule = graft.sources.Scan.extractSchedule(
-          w.path.split('/').last, prefix)
-        w.schema.fieldNames
-          .filterNot(c => c == "IDRSSD" || c == "date")
-          .map(item => (schedule, item))
+      def writeMeta(dateRaw: String): Option[Written] = {
+        val pairs = wides.filter(_.dateRaw == dateRaw).flatMap { w =>
+          val schedule = graft.sources.Scan.extractSchedule(
+            w.path.split('/').last, prefix)
+          w.schema.fieldNames
+            .filterNot(c => c == "IDRSSD" || c == "date")
+            .map(item => (schedule, item))
+        }
+        if (pairs.isEmpty) None
+        else {
+          val out = s"$outDir/${prefix}schedules_$dateRaw.parquet"
+          LongPivot.itemSchedules(pairs.toDF("schedule", "item"))
+            .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
+            .write.mode("overwrite").parquet(out)
+          Some(Written("schedules", "meta", dateRaw, out, 1, ok = true, Nil, Nil))
+        }
       }
-      if (pairs.isEmpty) None
-      else {
-        val out = s"$outDir/${prefix}schedules_$dateRaw.parquet"
-        LongPivot.itemSchedules(pairs.toDF("schedule", "item"))
-          .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
-          .write.mode("overwrite").parquet(out)
-        Some(Written("schedules", "meta", dateRaw, out, 1, ok = true, Nil, Nil))
-      }
-    }
 
-    val phase2 = DriverPool.awaitAll(spark,
       (for (d <- dateRaws; (dname, dtype) <- dtypes) yield () =>
         labelled(spark, s"ffiec $d $dname long")(writeLong(d, dname, dtype))) ++
       dateRaws.map(d => () =>
-        labelled(spark, s"ffiec $d schedules meta")(writeMeta(d))))
+        labelled(spark, s"ffiec $d schedules meta")(writeMeta(d)))
+    }
 
-    (schedRows ++ phase2.flatten ++ porRows).toDF()
+    ZipPlan(phase1, schedGroups.size, phase2)
   }
 
-  /** A phase-1 wide table: its date, path and the schema written. */
-  private case class Wide(dateRaw: String, path: String, schema: StructType)
+  /** An observed Long metric; 0 when the aggregate saw no rows. */
+  private def metric(o: Observation, k: String): Long =
+    Option(o.get.getOrElse(k, null)).map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** Run `body` with `label` as the calling thread's Spark job
     * description, restoring the previous one after — pool threads keep
@@ -347,38 +440,25 @@ object FfiecPipeline {
     }
   }
 
-  /** Run `one` over every zip, `concurrency` at a time — the
-    * Spark-native analogue of the reference's future/furrr multisession
-    * (concurrent driver threads submit independent Spark jobs that
-    * share the executor pool; the scheduler interleaves stages). This
-    * is the zip level; inside each zip, processZip's two phases
-    * overlap its own schedule, POR, long and metadata writes from a
-    * pool of up to `defaultParallelism` threads, so a run can hold
-    * `concurrency` × `defaultParallelism` driver threads. */
-  private def mapZips[A](zips: Seq[(String, String)], concurrency: Int)
-                        (one: (String, String) => A): Seq[A] =
-    if (concurrency <= 1) zips.map { case (zip, d) => one(zip, d) }
-    else {
-      import java.util.concurrent.Executors
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = Executors.newFixedThreadPool(concurrency)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(
-        Future.traverse(zips) { case (zip, d) => Future(one(zip, d)) },
-        Duration.Inf)
-      finally pool.shutdown()
-    }
-
   /** Process every bulk zip in a directory (the reference's
-    * ffiec_process); returns the concatenated manifest. When
+    * ffiec_process); returns the concatenated manifest. Every zip goes
+    * through one shared pair of phases (see processZip): phase 1 writes
+    * the wide and POR tables of all zips together, phase 2 the long and
+    * metadata tables of all zips — the Spark-native analogue of the
+    * reference's furrr::future_map_dfr, with concurrent driver threads
+    * submitting independent jobs that share the executor pool. When
     * `itemsPath`/`detailsPath` are supplied, the MDRM item metadata
     * tables are copied into the output tree too (the reference's
     * ffiec_create_item_pqs step — it ships them as package data; graft
-    * takes them as parquet inputs) and appear as manifest rows. */
+    * takes them as parquet inputs) and appear as manifest rows.
+    *
+    * `tolerant = true`: a structurally broken zip, or one whose write
+    * fails, becomes an ok=false manifest row instead of killing the
+    * fleet run at zip #847 of 1000. The default matches the reference
+    * (fail fast): a broken zip fails the call before any write starts. */
   def processAll(spark: SparkSession, rawDir: String, outDir: String,
                  schemaMap: Map[String, String] = FfiecSchema.defaultSchemaMap,
-                 concurrency: Int = 1, tolerant: Boolean = false,
+                 tolerant: Boolean = false,
                  strict: Boolean = false,
                  itemsPath: Option[String] = None,
                  detailsPath: Option[String] = None): DataFrame = {
@@ -394,34 +474,21 @@ object FfiecPipeline {
     }
     val zips = listZips(spark, rawDir)
     require(zips.nonEmpty, s"No FFIEC bulk zip files found in $rawDir")
-    // tolerant=true: a structurally broken zip becomes an ok=false
-    // manifest row instead of killing the fleet run at zip #847 of
-    // 1000. Default matches the reference (fail fast).
-    def one(zip: String, dateRaw: String): DataFrame =
-      if (!tolerant) processZip(spark, zip, outDir, schemaMap, strict = strict)
-      else
-        try processZip(spark, zip, outDir, schemaMap, strict = strict)
-        catch {
-          case e: Exception =>
-            Seq(Written("error", "zip", dateRaw, "", 0, ok = false,
-              repairs = Seq(s"error: ${e.getMessage}"),
-              innerFiles = Seq(zip))).toDF()
-        }
-    val manifests = mapZips(zips, concurrency)(one) ++
-      (if (itemRows.nonEmpty) Seq(itemRows.toDF()) else Nil)
-    val out = manifests.reduce(_.unionByName(_))
+    val out = (processZips(spark, zips, outDir, schemaMap,
+      FfiecSchema.defaultColOverrides, "ffiec_", strict, tolerant) ++ itemRows).toDF()
     out.write.mode("overwrite")
       .parquet(s"$outDir/ffiec_process_data.parquet")
     out
   }
 
   /** Continuous ingestion: watch `rawDir` for new FFIEC bulk zips and
-    * run processZip on each exactly once (the file-source checkpoint
-    * tracks processed files across restarts). Each micro-batch appends
-    * its manifest rows to `outDir`/ffiec_process_stream_log.parquet.
+    * process each exactly once (the file-source checkpoint tracks
+    * processed files across restarts). Each micro-batch runs its zips
+    * through one shared pair of phases, tolerantly, and appends their
+    * manifest rows to `outDir`/ffiec_process_stream_log.parquet.
     *
     * The stream carries only file PATHS (binaryFile source with the
-    * content column pruned away — zips are re-opened inside processZip's
+    * content column pruned away — zips are re-opened inside the
     * distributed member tasks), so the streaming layer moves metadata,
     * not the 100 TB. New quarters land as they are published; a broken
     * zip becomes an ok=false manifest row and the stream keeps going. */
@@ -452,17 +519,10 @@ object FfiecPipeline {
               case _ => None
             }
           }.sortBy(_._2)
-        val manifests = zips.map { case (zip, dateRaw) =>
-          try processZip(spark, zip, outDir, schemaMap)
-          catch {
-            case e: Exception =>
-              Seq(Written("error", "zip", dateRaw, "", 0, ok = false,
-                repairs = Seq(s"error: ${e.getMessage}"),
-                innerFiles = Seq(zip))).toDF()
-          }
-        }
-        if (manifests.nonEmpty)
-          manifests.reduce(_.unionByName(_)).write.mode("append")
+        val rows = processZips(spark, zips, outDir, schemaMap,
+          FfiecSchema.defaultColOverrides, "ffiec_", strict = false, tolerant = true)
+        if (rows.nonEmpty)
+          rows.toDF().write.mode("append")
             .parquet(s"$outDir/ffiec_process_stream_log.parquet")
       }
       .start()
@@ -482,12 +542,15 @@ object FfiecPipeline {
     *
     * Scale shape: each zip is one Spark job whose unit of work is an
     * inner *.xbrl.xml member (XbrlZip.facts — one StAX parse per task),
-    * so a bulk zip with 5k filings fans out across the cluster;
-    * `concurrency` overlaps whole zips on top of that. The fact count
-    * rides the write job as an Observation — no second pass. */
+    * so a bulk zip with 5k filings fans out across the cluster. The
+    * zips' writes run together from one driver pool
+    * ([[graft.plans.DriverPool.awaitAll]]), so their dates must be
+    * distinct; without `tolerant`, the first failure in zip order is
+    * rethrown once every zip has settled. The fact count rides the
+    * write job as an Observation — no second pass. */
   def processXbrls(spark: SparkSession, rawDir: String, outDir: String,
                    zipfiles: Seq[String] = Nil, nsPrefix: String = "cc",
-                   prefix: String = "ffiec_", concurrency: Int = 1,
+                   prefix: String = "ffiec_",
                    tolerant: Boolean = false): DataFrame = {
     import spark.implicits._
     val dateRe = """(\d{8})""".r
@@ -500,23 +563,23 @@ object FfiecPipeline {
       }
       else listZips(spark, rawDir, kind = "xbrl")
     require(zips.nonEmpty, s"No FFIEC XBRL zip files found in $rawDir")
+    requireDistinctDates(zips)
 
     def one(zip: String, dateRaw: String): XbrlWritten =
       try {
         val out = s"$outDir/${prefix}xbrl_$dateRaw.parquet"
-        val obs = org.apache.spark.sql.Observation(s"xbrl_$dateRaw")
+        val obs = Observation(s"xbrl_$dateRaw")
         graft.sources.XbrlZip.facts(spark, zip, nsPrefix)
           .observe(obs, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(out)
-        val n = Option(obs.get.getOrElse("n", null))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        XbrlWritten(zip, dateRaw, out, n, ok = true)
+        XbrlWritten(zip, dateRaw, out, metric(obs, "n"), ok = true)
       } catch {
         case e: Exception if tolerant =>
           XbrlWritten(zip, dateRaw, s"error: ${e.getMessage}", 0L, ok = false)
       }
 
-    val manifest = mapZips(zips, concurrency)(one).toDF()
+    val manifest = DriverPool.awaitAll(spark,
+      zips.map { case (zip, d) => () => one(zip, d) }).toDF()
     manifest.write.mode("overwrite")
       .parquet(s"$outDir/ffiec_process_xbrls_data.parquet")
     manifest

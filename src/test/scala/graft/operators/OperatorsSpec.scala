@@ -76,6 +76,26 @@ class KeyChecksSpec extends SparkSpec {
     }
   }
 
+  test("checkPkAndNonNull: NULL keys and duplicates each fail on their own") {
+    val s = spark
+    import s.implicits._
+    val df = Seq[(Option[Int], Option[String])](
+      (Some(1), Some("a")), (Some(2), Some("a")), (Some(3), Some("b"))).toDF("k", "v")
+    assert(KeyChecks.checkPkAndNonNull(df, Seq("k")))
+    assert(KeyChecks.checkPkAndNonNull(df, Seq("k", "v")))
+    // a NULL key, no duplicates
+    val nullKey = df.union(Seq[(Option[Int], Option[String])]((None, Some("c"))).toDF())
+    assert(!KeyChecks.checkPkAndNonNull(nullKey, Seq("k")))
+    // a duplicate, no NULLs
+    assert(!KeyChecks.checkPkAndNonNull(df, Seq("v")))
+    // a NULL in the second key column only
+    val nullSecond = df.union(Seq[(Option[Int], Option[String])]((Some(4), None)).toDF())
+    assert(KeyChecks.checkPkAndNonNull(nullSecond, Seq("k")))
+    assert(!KeyChecks.checkPkAndNonNull(nullSecond, Seq("k", "v")))
+    // an empty frame is a key
+    assert(KeyChecks.checkPkAndNonNull(df.where(lit(false)), Seq("k", "v")))
+  }
+
   test("keySkew surfaces a planted hot key with its exact share") {
     val s = spark
     import s.implicits._
@@ -2252,6 +2272,58 @@ class KnnSpec extends SparkSpec {
       .where(col("id") === 5000L).count() == 1)
     Knn.compactGraphStore(spark, dir)
     assert(spark.read.parquet(s"$dir/meta").head().getAs[Int]("layers") == 0)
+  }
+
+  test("store compactions set their overwrite mode per write: the session " +
+    "value never changes and no tombstoned partition comes back") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(41)
+    def point(center: Int): Array[Float] = {
+      val base = Array.fill(8)(0.5f * rnd.nextGaussian().toFloat)
+      base(center) += 5.0f
+      base
+    }
+    val graph = (0L until 40L).map(i => (i, point((i % 3).toInt)))
+      .toDF("vec_id", "embedding")
+    val ivf = Seq((1L, Array(1.0f, 0f, 0f, 0f)), (2L, Array(0.999f, 0.045f, 0f, 0f)),
+      (3L, Array(0f, 0f, 1.0f, 0f)), (4L, Array(0f, 0f, 0.98f, 0.2f)))
+      .toDF("vec_id", "embedding")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(key)
+    try for (mode <- Seq("dynamic", "static")) {
+      spark.conf.set(key, mode)
+      val gdir = java.nio.file.Files.createTempDirectory("graph_mode").toString
+      Knn.writeGraphIndex(graph, "vec_id", "embedding", gdir,
+        k = 6, c = 8, nprobe = 2, buckets = 4)
+      // bucket 3 loses every node
+      Knn.deleteFromGraphIndex(
+        graph.where(col("vec_id") % 4 === 3).select("vec_id"), "vec_id", gdir)
+      Knn.compactGraphStore(spark, gdir)
+      assert(spark.conf.get(key) == mode)
+      assert(spark.read.parquet(s"$gdir/nodes").where(col("id") % 4 === 3).count() == 0,
+        s"$mode session: deleted bucket resurrected")
+      assert(spark.read.parquet(s"$gdir/edges")
+        .where(col("src") % 4 === 3 || col("dst") % 4 === 3).count() == 0)
+      val idir = java.nio.file.Files.createTempDirectory("ivf_mode").toString
+      Knn.writeIvfIndex(ivf, "vec_id", "embedding", idir, c = 2, portableHash = true)
+      val cellOf = spark.read.parquet(s"$idir/cells")
+        .select(col("id"), col("cell").cast("long"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(cellOf(1L) != cellOf(3L), s"want 1 and 3 in two cells: $cellOf")
+      // first only 1's cell is rewritten (3's cell must stay), then 3's
+      // cell is emptied (it must not come back)
+      val deadSets = Seq(Seq(1L), cellOf.filter(_._2 == cellOf(3L)).keys.toSeq)
+      deadSets.scanLeft(Set.empty[Long])(_ ++ _).tail.zip(deadSets).foreach {
+        case (dead, batch) =>
+          Knn.deleteFromIvfIndex(batch.toDF("vec_id"), "vec_id", idir)
+          Knn.compactIvfStore(spark, idir)
+          assert(spark.conf.get(key) == mode)
+          val survivors = spark.read.parquet(s"$idir/cells")
+            .select("id").collect().map(_.getLong(0)).toSet
+          assert(survivors == Set(1L, 2L, 3L, 4L) -- dead, s"$mode session: $survivors")
+      }
+    } finally spark.conf.set(key, prev)
   }
 
   test("SQ8: codes stay in [0,255], dequant error <= scale/2, recall near brute force") {

@@ -63,27 +63,33 @@ class FfiecPipelineSpec extends SparkSpec {
     t.schema.simpleString +: t.collect().map(render).toSeq.sorted
   }
 
-  /** The descriptions of the jobs `body` launches ("" when unset),
-    * collected by a SparkListener on a job group the calling thread
-    * sets (driver-pool threads inherit it). A fence job in a second
-    * group marks when every earlier event was delivered. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** A job `body` launched: its description ("" when unset) and its
+    * start and end times in listener-event milliseconds. */
+  private case class JobSpan(desc: String, start: Long, end: Long)
+
+  /** The jobs `body` launches, in start order, collected by a
+    * SparkListener on a job group the calling thread sets (driver-pool
+    * threads inherit it). A fence job in a second group marks when
+    * every earlier event was delivered. */
+  private def jobSpansOf(body: => Unit): Seq[JobSpan] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"job-budget-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, JobSpan]()
     val fence = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
         props.map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.add(
+          case Some(`group`) => jobs.put(e.jobId, JobSpan(
             props.flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse(""))
+              .getOrElse(""), e.time, -1L))
           case Some(g) if g == s"$group-fence" => fence.countDown()
           case _ =>
         }
       }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.computeIfPresent(e.jobId, (_, j) => j.copy(end = e.time))
     }
     sc.addSparkListener(listener)
     try {
@@ -93,8 +99,11 @@ class FfiecPipelineSpec extends SparkSpec {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally sc.removeSparkListener(listener)
-    jobs.toArray(Array.empty[String]).toSeq
+    jobs.values.toArray(Array.empty[JobSpan]).toSeq
   }
+
+  /** The descriptions of the jobs `body` launches ("" when unset). */
+  private def jobsOf(body: => Unit): Seq[String] = jobSpansOf(body).map(_.desc)
 
   private def allFiles(f: File): Seq[File] =
     Option(f.listFiles()).toSeq.flatten.flatMap(c => c +: allFiles(c))
@@ -205,7 +214,7 @@ class FfiecPipelineSpec extends SparkSpec {
         "confidentiality", "description", "seriesglossary", "itemtype")
       .write.parquet(s"$itemsDir/details.parquet")
     val manifest = FfiecPipeline.processAll(spark, dir.getAbsolutePath,
-      outDir.getAbsolutePath, schemaMap, concurrency = 2,
+      outDir.getAbsolutePath, schemaMap,
       itemsPath = Some(s"$itemsDir/items.parquet"),
       detailsPath = Some(s"$itemsDir/details.parquet"))
     assert(manifest.where(col("kind") === "rc").count() == 2)
@@ -327,10 +336,10 @@ class FfiecPipelineSpec extends SparkSpec {
 
   test("fleet soak: 60 zips (3 broken) through tolerant concurrent processAll") {
     // the 100 TB ingestion posture in miniature: a quarter-century of
-    // quarterly drops processed in one tolerant concurrent run —
-    // asserts manifest COMPLETENESS (every zip accounted for, broken
-    // ones as error rows, no output lost to a neighbor's failure) and
-    // that concurrency overlaps zip-level work
+    // quarterly drops processed in one tolerant run — asserts manifest
+    // COMPLETENESS (every zip accounted for, broken ones as error rows,
+    // no output lost to a neighbor's failure) for processAll's shared
+    // phases and for a loop of one processZip call per zip
     val dir = java.nio.file.Files.createTempDirectory("ffiec_fleet").toFile
     val quarters = for {
       y <- 2010 to 2024; q <- Seq("0331", "0630", "0930", "1231")
@@ -349,12 +358,27 @@ class FfiecPipelineSpec extends SparkSpec {
             s"IDRSSD\tRCFD0010\tRCFD0020\t\nID\tCash\tDue\t\n37\t1.5\t2.5\t\n93\t3.5\t4.5\t\n")
       }
     }
-    def run(conc: Int): (org.apache.spark.sql.DataFrame, Double) = {
-      val outDir = java.nio.file.Files.createTempDirectory(s"ffiec_fleet_out$conc").toFile
+    val s = spark
+    import s.implicits._
+    /** One processZip call per zip, a broken zip caught as an error row;
+      * the concatenated manifest is written as processAll writes it. */
+    def zipLoop(outDir: String): org.apache.spark.sql.DataFrame = {
+      val m = FfiecPipeline.listZips(spark, dir.getAbsolutePath).map { case (zip, d) =>
+        try FfiecPipeline.processZip(spark, zip, outDir, schemaMap)
+        catch {
+          case e: IllegalArgumentException =>
+            Seq(FfiecPipeline.Written("error", "zip", d, "", 0, ok = false,
+              Seq(s"error: ${e.getMessage}"), Seq(zip))).toDF()
+        }
+      }.reduce(_.unionByName(_))
+      m.write.parquet(s"$outDir/ffiec_process_data.parquet")
+      m
+    }
+    def run(name: String)(process: String => org.apache.spark.sql.DataFrame)
+        : (org.apache.spark.sql.DataFrame, Double) = {
+      val outDir = java.nio.file.Files.createTempDirectory(s"ffiec_fleet_$name").toFile
       val t0 = System.nanoTime()
-      val m = FfiecPipeline.processAll(spark, dir.getAbsolutePath,
-        outDir.getAbsolutePath, schemaMap, concurrency = conc, tolerant = true)
-        .cache()
+      val m = process(outDir.getAbsolutePath).cache()
       m.count()
       val sec = (System.nanoTime() - t0) / 1e9
       // completeness: 57 good rc tables + 3 error rows, every output on disk
@@ -368,14 +392,19 @@ class FfiecPipelineSpec extends SparkSpec {
       assert(log.count() == m.count())
       (m, sec)
     }
-    val (_, serialSec) = run(1)
-    val (_, concSec) = run(8)
-    info(f"fleet soak: 60 zips serial=$serialSec%.1fs concurrency8=$concSec%.1fs")
-    // concurrency must not be slower than serial by more than noise —
-    // wall-time scaling is recorded in SURVEY, not hard-asserted (CI
-    // boxes vary); the guard catches accidental serialization regressions
-    assert(concSec < serialSec * 1.5,
-      f"concurrent run pathologically slow: $concSec%.1fs vs $serialSec%.1fs")
+    val (_, loopSec) = run("loop")(zipLoop)
+    val (all, allSec) = run("all")(out => FfiecPipeline.processAll(spark,
+      dir.getAbsolutePath, out, schemaMap, tolerant = true))
+    info(f"fleet soak: 60 zips processZip loop=$loopSec%.1fs processAll=$allSec%.1fs")
+    // manifest rows keep zip order
+    val manifestDates = all.select("dateRaw").as[String].collect().toSeq.distinct
+    assert(manifestDates == manifestDates.sorted)
+    // sharing phases must not be slower than one zip at a time by more
+    // than noise — wall-time scaling is recorded in SURVEY, not
+    // hard-asserted (CI boxes vary); the guard catches accidental
+    // serialization regressions
+    assert(allSec < loopSec * 1.5,
+      f"processAll pathologically slow: $allSec%.1fs vs $loopSec%.1fs")
   }
 
   test("pct_to_prop strictness: bare numeric in a percent-bearing pure column") {
@@ -436,7 +465,7 @@ class FfiecPipelineSpec extends SparkSpec {
         "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.5\t\n")
 
     val manifest = FfiecPipeline.processXbrls(spark, dir.getAbsolutePath,
-      outDir.getAbsolutePath, concurrency = 2)
+      outDir.getAbsolutePath)
     val rows = manifest.orderBy("dateRaw").collect()
     assert(rows.map(_.getAs[String]("dateRaw")).toSeq == Seq("20240331", "20240630"))
     assert(rows.forall(_.getAs[Boolean]("ok")))
@@ -597,9 +626,9 @@ class FfiecPipelineSpec extends SparkSpec {
     val jobs = jobsOf(FfiecPipeline.processZip(spark, zip,
       outDir.getAbsolutePath, threeScheduleMap))
     info(s"processZip launched ${jobs.size} jobs")
-    // 39 jobs for 3 schedules + POR; reading each wide table per dtype
-    // and again for its columns launched 18 more
-    assert(jobs.size <= 39, s"${jobs.size} jobs > budget 39")
+    // 19 jobs for 3 schedules + POR: the key check rides each long
+    // table's write, and no wide table is re-read for its schema
+    assert(jobs.size <= 19, s"${jobs.size} jobs > budget 19")
     // only the member listing runs outside the phases
     val label = "ffiec 20240331 ([a-z]+ (wide|long|meta)|por)".r
     assert(jobs.count(_.isEmpty) == 1, jobs.mkString("\n"))
@@ -609,5 +638,54 @@ class FfiecPipelineSpec extends SparkSpec {
       jobs.toSet.contains("ffiec 20240331 schedules meta"))
     // the caller's thread keeps no description
     assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
+  test("a long table that breaks its key is removed and the zip fails") {
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_raw12").toFile
+    // RC and RCB both carry RCFD0010 for bank 37, with different values:
+    // the float long table holds two rows for one (IDRSSD, date, item)
+    val dupZip = writeZip(dir, "FFIEC CDR Call Bulk All Schedules 03312024.zip",
+      "FFIEC CDR Call Schedule RC 03312024.txt" ->
+        "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.5\t\n38\t2.5\t\n",
+      "FFIEC CDR Call Schedule RCB 03312024.txt" ->
+        "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t9.5\t\n")
+    val longTable = "ffiec_(float|int|str|date|bool)_\\d{8}\\.parquet".r
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq12").toFile
+    val e = intercept[IllegalArgumentException] {
+      FfiecPipeline.processZip(spark, dupZip, outDir.getAbsolutePath, schemaMap)
+    }
+    assert(e.getMessage.contains("IDRSSD, date, item"), e.getMessage)
+    assert(!outDir.list().exists(longTable.matches), outDir.list().mkString(", "))
+    // tolerant processAll: the zip becomes one error row, a good zip lands
+    writeZip(dir, "FFIEC CDR Call Bulk All Schedules 06302024.zip",
+      "FFIEC CDR Call Schedule RC 06302024.txt" ->
+        "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.5\t\n")
+    val outAll = java.nio.file.Files.createTempDirectory("ffiec_pq12b").toFile
+    val manifest = FfiecPipeline.processAll(spark, dir.getAbsolutePath,
+      outAll.getAbsolutePath, schemaMap, tolerant = true)
+    val kinds = manifest.select("kind", "dateRaw", "ok").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq
+    assert(kinds == Seq(("error", "20240331", false), ("rc", "20240630", true),
+      ("float", "20240630", true), ("schedules", "20240630", true)), kinds)
+    assert(outAll.list().filter(longTable.matches).toSeq == Seq("ffiec_float_20240630.parquet"))
+  }
+
+  test("processAll overlaps the jobs of different zips") {
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_raw13").toFile
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq13").toFile
+    for (d <- Seq("03312024", "06302024")) {
+      writeZip(dir, s"FFIEC CDR Call Bulk All Schedules $d.zip",
+        s"FFIEC CDR Call Schedule RC $d.txt" ->
+          "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.5\t\n38\t2.5\t\n",
+        s"FFIEC CDR Call Schedule RI $d.txt" ->
+          "IDRSSD\tRIAD4340\t\nID\tNet income\t\n37\t42\t\n")
+    }
+    val jobs = jobSpansOf(FfiecPipeline.processAll(spark, dir.getAbsolutePath,
+      outDir.getAbsolutePath, schemaMap))
+    val first = jobs.filter(_.desc.startsWith("ffiec 20240331 "))
+    val second = jobs.filter(_.desc.startsWith("ffiec 20240630 "))
+    assert(first.nonEmpty && second.nonEmpty, jobs.mkString("\n"))
+    // a job of the second zip starts before the first zip's last job ends
+    assert(second.map(_.start).min < first.map(_.end).max, jobs.mkString("\n"))
   }
 }
