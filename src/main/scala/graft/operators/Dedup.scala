@@ -4,6 +4,7 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashes, Text, Vectors}
+import graft.plans.Width
 
 /** Deduplication suite for training-data pipelines. Five strategies,
   * all shaped so the shuffled payload is a small key/sketch — never the
@@ -39,43 +40,6 @@ object Dedup extends Logging {
     cached
   }
 
-  /** Guarded scan-width repartition for per-row-HEAVY narrow stages
-    * (round 16; guide §2.5/§6). A compact columnar corpus slice scans
-    * in 1-2 input splits under maxPartitionBytes, and a narrow stage
-    * doing heavy per-row work right after the scan (shingling, k-hash
-    * minhash signatures) then runs at scan width no matter how many
-    * cores exist — measured on the 10x derived corpus (SCALING_r16):
-    * q112/q118 held 8-vs-32-core ratios ≈ 1.0 while ~30 cores idled.
-    * Widen ONLY when the scan is narrower than the core budget: a
-    * production-scale input (splits ≥ cores — a 100 TB corpus scans in
-    * ~10⁶ splits) passes through untouched, so this never coalesces
-    * and adds no exchange at scale, while at narrow-input scale the
-    * one small exchange (bytes bounded by the narrow input itself)
-    * buys full-width heavy stages. Round-robin with an explicit count:
-    * deterministic under retries (sortBeforeRepartition) and not
-    * coalesced by AQE (user-specified repartition). Call on
-    * SCAN-ROOTED frames only — `.rdd` on a plan that already contains
-    * an Exchange would materialize that stage under AQE.
-    *
-    * The width is BYTES-FLOORED, not a blind defaultParallelism: at
-    * dispatch-floor scale a 32-task job costs ~0.3-0.5 s of pure task
-    * scheduling, and multi-job store gates pay that on every cache
-    * materialization (measured: q82 +80% at sf0.1 with unconditional
-    * full width). One partition per MiB of scan input (plan-stats
-    * upper bound), capped at the core count, keeps tiny frames at
-    * proportionally small widths while anything work-scale gets the
-    * full budget — the same bytes-per-task reasoning as
-    * maxPartitionBytes, tightened ~128x because these stages do
-    * orders-of-magnitude more per-byte work than a scan. */
-  private[operators] def widenIfNarrow(df: DataFrame): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = (bytes / (1L << 20)).min(BigInt(cores)).toInt
-    if (target > 1 && df.rdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
-  }
-
   /** (id, sig) MinHash signatures, shingle-less docs excluded (their
     * signature would be the degenerate all-MAX sentinel — see
     * [[minhashLshPairs]]). Returned PERSISTED: every caller reads it at
@@ -84,7 +48,7 @@ object Dedup extends Logging {
   private[operators] def minhashSigned(df: DataFrame, idCol: String, textCol: String,
                                        shingleN: Int, k: Int,
                                        portableHash: Boolean): DataFrame = {
-    val shingled = widenIfNarrow(df).select(
+    val shingled = Width.widenIfNarrow(df).select(
       col(idCol).as("id"),
       array_distinct(graft.plans.native.wordShingles(col(textCol), shingleN)).as("sh"))
       .where(size(col("sh")) > 0)
@@ -159,7 +123,7 @@ object Dedup extends Logging {
     // re-running the whole shingle+distinct pipeline ~|doc| times per
     // doc — measured 10x wall on this operator. (A transform-lambda
     // embedding is no better: the lambda body evaluates per ELEMENT.)
-    val shingled = widenIfNarrow(df).select(col(idCol).as("id"),
+    val shingled = Width.widenIfNarrow(df).select(col(idCol).as("id"),
         explode(arrays_zip(shArr.as("shingle"),
           array_repeat(size(shArr).cast("long"), size(shArr)).as("n_sh")))
           .as("e"))

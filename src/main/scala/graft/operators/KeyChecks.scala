@@ -3,14 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Width
+
 /** Data-quality checks mirroring the reference's integrity gate
   * (ref: /root/reference/R/ffiec_manifest.R:378 check_pk_and_non_null,
   * /root/reference/R/ffiec_make_long_pqs.R:131 assert_no_dups).
   *
-  * Both checks are single-shuffle aggregations that only materialize
-  * violations (usually zero rows), so they are safe to run inline in a
-  * 100 TB pipeline; the NULL scan is one pass with map-side partial
-  * counts (no shuffle of data rows at all).
+  * Both checks are aggregations that only materialize violations
+  * (usually zero rows), so they are safe to run inline in a 100 TB
+  * pipeline: one shuffle at scale, none on an input under one MiB, which
+  * runs as one task ([[graft.plans.Width.narrowIfSmall]]). The NULL scan
+  * is one pass with map-side partial counts (no shuffle of data rows at
+  * all).
   */
 object KeyChecks {
 
@@ -57,7 +61,7 @@ object KeyChecks {
 
   /** Duplicate key groups: rows per `cols` combination having count>1. */
   def pkViolations(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.groupBy(cols.map(col): _*)
+    Width.narrowIfSmall(df).groupBy(cols.map(col): _*)
       .agg(count(lit(1)).as("n"))
       .where(col("n") > 1)
 
@@ -74,7 +78,7 @@ object KeyChecks {
   /** True iff `cols` form a non-NULL primary key of `df`. One scan: a
     * key group fails if it repeats or any key column is NULL. */
   def checkPkAndNonNull(df: DataFrame, cols: Seq[String]): Boolean =
-    df.groupBy(cols.map(col): _*)
+    Width.narrowIfSmall(df).groupBy(cols.map(col): _*)
       .agg(count(lit(1)).as("_n"))
       .where(col("_n") > 1 || cols.map(col(_).isNull).reduce(_ || _))
       .isEmpty

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.Width
+
 /** Wide↔long reshaping, re-expressing the reference's DuckDB UNPIVOT /
   * PIVOT pipeline (ref: /root/reference/R/ffiec_make_long_pqs.R:39
   * get_long, /root/reference/R/ffiec_pivot.R:61 ffiec_pivot) with
@@ -14,9 +16,11 @@ import org.apache.spark.sql.types._
   *    to the requested data type *before* the Expand so the scan reads
   *    only matching columns.
   *  - wide(): `groupBy(...).pivot(col, values)` with an explicit value
-  *    list → single shuffle with map-side partial aggregation. The
-  *    reference requires an item list for stable output columns; we make
-  *    it mandatory for the same reason (and so the plan is static).
+  *    list. The reference requires an item list for stable output
+  *    columns; we make it mandatory for the same reason (and so the plan
+  *    is static). A long input under one MiB pivots as one task with no
+  *    exchange ([[graft.plans.Width.narrowIfSmall]]); a larger one plans
+  *    Spark's two-step PivotFirst aggregation with its shuffles.
   */
 object LongPivot {
 
@@ -75,7 +79,7 @@ object LongPivot {
       case "count" => count(col(valuesFrom))
       case other   => throw new IllegalArgumentException(s"unsupported values_fn: $other")
     }
-    long
+    Width.narrowIfSmall(long)
       .where(col(namesFrom).isin(items: _*))
       .groupBy(idCols.map(col): _*)
       .pivot(namesFrom, items)
@@ -84,9 +88,9 @@ object LongPivot {
 
   /** item → sorted list of schedules that carry it (ref:
     * ffiec_make_long_pqs.R:119 make_schedule_pq). Input: one row per
-    * (schedule, item). */
+    * (schedule, item); a sub-MiB input aggregates as one task. */
   def itemSchedules(scheduleItems: DataFrame): DataFrame =
-    scheduleItems
+    Width.narrowIfSmall(scheduleItems)
       .groupBy("item")
       .agg(sort_array(collect_set(col("schedule"))).as("schedules"))
 }

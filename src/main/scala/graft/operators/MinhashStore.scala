@@ -85,7 +85,7 @@ object MinhashStore {
     //
     // Write-side file sizing (round 16, guide §6): the signature stage
     // is now widened to core count when the input scans narrow
-    // (Dedup.widenIfNarrow), so writing the cached frames AT that
+    // (Width.widenIfNarrow), so writing the cached frames AT that
     // width would emit width×(bands present per task) band files and
     // width sig files PER BATCH — measured at sf0.1: q82 +109% /
     // q97 +63% wall from file-commit and re-open overhead alone. The

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Ffiec
 import graft.operators.{CombineParts, LongPivot}
-import graft.plans.DriverPool
+import graft.plans.{DriverPool, Width}
 import graft.schema.FfiecSchema
 import graft.sources.ZipTsv
 
@@ -29,7 +29,9 @@ import graft.sources.ZipTsv
   * defaultParallelism: phase 1 writes every zip's wide schedule tables
   * and POR tables; phase 2 writes every (date, dtype) long table (a
   * per-schedule unpivot + union + distinct with the key check in the
-  * same job, one shuffle each) and every date's schedules metadata.
+  * same job: one task and no shuffle when the union is under one MiB,
+  * else one shuffle on (IDRSSD, date)) and every date's schedules
+  * metadata.
   * The many small jobs of a fleet thus share the cores instead of
   * queueing behind each other's dispatch, with the driver's thread
   * count fixed whatever the zip count — the reference's
@@ -346,10 +348,11 @@ object FfiecPipeline {
           .parquet(w.path))
 
       // The key check (ref: assert_no_dups) rides the write, so the
-      // table is computed once. The exchange on (IDRSSD, date) serves
-      // both the distinct and the per-key count window, and an
-      // Observation reports rows that share a key; a table that breaks
-      // the key is removed before the error is raised.
+      // table is computed once. One partitioning serves both the
+      // distinct and the per-key count window: a single partition when
+      // the union is under one MiB (no exchange), else an exchange on
+      // (IDRSSD, date). An Observation reports rows that share a key; a
+      // table that breaks the key is removed before the error is raised.
       def writeLong(dateRaw: String, dname: String, dtype: DataType): Option[Written] = {
         val longs = wideDfs.filter(_._1.dateRaw == dateRaw).flatMap { case (_, wide) =>
           val cols = LongPivot.colsOfType(wide, dtype, Seq("IDRSSD", "date"))
@@ -360,8 +363,9 @@ object FfiecPipeline {
         else {
           val out = s"$outDir/$prefix${dname}_$dateRaw.parquet"
           val dups = Observation(s"dups_${dname}_$dateRaw")
-          longs.reduce(_.unionByName(_))
-            .repartition(col("IDRSSD"), col("date"))
+          val union = longs.reduce(_.unionByName(_))
+          (if (Width.isSmall(union)) union.coalesce(1)
+           else union.repartition(col("IDRSSD"), col("date")))
             .distinct()
             .withColumn("_n", count(lit(1)).over(
               Window.partitionBy(col("IDRSSD"), col("date"), col("item"))))
@@ -476,7 +480,7 @@ object FfiecPipeline {
     require(zips.nonEmpty, s"No FFIEC bulk zip files found in $rawDir")
     val out = (processZips(spark, zips, outDir, schemaMap,
       FfiecSchema.defaultColOverrides, "ffiec_", strict, tolerant) ++ itemRows).toDF()
-    out.write.mode("overwrite")
+    out.coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/ffiec_process_data.parquet")
     out
   }
@@ -522,7 +526,7 @@ object FfiecPipeline {
         val rows = processZips(spark, zips, outDir, schemaMap,
           FfiecSchema.defaultColOverrides, "ffiec_", strict = false, tolerant = true)
         if (rows.nonEmpty)
-          rows.toDF().write.mode("append")
+          rows.toDF().coalesce(1).write.mode("append")
             .parquet(s"$outDir/ffiec_process_stream_log.parquet")
       }
       .start()
@@ -580,7 +584,7 @@ object FfiecPipeline {
 
     val manifest = DriverPool.awaitAll(spark,
       zips.map { case (zip, d) => () => one(zip, d) }).toDF()
-    manifest.write.mode("overwrite")
+    manifest.coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/ffiec_process_xbrls_data.parquet")
     manifest
   }

@@ -148,6 +148,15 @@ object FfiecSchema {
     }
     ColSpec(kept.toIndexedSeq, codes.toIndexedSeq, expectedCells = header.size)
   }
+
+  /** `cell` without one leading and one trailing double quote — what
+    * `cell.replaceAll("^\"|\"$", "")` returns on a trimmed cell, by
+    * index, so the per-cell parse compiles no regex. */
+  private[graft] def unquote(cell: String): String = {
+    val from = if (cell.startsWith("\"")) 1 else 0
+    val to = if (cell.length > from && cell.endsWith("\"")) cell.length - 1 else cell.length
+    cell.substring(from, to)
+  }
 }
 
 /** Compiled parse plan for one schedule member: column names + one-char
@@ -184,7 +193,7 @@ case class ColSpec(names: IndexedSeq[String], codes: IndexedSeq[String],
     var problems = 0
     val values = (0 until arity).map { i =>
       val raw = if (i < cells.length) cells(i).trim else ""
-      val unq = raw.replaceAll("^\"|\"$", "")
+      val unq = FfiecSchema.unquote(raw)
       if (FfiecSchema.naTokens.contains(unq)) null
       else codes(i) match {
         case "d" => try { unq.toDouble: java.lang.Double } catch { case _: Exception => problems += 1; null }

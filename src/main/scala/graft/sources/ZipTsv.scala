@@ -6,6 +6,7 @@ import java.util.zip.ZipInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -216,9 +217,12 @@ object ZipTsv {
     val rdd = spark.sparkContext.parallelize(Seq((zip, member)), 1).flatMap {
       case (z, m) =>
         val zin = openStream(z, confMap)
+        // closed when the task ends — drained, failed or stopped early
+        // by a limit — not when the rows run out
+        TaskContext.get().addTaskCompletionListener[Unit](_ => zin.close())
         val found = Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
           .exists(_.getName == m)
-        if (!found) { zin.close(); Iterator.empty }
+        if (!found) Iterator.empty
         else {
           val reader = new BufferedReader(
             new InputStreamReader(zin, StandardCharsets.UTF_8))
@@ -235,7 +239,6 @@ object ZipTsv {
             val (values, problems) = spec.parseLineCounted(fixed)
             Row.fromSeq(values :+ repairs :+ problems)
           }
-          // note: stream closed when the iterator is exhausted by the task
         }
     }
     spark.createDataFrame(rdd, schema)

@@ -63,31 +63,43 @@ class FfiecPipelineSpec extends SparkSpec {
     t.schema.simpleString +: t.collect().map(render).toSeq.sorted
   }
 
-  /** A job `body` launched: its description ("" when unset) and its
-    * start and end times in listener-event milliseconds. */
-  private case class JobSpan(desc: String, start: Long, end: Long)
+  /** A job `body` launched: its description ("" when unset), its
+    * start and end times in listener-event milliseconds, and whether it
+    * has a shuffle stage (one it runs that writes shuffle output, or a
+    * parent map stage whose output it reads). */
+  private case class JobSpan(desc: String, start: Long, end: Long,
+                             shuffles: Boolean)
 
   /** The jobs `body` launches, in start order, collected by a
     * SparkListener on a job group the calling thread sets (driver-pool
     * threads inherit it). A fence job in a second group marks when
     * every earlier event was delivered. */
   private def jobSpansOf(body: => Unit): Seq[JobSpan] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerStageCompleted}
     val sc = spark.sparkContext
     val group = s"job-budget-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.ConcurrentSkipListMap[Int, JobSpan]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Integer]()
     val fence = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
         props.map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.put(e.jobId, JobSpan(
-            props.flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse(""), e.time, -1L))
+          case Some(`group`) =>
+            jobs.put(e.jobId, JobSpan(
+              props.flatMap(p => Option(p.getProperty("spark.job.description")))
+                .getOrElse(""), e.time, -1L, shuffles = e.stageInfos.size > 1))
+            e.stageInfos.foreach(si => stageJob.putIfAbsent(si.stageId, e.jobId))
           case Some(g) if g == s"$group-fence" => fence.countDown()
           case _ =>
         }
       }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(stageJob.get(e.stageInfo.stageId)).foreach { j =>
+          if (e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
+            jobs.computeIfPresent(j, (_, s) => s.copy(shuffles = true))
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.computeIfPresent(e.jobId, (_, j) => j.copy(end = e.time))
     }
@@ -623,12 +635,13 @@ class FfiecPipelineSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ffiec_raw11").toFile
     val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq11").toFile
     val zip = threeScheduleZip(dir)
-    val jobs = jobsOf(FfiecPipeline.processZip(spark, zip,
+    val spans = jobSpansOf(FfiecPipeline.processZip(spark, zip,
       outDir.getAbsolutePath, threeScheduleMap))
+    val jobs = spans.map(_.desc)
     info(s"processZip launched ${jobs.size} jobs")
-    // 19 jobs for 3 schedules + POR: the key check rides each long
-    // table's write, and no wide table is re-read for its schema
-    assert(jobs.size <= 19, s"${jobs.size} jobs > budget 19")
+    // 13 jobs for 3 schedules + POR: the key check rides each long
+    // table's one-task write, and no wide table is re-read for its schema
+    assert(jobs.size <= 13, s"${jobs.size} jobs > budget 13")
     // only the member listing runs outside the phases
     val label = "ffiec 20240331 ([a-z]+ (wide|long|meta)|por)".r
     assert(jobs.count(_.isEmpty) == 1, jobs.mkString("\n"))
@@ -638,6 +651,17 @@ class FfiecPipelineSpec extends SparkSpec {
       jobs.toSet.contains("ffiec 20240331 schedules meta"))
     // the caller's thread keeps no description
     assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+    // the sub-MiB long tables are written by one task each: no shuffle,
+    // one file per table, rows in key order
+    val longWrites = spans.filter(_.desc.endsWith(" long"))
+    assert(longWrites.size == 5 && !longWrites.exists(_.shuffles), spans.mkString("\n"))
+    for (t <- Seq("float", "int", "str", "date", "bool")) {
+      val table = new File(outDir, s"ffiec_${t}_20240331.parquet")
+      assert(table.list().count(_.endsWith(".parquet")) == 1, table.list().mkString(", "))
+      val keys = spark.read.parquet(table.getPath).collect()
+        .map(r => (r.getInt(0), r.getDate(1).toString, r.getString(2))).toSeq
+      assert(keys == keys.sorted, s"$t: $keys")
+    }
   }
 
   test("a long table that breaks its key is removed and the zip fails") {
@@ -687,5 +711,38 @@ class FfiecPipelineSpec extends SparkSpec {
     assert(first.nonEmpty && second.nonEmpty, jobs.mkString("\n"))
     // a job of the second zip starts before the first zip's last job ends
     assert(second.map(_.start).min < first.map(_.end).max, jobs.mkString("\n"))
+  }
+
+  test("read-set job budget: a two-date union scan, a pivot and a key check " +
+    "on processZip output launch one job each") {
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_raw14").toFile
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq14").toFile
+    // RC gains an item between the dates: the union merges two schemas
+    for ((d, extra) <- Seq("03312024" -> "", "06302024" -> "RCFD0020\t")) {
+      val zip = writeZip(dir, s"FFIEC CDR Call Bulk All Schedules $d.zip",
+        s"FFIEC CDR Call Schedule RC $d.txt" ->
+          (s"IDRSSD\tRCFD0010\t$extra\nID\tCash\t$extra\n" +
+            s"37\t1.5\t${if (extra.isEmpty) "" else "7.5\t"}\n38\t2.5\t\n"))
+      FfiecPipeline.processZip(spark, zip, outDir.getAbsolutePath, schemaMap)
+    }
+    val out = outDir.getAbsolutePath
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    var union: org.apache.spark.sql.DataFrame = null
+    val unionJobs = jobsOf { union = graft.sources.Scan.unionByName(
+      spark, s"$out/ffiec_rc_*.parquet"); noop(union) }
+    assert(unionJobs.size == 1, unionJobs.mkString("\n"))
+    assert(union.columns.toSeq == Seq("IDRSSD", "RCFD0010", "date", "RCFD0020"))
+    assert(union.count() == 4)
+    val t = graft.LongTable.scan(spark, out)
+    val pivotJobs = jobsOf(noop(t.pivot(Seq("RCFD0010", "RCFD0020"))))
+    assert(pivotJobs.size == 1, pivotJobs.mkString("\n"))
+    var ok = false
+    val checkJobs = jobsOf { ok = t.checkKeys() }
+    assert(ok && checkJobs.size == 1, checkJobs.mkString("\n"))
+    assert(t.pivot(Seq("RCFD0010", "RCFD0020")).orderBy("date", "IDRSSD")
+      .collect().map(render).toSeq == Seq(
+        "37|2024-03-31|1.5|null", "38|2024-03-31|2.5|null",
+        "37|2024-06-30|1.5|7.5", "38|2024-06-30|2.5|null"))
   }
 }

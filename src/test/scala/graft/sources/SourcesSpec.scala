@@ -6,6 +6,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.SparkSpec
 import graft.schema.FfiecSchema
+import org.apache.spark.sql.functions.{col, lit, struct}
 
 class ZipTsvSpec extends SparkSpec {
 
@@ -69,6 +70,37 @@ class ZipTsvSpec extends SparkSpec {
     assert(r40.getString(2) == "good" && r40.getDate(3).toString == "2024-03-31")
     assert(r40.getSeq[String](repairsIdx).contains("tab-repair"))
   }
+
+  test("member reads close their zip stream when the task ends") {
+    val fds = new File("/proc/self/fd")
+    assume(fds.isDirectory, "no /proc/self/fd on this platform")
+    val zip = makeZip(
+      "FFIEC CDR Call Schedule RC 03312024.txt" -> schedTsv,
+      "FFIEC CDR Call Schedule RI 03312024.txt" ->
+        "IDRSSD\tRIAD4340\t\nID\tNet income\t\n37\t42\t\n",
+      "FFIEC CDR Call Bulk POR 03312024.txt" ->
+        "IDRSSD\tFinancial Institution Name\n37\tFirst Bank\n")
+    val members = ZipTsv.listMembers(spark, zip)
+    val (sched, por) = members.partition(_.schedule.isDefined)
+    assert(sched.size == 2 && por.size == 1)
+    val read = ZipTsv.readSchedule(spark, zip, sched.map(_.file)) ++
+      por.map(m => ZipTsv.readPor(spark, zip, m.file))
+    assert(read.map(_.collect().length) == Seq(4, 1, 1))
+    // one member read stopped early by a limit closes its stream too
+    assert(ZipTsv.readSchedule(spark, zip, sched.take(1).map(_.file)).head
+      .limit(1).collect().length == 1)
+    val target = new File(zip).getCanonicalPath
+    val open = Option(fds.listFiles()).toSeq.flatten.filter { fd =>
+      scala.util.Try(java.nio.file.Files.readSymbolicLink(fd.toPath).toString)
+        .toOption.contains(target)
+    }
+    assert(open.isEmpty, s"${open.size} descriptors still open on $target")
+  }
+
+  test("cell unquoting strips one quote at each end, as the regex did") {
+    for (cell <- Seq("\"a\"", "\"a", "a\"", "\"", "\"\"", "a\"b\"", "\"\"a\"\"", "a", ""))
+      assert(FfiecSchema.unquote(cell) == cell.replaceAll("^\"|\"$", ""), cell)
+  }
 }
 
 class XbrlZipSpec extends SparkSpec {
@@ -110,6 +142,75 @@ class ScanSpec extends SparkSpec {
     assert(df.columns.toSet == Set("IDRSSD", "RCFD0010", "RCFD0020", "RCON8678"))
     assert(df.count() == 2)
     assert(Scan.extractSchedule("ffiec_rc_20240331.parquet", "ffiec_") == "rc")
+  }
+
+  private def mergeSchemaRead(glob: String) =
+    spark.read.option("mergeSchema", "true").parquet(glob)
+
+  test("unionByName merges a small glob's footers on the driver exactly as " +
+    "mergeSchema does") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("scan_merge").toFile
+    dir.deleteOnExit()
+    // non-nullable and nullable columns, a reordered and a dropped one,
+    // a nested struct, and a table written as two files
+    Seq((1, 10.0, "a")).toDF("IDRSSD", "RCFD0010", "TEXT")
+      .write.parquet(s"$dir/rc_20240331.parquet")
+    Seq(("x", 2, Option(20.0))).toDF("RCON8678", "IDRSSD", "RCFD0020")
+      .withColumn("nested", struct(col("IDRSSD").as("id"), lit("n").as("tag")))
+      .write.parquet(s"$dir/rc_20240630.parquet")
+    Seq((3, 30.0, "z"), (4, 40.0, "w")).toDF("IDRSSD", "RCFD0010", "RCON8678")
+      .repartition(2).write.parquet(s"$dir/rc_20240930.parquet")
+    val glob = s"$dir/rc_*.parquet"
+    val merged = Scan.footerSchema(spark, glob)
+    assert(merged.isDefined, "a small glob must take the driver-side merge")
+    val want = mergeSchemaRead(glob)
+    val df = Scan.unionByName(spark, glob)
+    assert(df.schema == want.schema, s"${df.schema.treeString}\n${want.schema.treeString}")
+    assert(df.schema.fieldNames.toSeq == Seq("IDRSSD", "RCFD0010", "TEXT",
+      "RCON8678", "RCFD0020", "nested"))
+    assert(df.orderBy("IDRSSD").collect().toSeq ==
+      want.orderBy("IDRSSD").collect().toSeq)
+  }
+
+  test("unionByName raises mergeSchema's error on a column type conflict") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("scan_conflict").toFile
+    dir.deleteOnExit()
+    Seq((1, 10.0)).toDF("IDRSSD", "RCFD0010").write.parquet(s"$dir/rc_20240331.parquet")
+    Seq((2, "x")).toDF("IDRSSD", "RCFD0010").write.parquet(s"$dir/rc_20240630.parquet")
+    val glob = s"$dir/rc_*.parquet"
+    assert(Scan.footerSchema(spark, glob).isEmpty)
+    val want = intercept[Exception](mergeSchemaRead(glob))
+    val got = intercept[Exception](Scan.unionByName(spark, glob))
+    assert(got.getClass == want.getClass && got.getMessage == want.getMessage,
+      s"${got.getMessage}\nvs\n${want.getMessage}")
+  }
+
+  test("unionByName reads parquet without Spark's row schema through mergeSchema") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("scan_plain").toFile
+    dir.deleteOnExit()
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int32 IDRSSD; optional binary name (UTF8); }")
+    for (d <- Seq("20240331", "20240630")) {
+      val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(
+          s"$dir/rc_$d.parquet/part-0.parquet"))
+        .withType(schema).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup()
+        .append("IDRSSD", d.takeRight(2).toInt).append("name", s"bank $d"))
+      finally w.close()
+    }
+    val glob = s"$dir/rc_*.parquet"
+    assert(Scan.footerSchema(spark, glob).isEmpty)
+    val df = Scan.unionByName(spark, glob)
+    assert(df.schema == mergeSchemaRead(glob).schema)
+    assert(df.orderBy("IDRSSD").collect().map(_.toString).toSeq ==
+      Seq("[30,bank 20240630]", "[31,bank 20240331]"))
   }
 
   test("listPqs parses (schedule, date) from written parquet names") {
