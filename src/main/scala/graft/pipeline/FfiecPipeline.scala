@@ -1,11 +1,14 @@
 package graft.pipeline
 
+import java.time.LocalDate
+import java.time.format.DateTimeFormatter
+
 import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,10 +31,14 @@ import graft.sources.ZipTsv
   * phase submitted together from a driver pool bounded by the session's
   * defaultParallelism: phase 1 writes every zip's wide schedule tables
   * and POR tables; phase 2 writes every (date, dtype) long table (a
-  * per-schedule unpivot + union + distinct with the key check in the
-  * same job: one task and no shuffle when the union is under one MiB,
-  * else one shuffle on (IDRSSD, date)) and every date's schedules
-  * metadata.
+  * per-schedule unpivot + union + one aggregate per (IDRSSD, date, item)
+  * key that keeps the value and fails the plan on a broken key, in one
+  * job: one task and no shuffle when the union is under one MiB, else
+  * one shuffle on (IDRSSD, date)) and every date's schedules metadata.
+  * The report date reaches every table as row data and the read
+  * diagnostics as task-side counters, so a schedule whose columns do
+  * not change between quarters plans the same generated code each
+  * quarter and reuses the classes Spark's codegen cache holds.
   * The many small jobs of a fleet thus share the cores instead of
   * queueing behind each other's dispatch, with the driver's thread
   * count fixed whatever the zip count — the reference's
@@ -250,24 +257,15 @@ object FfiecPipeline {
     // ---- phase 1: wide parquet per (schedule, date), and POR
     def writeWide(schedule: String, dateRaw: String, sorted: Seq[ZipTsv.Member],
                   nParts: Int): (Written, Option[Wide]) = {
-      // Per-part diagnostics ride the write job via observed metrics —
-      // no second pass over the zip members (ref: ffiec_process.R:225
-      // ok/repairs recorded per written file).
-      val rawParts = ZipTsv.readSchedule(spark, zipPath, sorted.map(_.file),
-        resolved, overrides)
-      val observations = rawParts.indices.map(i =>
-        Observation(s"diag_${schedule}_${dateRaw}_$i"))
-      val parts = rawParts.zip(observations).map { case (p, o) =>
-        p.observe(o,
-          sum(col("_problems")).as("problems"),
-          sum(when(array_contains(col("_repairs"), "newline-join"), 1L)
-            .otherwise(0L)).as("nl"),
-          sum(when(array_contains(col("_repairs"), "tab-repair"), 1L)
-            .otherwise(0L)).as("tab"))
-          .drop("_repairs", "_problems")
-      }
-      val combined = CombineParts.combine(parts, key = "IDRSSD")
-        .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
+      // Per-part diagnostics are counted by the reading tasks — no second
+      // pass over the zip members and no stage split by observed metrics
+      // (ref: ffiec_process.R:225 ok/repairs recorded per written file).
+      val stamp = ZipTsv.Stamp(spark, reportDate(dateRaw))
+      val joined = CombineParts.combine(ZipTsv.readScheduleStamped(spark, zipPath,
+        sorted.map(_.file), resolved, overrides, stamp), key = "IDRSSD")
+      // every part carries the date; it stays the last column
+      val combined = joined.select(
+        joined.columns.toSeq.filterNot(_ == "date").map(col) :+ col("date"): _*)
       // pct_to_prop strictness (ref: ffeic_read.R:535 pct_to_prop stop()):
       // in a pure column that is percent-encoded (any '%' present), a
       // numeric cell WITHOUT '%' is a data-quality error in the
@@ -300,10 +298,10 @@ object FfiecPipeline {
           s"pct_to_prop: numeric values not ending in '%' in pure columns " +
             s"${badPure.mkString(", ")} of $schedule ($dateRaw)")
       val repairs =
-        (if (observations.exists(metric(_, "nl") > 0)) Seq("newline-join") else Nil) ++
-        (if (observations.exists(metric(_, "tab") > 0)) Seq("tab-repair") else Nil) ++
+        (if (stamp.newlineJoins.sum > 0) Seq("newline-join") else Nil) ++
+        (if (stamp.tabRepairs.sum > 0) Seq("tab-repair") else Nil) ++
         badPure.map(c => s"pure-pct-bad: $c")
-      val ok = observations.map(metric(_, "problems")).sum == 0 && badPure.isEmpty
+      val ok = stamp.problems.sum == 0 && badPure.isEmpty
       (Written(schedule, "schedule", dateRaw, out, nParts,
           ok = ok, repairs = repairs, innerFiles = sorted.map(_.file)),
         Some(Wide(dateRaw, out, fixed.schema)))
@@ -313,16 +311,11 @@ object FfiecPipeline {
     // recorded; ok stays true as in the reference (ffiec_process.R:442).
     def writePor(m: ZipTsv.Member, dateRaw: String): (Written, Option[Wide]) = {
       val out = s"$outDir/por_$dateRaw.parquet"
-      val obs = Observation(s"diag_por_$dateRaw")
-      ZipTsv.readPor(spark, zipPath, m.file)
-        .observe(obs,
-          sum(when(array_contains(col("_repairs"), "tab-repair"), 1L)
-            .otherwise(0L)).as("tab"))
-        .drop("_repairs", "_problems")
-        .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
+      val stamp = ZipTsv.Stamp(spark, reportDate(dateRaw))
+      ZipTsv.readPorStamped(spark, zipPath, m.file, stamp)
         .write.mode("overwrite").parquet(out)
       (Written("por", "por", dateRaw, out, 1, ok = true,
-          repairs = if (metric(obs, "tab") > 0) Seq("tab-repair") else Nil,
+          repairs = if (stamp.tabRepairs.sum > 0) Seq("tab-repair") else Nil,
           innerFiles = Seq(m.file)), None)
     }
 
@@ -348,11 +341,13 @@ object FfiecPipeline {
           .parquet(w.path))
 
       // The key check (ref: assert_no_dups) rides the write, so the
-      // table is computed once. One partitioning serves both the
-      // distinct and the per-key count window: a single partition when
-      // the union is under one MiB (no exchange), else an exchange on
-      // (IDRSSD, date). An Observation reports rows that share a key; a
-      // table that breaks the key is removed before the error is raised.
+      // table is computed once: one aggregate per (IDRSSD, date, item)
+      // keeps the value when all its rows agree and fails the plan
+      // (raise_error) when they do not. A single partition when the
+      // union is under one MiB (no exchange), else an exchange on
+      // (IDRSSD, date), which the aggregate's distribution accepts.
+      // After a failed write, a table whose key is broken is removed and
+      // the rows sharing a key are counted for the error.
       def writeLong(dateRaw: String, dname: String, dtype: DataType): Option[Written] = {
         val longs = wideDfs.filter(_._1.dateRaw == dateRaw).flatMap { case (_, wide) =>
           val cols = LongPivot.colsOfType(wide, dtype, Seq("IDRSSD", "date"))
@@ -362,23 +357,28 @@ object FfiecPipeline {
         if (longs.isEmpty) None
         else {
           val out = s"$outDir/$prefix${dname}_$dateRaw.parquet"
-          val dups = Observation(s"dups_${dname}_$dateRaw")
           val union = longs.reduce(_.unionByName(_))
-          (if (Width.isSmall(union)) union.coalesce(1)
-           else union.repartition(col("IDRSSD"), col("date")))
-            .distinct()
-            .withColumn("_n", count(lit(1)).over(
-              Window.partitionBy(col("IDRSSD"), col("date"), col("item"))))
-            .observe(dups, sum(when(col("_n") > 1, 1L).otherwise(0L)).as("rows"))
-            .drop("_n")
-            .write.mode("overwrite").parquet(out)
-          val n = metric(dups, "rows")
-          if (n > 0) {
-            val p = new Path(out)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-            throw new IllegalArgumentException(
-              s"Found $n rows sharing a key on {IDRSSD, date, item} in " +
-                s"$dname ($dateRaw); $out was removed")
+          val key = Seq(col("IDRSSD"), col("date"), col("item"))
+          val checked =
+            (if (Width.isSmall(union)) union.coalesce(1)
+             else union.repartition(col("IDRSSD"), col("date")))
+              .groupBy(key: _*)
+              .agg(min("value").as("lo"), max("value").as("hi"))
+              .select(key :+ when(col("lo") === col("hi"), col("lo"))
+                .otherwise(raise_error(lit("rows share a key"))).as("value"): _*)
+              .sortWithinPartitions(key: _*)
+          try checked.write.mode("overwrite").parquet(out)
+          catch {
+            case NonFatal(e) =>
+              val n = union.distinct().groupBy(key: _*).count()
+                .where(col("count") > 1)
+                .select(coalesce(sum("count"), lit(0L))).head().getLong(0)
+              if (n == 0) throw e
+              val p = new Path(out)
+              p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+              throw new IllegalArgumentException(
+                s"Found $n rows sharing a key on {IDRSSD, date, item} in " +
+                  s"$dname ($dateRaw); $out was removed")
           }
           Some(Written(dname, "long", dateRaw, out, 1, ok = true, Nil, Nil))
         }
@@ -394,9 +394,14 @@ object FfiecPipeline {
         }
         if (pairs.isEmpty) None
         else {
+          // metadata-scale: item → sorted schedules, as
+          // LongPivot.itemSchedules computes it, with the date as data
+          val date = reportDate(dateRaw)
+          val rows = pairs.groupBy(_._2).toSeq.sortBy(_._1).map { case (item, ps) =>
+            (item, ps.map(_._1).distinct.sorted, date)
+          }
           val out = s"$outDir/${prefix}schedules_$dateRaw.parquet"
-          LongPivot.itemSchedules(pairs.toDF("schedule", "item"))
-            .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
+          rows.toDF("item", "schedules", "date").coalesce(1)
             .write.mode("overwrite").parquet(out)
           Some(Written("schedules", "meta", dateRaw, out, 1, ok = true, Nil, Nil))
         }
@@ -410,6 +415,11 @@ object FfiecPipeline {
 
     ZipPlan(phase1, schedGroups.size, phase2)
   }
+
+  /** A member's yyyyMMdd report date; a date that does not parse fails
+    * the write, as an ANSI `to_date` does. */
+  private def reportDate(dateRaw: String): LocalDate =
+    LocalDate.parse(dateRaw, DateTimeFormatter.BASIC_ISO_DATE)
 
   /** An observed Long metric; 0 when the aggregate saw no rows. */
   private def metric(o: Observation, k: String): Long =

@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** XBRL-type-driven column specification for FFIEC schedule TSVs
   * (ref: /root/reference/R/ffiec_types.R default_xbrl_to_readr /
@@ -17,7 +18,7 @@ import org.apache.spark.sql.types._
   *
   * A ColSpec is compiled once on the driver from (header, schema map,
   * overrides) and shipped to executors as a plain serializable value;
-  * parseLine is allocation-light and runs in the member-scan task.
+  * parseInto is allocation-light and runs in the member-scan task.
   */
 object FfiecSchema {
 
@@ -179,38 +180,40 @@ case class ColSpec(names: IndexedSeq[String], codes: IndexedSeq[String],
   // DateTimeFormatter is not Serializable — rebuild per deserialized task.
   @transient private lazy val dateFmt = DateTimeFormatter.ofPattern("yyyyMMdd")
 
-  /** Parse one repaired TSV line into typed values (null on NA token or
-    * unparseable cell — a poison cell must not kill a 100 TB job). */
-  def parseLine(line: String): Seq[Any] = parseLineCounted(line)._1
-
-  /** parseLine plus the count of cells that were neither NA tokens nor
-    * parseable at their declared type — the reference's per-file
-    * `problems` record (ref: ffeic_read.R:176 `ok = ... nrow(probs) ==
-    * 0`), surfaced per row so the manifest can aggregate it in the same
-    * pass that writes the parquet. */
-  def parseLineCounted(line: String): (Seq[Any], Int) = {
+  /** Parse one repaired TSV line into `values(0 until arity)` in
+    * Catalyst's internal form (UTF8String, days since the epoch; null on
+    * an NA token or an unparseable cell — a poison cell must not kill a
+    * 100 TB job), and return the count of cells that were neither NA
+    * tokens nor parseable at their declared type — the reference's
+    * per-file `problems` record (ref: ffeic_read.R:176 `ok = ...
+    * nrow(probs) == 0`), counted per row so the reader can aggregate it
+    * in the pass that writes the parquet. */
+  def parseInto(line: String, values: Array[Any]): Int = {
     val cells = line.split("\t", -1)
     var problems = 0
-    val values = (0 until arity).map { i =>
+    var i = 0
+    while (i < arity) {
       val raw = if (i < cells.length) cells(i).trim else ""
       val unq = FfiecSchema.unquote(raw)
-      if (FfiecSchema.naTokens.contains(unq)) null
-      else codes(i) match {
-        case "d" => try { unq.toDouble: java.lang.Double } catch { case _: Exception => problems += 1; null }
-        case "i" => try { unq.toInt: java.lang.Integer } catch { case _: Exception => problems += 1; null }
-        case "l" =>
-          unq.toLowerCase match {
-            case "true" | "t" | "1" | "yes" => java.lang.Boolean.TRUE
-            case "false" | "f" | "0" | "no" => java.lang.Boolean.FALSE
-            case _ => problems += 1; null
-          }
-        case "D" =>
-          if (FfiecSchema.dateNaTokens.contains(unq)) null
-          else try java.sql.Date.valueOf(LocalDate.parse(unq, dateFmt))
-          catch { case _: Exception => problems += 1; null }
-        case _ => unq
-      }
+      values(i) =
+        if (FfiecSchema.naTokens.contains(unq)) null
+        else codes(i) match {
+          case "d" => try unq.toDouble catch { case _: Exception => problems += 1; null }
+          case "i" => try unq.toInt catch { case _: Exception => problems += 1; null }
+          case "l" =>
+            unq.toLowerCase match {
+              case "true" | "t" | "1" | "yes" => true
+              case "false" | "f" | "0" | "no" => false
+              case _ => problems += 1; null
+            }
+          case "D" =>
+            if (FfiecSchema.dateNaTokens.contains(unq)) null
+            else try LocalDate.parse(unq, dateFmt).toEpochDay.toInt
+            catch { case _: Exception => problems += 1; null }
+          case _ => UTF8String.fromString(unq)
+        }
+      i += 1
     }
-    (values, problems)
+    problems
   }
 }

@@ -23,13 +23,15 @@ object Scan {
     * files, Spark's own cutoff for listing file metadata on the driver)
     * whose footers all carry Spark's row schema and agree on every
     * column's type is merged on the driver ([[footerSchema]]), so the
-    * scan launches no schema-merge job. Any other glob goes through
-    * Spark's `mergeSchema` read, which raises Spark's own error on a
-    * type conflict. */
+    * scan launches no schema-merge job, and it reads the paths the glob
+    * resolved to, so Spark neither globs again nor stats the literal
+    * glob. Any other glob goes through Spark's `mergeSchema` read, which
+    * raises Spark's own error on a type conflict or, for a glob that
+    * matches nothing, on the missing path. */
   def unionByName(spark: SparkSession, glob: String,
                   keepFilename: Boolean = false): DataFrame = {
     val df = footerSchema(spark, glob) match {
-      case Some(schema) => spark.read.schema(schema).parquet(glob)
+      case Some((schema, paths)) => spark.read.schema(schema).parquet(paths: _*)
       case None => spark.read.option("mergeSchema", "true").parquet(glob)
     }
     if (keepFilename) df.withColumn("filename", input_file_name()) else df
@@ -47,17 +49,18 @@ object Scan {
       !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
 
   /** The schema `mergeSchema` would infer for `glob`, merged on the
-    * driver from the footers' Spark row schemas: fields by name in
-    * first-seen order over the data files sorted by path, all nullable.
-    * None — take Spark's read — when the glob matches nothing or more
-    * data files than the discovery threshold, when a match holds a
-    * subdirectory (partitioned or nested data) or a summary file, when
-    * a footer cannot be read or has no row schema, when a match is a
-    * streaming sink's output (its `_spark_metadata` log decides which
-    * files count), or when one column name carries two types (or,
+    * driver from the footers' Spark row schemas (fields by name in
+    * first-seen order over the data files sorted by path, all
+    * nullable), and the paths the glob matched. None — take Spark's
+    * read — when the glob matches nothing or more data files than the
+    * discovery threshold, when a match holds a subdirectory
+    * (partitioned or nested data) or a summary file, when a footer
+    * cannot be read or has no row schema, when a match is a streaming
+    * sink's output (its `_spark_metadata` log decides which files
+    * count), or when one column name carries two types (or,
     * case-insensitively, two spellings). */
   private[sources] def footerSchema(spark: SparkSession,
-                                    glob: String): Option[StructType] = {
+                                    glob: String): Option[(StructType, Seq[String])] = {
     val threshold = spark.conf
       .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
     val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
@@ -77,6 +80,7 @@ object Scan {
             files.exists(f => f.isDirectory || f.getPath.getName.startsWith("_")) ||
             listed.exists(_.getPath.getName == "_spark_metadata")) None
         else mergeFields(files.map(rowSchema(conf, _)), caseSensitive)
+          .map(_ -> roots.map(_.getPath.toString))
       }
     }.toOption.flatten
   }

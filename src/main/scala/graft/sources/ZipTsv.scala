@@ -2,13 +2,20 @@ package graft.sources
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
+import java.time.LocalDate
 import java.util.zip.ZipInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.LongAccumulator
 
 import graft.functions.Ffiec
 import graft.schema.{ColSpec, FfiecSchema}
@@ -20,10 +27,13 @@ import graft.schema.{ColSpec, FfiecSchema}
   * Zip is not a splittable format, but an FFIEC corpus is thousands of
   * zips × ~50 members, so the (zip, member) pair is the parallelism
   * unit: one task streams one member through java.util.zip without
-  * extracting to disk, emitting typed rows. Repair rules (embedded
+  * extracting to disk, emitting typed rows in Catalyst's internal form,
+  * so no per-schema row serializer is generated. Repair rules (embedded
   * newline join, extra-tab squash) are pure line-level functions applied
   * in-stream; a `_repairs` column records what was applied per row so
-  * downstream can audit without a second pass.
+  * downstream can audit without a second pass. The pipeline's reads
+  * ([[Stamp]]) count repairs and problems in task-side accumulators
+  * instead, and carry the report date as a `date` column.
   */
 object ZipTsv {
 
@@ -31,6 +41,25 @@ object ZipTsv {
     * date, multipart markers parsed from the member name. */
   case class Member(zip: String, file: String, schedule: Option[String],
                     dateRaw: Option[String], part: Option[Int], nParts: Option[Int])
+
+  /** What a pipeline read carries instead of the `_repairs` and
+    * `_problems` columns: the report `date`, appended to every row as a
+    * `date` column (row data, so the generated code of a schedule whose
+    * columns do not change is the same every quarter), and counters the
+    * reading tasks add to — cells that failed their type, rows joined
+    * across an embedded newline, rows whose extra tabs were squashed.
+    * Spark merges the counts of successful tasks only, and a re-run
+    * task counts again, so only zero versus non-zero is exact. */
+  private[graft] case class Stamp(date: LocalDate, problems: LongAccumulator,
+                                  newlineJoins: LongAccumulator,
+                                  tabRepairs: LongAccumulator)
+
+  private[graft] object Stamp {
+    def apply(spark: SparkSession, date: LocalDate): Stamp = {
+      val sc = spark.sparkContext
+      Stamp(date, sc.longAccumulator, sc.longAccumulator, sc.longAccumulator)
+    }
+  }
 
   private val scheduleRe = """(?<=Schedule )[^ ]+""".r
   private val dateRe = """\d{8}""".r
@@ -154,7 +183,17 @@ object ZipTsv {
     * IDRSSD int, optional description row auto-detected, Eastern→UTC
     * submission timestamp, id-zero→NULL normalization
     * (ref: ffeic_read.R:434 read_por_from_zip + ffiec_process.R:291). */
-  def readPor(spark: SparkSession, zip: String, member: String): DataFrame = {
+  def readPor(spark: SparkSession, zip: String, member: String): DataFrame =
+    porRead(spark, zip, member, None)
+
+  /** [[readPor]] for the pipeline: tab repairs counted in `stamp`, its
+    * date as the last column. */
+  private[graft] def readPorStamped(spark: SparkSession, zip: String, member: String,
+                                    stamp: Stamp): DataFrame =
+    porRead(spark, zip, member, Some(stamp))
+
+  private def porRead(spark: SparkSession, zip: String, member: String,
+                      stamp: Option[Stamp]): DataFrame = {
     import org.apache.spark.sql.functions._
     val confMap = confToMap(new Configuration(spark.sparkContext.hadoopConfiguration))
     val (rawHeader, secondLine) = withMember(zip, member, confMap) { r =>
@@ -174,7 +213,7 @@ object ZipTsv {
     // POR rows do not terminate with a tab — the newline-join repair
     // only applies to schedule files (as in the reference).
     val df = readMemberRaw(spark, zip, member, spec, skipRows = skip,
-      repairNewlines = false)
+      repairNewlines = false, stamp)
     val idCols = Seq("financial_institution_zip_code", "fdic_certificate_number",
       "occ_charter_number", "ots_docket_number", "primary_aba_routing_number")
       .filter(df.columns.contains)
@@ -193,27 +232,51 @@ object ZipTsv {
   def readSchedule(spark: SparkSession, zip: String, members: Seq[String],
                    schemaMap: Map[String, String] = FfiecSchema.defaultSchemaMap,
                    overrides: Map[String, String] = FfiecSchema.defaultColOverrides)
-      : Seq[DataFrame] = {
+      : Seq[DataFrame] =
+    scheduleReads(spark, zip, members, schemaMap, overrides, None)
+
+  /** [[readSchedule]] for the pipeline: every member counts its repairs
+    * and problems in `stamp` and carries its date as the last column. */
+  private[graft] def readScheduleStamped(spark: SparkSession, zip: String,
+                                         members: Seq[String],
+                                         schemaMap: Map[String, String],
+                                         overrides: Map[String, String],
+                                         stamp: Stamp): Seq[DataFrame] =
+    scheduleReads(spark, zip, members, schemaMap, overrides, Some(stamp))
+
+  private def scheduleReads(spark: SparkSession, zip: String, members: Seq[String],
+                            schemaMap: Map[String, String],
+                            overrides: Map[String, String],
+                            stamp: Option[Stamp]): Seq[DataFrame] =
     members.map { m =>
       val header = memberHeader(spark, zip, m)
       val spec = FfiecSchema.colSpec(header, schemaMap, overrides)
-      readMember(spark, zip, m, spec)
+      readMemberRaw(spark, zip, m, spec, skipRows = 2, repairNewlines = true, stamp)
     }
-  }
 
   /** Read a single member with a pre-compiled ColSpec. One partition —
     * the member is the parallelism unit; callers union members. */
   def readMember(spark: SparkSession, zip: String, member: String,
                  spec: ColSpec): DataFrame =
-    readMemberRaw(spark, zip, member, spec, skipRows = 2)
+    readMemberRaw(spark, zip, member, spec, skipRows = 2, repairNewlines = true, None)
 
+  private val newlineJoin = UTF8String.fromString("newline-join")
+  private val tabRepair = UTF8String.fromString("tab-repair")
+
+  /** The one member reader: `spec`'s columns, then `_repairs` and
+    * `_problems`, or with a `stamp` the date column alone. */
   private def readMemberRaw(spark: SparkSession, zip: String, member: String,
-                            spec: ColSpec, skipRows: Int,
-                            repairNewlines: Boolean = true): DataFrame = {
+                            spec: ColSpec, skipRows: Int, repairNewlines: Boolean,
+                            stamp: Option[Stamp]): DataFrame = {
     val confMap = confToMap(new Configuration(spark.sparkContext.hadoopConfiguration))
-    val schema = spec.sparkSchema
-      .add("_repairs", ArrayType(StringType))
-      .add("_problems", IntegerType)
+    val schema = stamp match {
+      case Some(_) => spec.sparkSchema.add("date", DateType)
+      case None => spec.sparkSchema
+        .add("_repairs", ArrayType(StringType))
+        .add("_problems", IntegerType)
+    }
+    val (n, width) = (spec.arity, schema.size)
+    val days = stamp.fold(0)(_.date.toEpochDay.toInt)
     val rdd = spark.sparkContext.parallelize(Seq((zip, member)), 1).flatMap {
       case (z, m) =>
         val zin = openStream(z, confMap)
@@ -233,14 +296,24 @@ object ZipTsv {
             else dataLines.map((_, false))
           repaired.map { case (raw, joined) =>
             val (fixed, tabRepaired) = fixExtraTabs(raw, spec.expectedCells)
-            val repairs =
-              (if (joined) Seq("newline-join") else Nil) ++
-              (if (tabRepaired) Seq("tab-repair") else Nil)
-            val (values, problems) = spec.parseLineCounted(fixed)
-            Row.fromSeq(values :+ repairs :+ problems)
+            val values = new Array[Any](width)
+            val problems = spec.parseInto(fixed, values)
+            stamp match {
+              case Some(st) =>
+                values(n) = days
+                if (problems > 0) st.problems.add(problems)
+                if (joined) st.newlineJoins.add(1)
+                if (tabRepaired) st.tabRepairs.add(1)
+              case None =>
+                values(n) = new GenericArrayData(
+                  Seq(joined -> newlineJoin, tabRepaired -> tabRepair)
+                    .collect { case (true, r) => r })
+                values(n + 1) = problems
+            }
+            new GenericInternalRow(values): InternalRow
           }
         }
     }
-    spark.createDataFrame(rdd, schema)
+    GraftBridge.internalCreateDataFrame(spark, rdd, schema)
   }
 }

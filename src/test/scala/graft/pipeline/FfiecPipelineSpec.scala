@@ -30,20 +30,22 @@ class FfiecPipelineSpec extends SparkSpec {
   /** Three schedules (RC in two parts, RCB, RI) and a POR member: every
     * output kind — wide, all five long dtypes, metadata, POR. `rcRate`
     * is bank 39's RCON3838 cell; a bare number there is a pct_to_prop
-    * error in a percent-bearing column. */
-  private def threeScheduleZip(dir: File, rcRate: String = "3%"): String =
-    writeZip(dir, "FFIEC CDR Call Bulk All Schedules 03312024.zip",
-      "FFIEC CDR Call Schedule RC 03312024(1 of 2).txt" ->
+    * error in a percent-bearing column. `d` is the MMDDYYYY date in the
+    * zip and member names. */
+  private def threeScheduleZip(dir: File, rcRate: String = "3%",
+                               d: String = "03312024"): String =
+    writeZip(dir, s"FFIEC CDR Call Bulk All Schedules $d.zip",
+      s"FFIEC CDR Call Schedule RC $d(1 of 2).txt" ->
         "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t100.5\t\n38\t200.0\t\n",
-      "FFIEC CDR Call Schedule RC 03312024(2 of 2).txt" ->
+      s"FFIEC CDR Call Schedule RC $d(2 of 2).txt" ->
         ("IDRSSD\tRCFD0020\tRCON3838\t\nID\tOther\tRate\t\n" +
          s"37\t7.5\t28%\t\n39\t9.0\t$rcRate\t\n"),
-      "FFIEC CDR Call Schedule RCB 03312024.txt" ->
+      s"FFIEC CDR Call Schedule RCB $d.txt" ->
         ("IDRSSD\tRCFDB999\tRCON9999\tTEXTB\t\nID\tFlag\tAs of\tNote\t\n" +
          "37\ttrue\t20240331\tfirst\t\n39\tfalse\t0\tthird\t\n"),
-      "FFIEC CDR Call Schedule RI 03312024.txt" ->
+      s"FFIEC CDR Call Schedule RI $d.txt" ->
         "IDRSSD\tRIAD4340\t\nID\tNet income\t\n37\t42\t\n38\tCONF\t\n",
-      "FFIEC CDR Call Bulk POR 03312024.txt" ->
+      s"FFIEC CDR Call Bulk POR $d.txt" ->
         ("IDRSSD\tFinancial Institution Name\tFDIC Certificate Number\n" +
          "37\tFirst Bank\t0\n38\tSecond Bank\t1234\n"),
       "Readme.txt" -> "ignore")
@@ -678,7 +680,8 @@ class FfiecPipelineSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       FfiecPipeline.processZip(spark, dupZip, outDir.getAbsolutePath, schemaMap)
     }
-    assert(e.getMessage.contains("IDRSSD, date, item"), e.getMessage)
+    assert(e.getMessage.contains("Found 2 rows sharing a key on {IDRSSD, date, item}"),
+      e.getMessage)
     assert(!outDir.list().exists(longTable.matches), outDir.list().mkString(", "))
     // tolerant processAll: the zip becomes one error row, a good zip lands
     writeZip(dir, "FFIEC CDR Call Bulk All Schedules 06302024.zip",
@@ -744,5 +747,64 @@ class FfiecPipelineSpec extends SparkSpec {
       .collect().map(render).toSeq == Seq(
         "37|2024-03-31|1.5|null", "38|2024-03-31|2.5|null",
         "37|2024-06-30|1.5|7.5", "38|2024-06-30|2.5|null"))
+  }
+
+  test("codegen footprint: observed metrics only for the pure check, no " +
+    "window in a long write, and the same generated code in every quarter") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    /** The write plans of `processZip` over the three-schedule zip for
+      * one quarter, by table name without the date. */
+    def writePlans(d: String): Map[String, SparkPlan] = {
+      val dir = java.nio.file.Files.createTempDirectory("ffiec_raw15").toFile
+      val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq15").toFile
+      val zip = threeScheduleZip(dir, d = d)
+      val plans = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]()
+      val fence = new java.util.concurrent.CountDownLatch(1)
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+          val plan = qe.executedPlan
+          Plans.collectFirst(plan) { case w: DataWritingCommandExec => w.cmd } match {
+            case Some(c: InsertIntoHadoopFsRelationCommand) =>
+              plans.put(c.outputPath.getName.replaceAll("_\\d{8}\\.parquet$", ""), plan)
+            case _ if qe.analyzed.output.map(_.name) == Seq("codegen_fence") =>
+              fence.countDown()
+            case _ =>
+          }
+        }
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        FfiecPipeline.processZip(spark, zip, outDir.getAbsolutePath, threeScheduleMap)
+        spark.range(1).toDF("codegen_fence").collect()
+        assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toMap
+    }
+    val q1 = writePlans("03312024")
+    val q2 = writePlans("06302024")
+    val tables = Seq("ffiec_rc", "ffiec_rcb", "ffiec_ri", "por") ++
+      Seq("float", "int", "str", "date", "bool").map(t => s"ffiec_$t")
+    assert(tables.forall(t => q1.contains(t) && q2.contains(t)), q1.keys.mkString(", "))
+    for ((t, plan) <- q1) {
+      val observed = Plans.collect(plan) { case c: CollectMetricsExec => c.name }
+      assert(observed.forall(_.startsWith("pure_")), s"$t: $observed")
+    }
+    assert(Plans.collect(q1("ffiec_rc")) { case c: CollectMetricsExec => c }.size == 1)
+    for (t <- tables.drop(4)) // the long tables
+      assert(Plans.collect(q1(t)) { case w: WindowExec => w }.isEmpty, t)
+    for (t <- tables) {
+      val (c1, c2) = (codegenStringSeq(q1(t)).map(_._2), codegenStringSeq(q2(t)).map(_._2))
+      assert(c1.nonEmpty, s"$t: no whole-stage code")
+      assert(c1 == c2, s"$t: the quarters' generated code differs")
+    }
   }
 }

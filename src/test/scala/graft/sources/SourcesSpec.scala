@@ -69,6 +69,19 @@ class ZipTsvSpec extends SparkSpec {
     val r40 = rows(3) // tabs past the expected arity squashed to spaces
     assert(r40.getString(2) == "good" && r40.getDate(3).toString == "2024-03-31")
     assert(r40.getSeq[String](repairsIdx).contains("tab-repair"))
+    // the audit columns, exactly: one repair list and problem count per
+    // row; a boolean-typed RCFD0010 makes every number a problem
+    assert(df.schema.simpleString == "struct<IDRSSD:int,RCFD0010:double," +
+      "RCON8678:string,RCON9999:date,_repairs:array<string>,_problems:int>")
+    def audit(d: org.apache.spark.sql.DataFrame) = d.orderBy("IDRSSD")
+      .select("_repairs", "_problems").collect()
+      .map(r => (r.getSeq[String](0), r.getInt(1))).toSeq
+    assert(audit(df) == Seq((Nil, 0), (Nil, 0), (Seq("newline-join"), 0),
+      (Seq("tab-repair"), 0)))
+    val asBool = ZipTsv.readMember(spark, zip, members.head.file,
+      FfiecSchema.colSpec(header, schemaMap = Map("RCFD0010" -> "xbrli:booleanItemType")))
+    assert(audit(asBool) == Seq((Nil, 1), (Nil, 0), (Seq("newline-join"), 1),
+      (Seq("tab-repair"), 1)))
   }
 
   test("member reads close their zip stream when the task ends") {
@@ -165,6 +178,8 @@ class ScanSpec extends SparkSpec {
     val glob = s"$dir/rc_*.parquet"
     val merged = Scan.footerSchema(spark, glob)
     assert(merged.isDefined, "a small glob must take the driver-side merge")
+    assert(merged.get._2.map(new org.apache.hadoop.fs.Path(_).getName).sorted ==
+      Seq("rc_20240331.parquet", "rc_20240630.parquet", "rc_20240930.parquet"))
     val want = mergeSchemaRead(glob)
     val df = Scan.unionByName(spark, glob)
     assert(df.schema == want.schema, s"${df.schema.treeString}\n${want.schema.treeString}")
@@ -172,6 +187,40 @@ class ScanSpec extends SparkSpec {
       "RCON8678", "RCFD0020", "nested"))
     assert(df.orderBy("IDRSSD").collect().toSeq ==
       want.orderBy("IDRSSD").collect().toSeq)
+  }
+
+  test("unionByName reads a small glob's resolved paths: Spark logs no " +
+    "metadata-log lookup of the literal glob; an empty glob still fails") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("scan_paths").toFile
+    dir.deleteOnExit()
+    for (d <- Seq("20240331", "20240630"))
+      Seq((1, 10.0)).toDF("IDRSSD", "RCFD0010").write.parquet(s"$dir/rc_$d.parquet")
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("scan-paths", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    val missing = try {
+      assert(Scan.unionByName(spark, s"$dir/rc_*.parquet").count() == 2)
+      intercept[Exception](Scan.unionByName(spark, s"$dir/none_*.parquet"))
+    } finally {
+      root.removeAppender("scan-paths")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(missing.getMessage.contains("does not exist"), missing.getMessage)
+    val lookups = logged.toArray.toSeq.map(_.toString)
+      .filter(m => m.contains("metadata directory") && m.contains("rc_*"))
+    assert(lookups.isEmpty, lookups.mkString("\n"))
   }
 
   test("unionByName raises mergeSchema's error on a column type conflict") {
