@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-contract bench main: times every SparkEntry query at the
   * target scale factor and emits ONE JSON line.
@@ -59,27 +58,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // match the gate session
-      .config("spark.ui.enabled", "false")
-      // collect-based aggregates (posting lists, signatures, baskets)
-      // sort-fall-back at Spark's ultra-conservative 128 in-memory
-      // groups; buffers here are cap-bounded (capped_collect_list /
-      // maxDf / maxBlock), so a few thousand in-memory groups per
-      // task are small and skip the per-partition sort (~15% on the
-      // set-similarity queries, measured round 8). Round-9 A/B on an
-      // idle host EXONERATED this config for the r8 driver-bench
-      // drift: 4096 vs 128 over the drifted family (q98/q99/q115/
-      // q116/q75, best-of-3) = 12.46 vs 13.28 s total — 4096 faster
-      // or tied on every query (q98 2.10 vs 2.41, q99 1.90 vs 2.12,
-      // q75 3.08 vs 3.50). The drift was host state. Env knob kept
-      // for future controlled comparisons.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_FALLBACK_THRESHOLD", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // JIT/codegen warmup so the first timed query doesn't absorb
     // session bring-up; uses the smallest sf regardless of target.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }

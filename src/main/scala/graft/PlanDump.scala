@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Optimization-round instrumentation (guide §1.1/§7.2): write the
@@ -17,15 +16,7 @@ object PlanDump {
     val tag = if (args.length > 1) args(1) else "before"
     val prefixes = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_FALLBACK_THRESHOLD", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     GraftExtensions.register(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val outDir = java.nio.file.Paths.get("plans",

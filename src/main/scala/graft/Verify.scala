@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,17 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: cap-bounded collect buffers, skip the 128-group
-      // sort-based fallback
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     GraftExtensions.register(spark) // SQL surface live in the gate session
     new java.io.File(outDir).mkdirs()
     // Dev knob mirroring Bench's: SPARK_GRAFT_VERIFY_ONLY=q82 dumps just

@@ -16,38 +16,37 @@ import org.apache.spark.sql.functions._
   * stay one-sided (never undercount) through any merge/compaction
   * sequence because addition preserves the per-cell upper-bound
   * property. Layout: `path/params` (d, width), `path/cells`
-  * (row, col, c) across shard files.
+  * (row, col, c) across shard files — a [[graft.store.ShardedSketch]]
+  * merged by sum.
   */
 object CmsStore {
 
+  private val sketch = graft.store.ShardedSketch("cells",
+    Seq("row", "col"), "c", sum)
+
   private def readParams(spark: SparkSession, path: String): (Int, Int) = {
-    val r = spark.read.parquet(s"$path/params").select("d", "width").head()
-    (r.getInt(0), r.getInt(1))
+    val r = sketch.params(spark, path)
+    (r.getAs[Int]("d"), r.getAs[Int]("width"))
   }
 
   /** Create the store from the first batch (overwrites `path`). */
   def write(df: DataFrame, textCol: String, path: String,
             d: Int = 4, width: Int = 1024): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Seq((d, width)).toDF("d", "width")
-      .write.mode("overwrite").parquet(s"$path/params")
-    TextAnalytics.countMinSketch(df, textCol, d, width)
-      .write.mode("overwrite").parquet(s"$path/cells")
+    import df.sparkSession.implicits._
+    sketch.create(Seq((d, width)).toDF("d", "width"),
+      TextAnalytics.countMinSketch(df, textCol, d, width), path)
   }
 
   /** Ingest another batch as a new shard (append-only cell rows). */
   def append(df: DataFrame, textCol: String, path: String): Unit = {
     val (d, width) = readParams(df.sparkSession, path)
-    TextAnalytics.countMinSketch(df, textCol, d, width)
-      .write.mode("append").parquet(s"$path/cells")
+    sketch.append(TextAnalytics.countMinSketch(df, textCol, d, width), path)
   }
 
   /** Merged cell table (cell-wise sum across all shards) — the sketch
     * of the concatenated batches. */
   def cells(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/cells")
-      .groupBy("row", "col").agg(sum("c").as("c"))
+    sketch.merged(spark, path)
 
   /** Frequency estimates for `terms` over the merged shards. */
   def estimate(spark: SparkSession, path: String,
@@ -58,18 +57,7 @@ object CmsStore {
 
   /** Rewrite the shard backlog as one merged shard (estimates
     * unchanged — addition is associative). Returns (component, rows)
-    * like the other stores. */
-  def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    cells(spark, path).write.parquet(s"$tmp/cells")
-    fs.delete(new Path(s"$path/cells"), true)
-    fs.rename(new Path(s"$tmp/cells"), new Path(s"$path/cells"))
-    fs.delete(new Path(tmp), true)
-    import spark.implicits._
-    Seq(("cells", spark.read.parquet(s"$path/cells").count()))
-      .toDF("component", "rows")
-  }
+    * — the [[graft.store.ShardedSketch]] swap. */
+  def compactStore(spark: SparkSession, path: String): DataFrame =
+    sketch.compact(spark, path)
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.{Component, Maintenance, Tombstones}
 
 /** Persisted EMBEDDING store — [[MinhashStore]]'s twin at the semantic
   * layer: fingerprint the corpus once as a cell-partitioned IVF index
@@ -18,9 +19,9 @@ import org.apache.spark.sql.functions._
   *   - `cells/`     (id, vec) partitioned by cell — probes read only
   *                  the probed cells' directories.
   *
-  * Maintenance lifecycle (MinhashStore parity): [[delete]] tombstones
-  * ids (probes stop reporting them immediately), [[compactStore]]
-  * reclaims their bytes, and [[drift]] measures centroid staleness —
+  * Maintenance lifecycle ([[graft.store]]'s tombstone table, swap and
+  * maintenance check): [[delete]] tombstones ids (probes stop
+  * reporting them immediately), [[compactStore]] reclaims their bytes, and [[drift]] measures centroid staleness —
   * appends assign against frozen centroids, so rising drift is the
   * signal to schedule the periodic full rebuild ([[write]] on the
   * accumulated corpus), the standard IVF maintenance trade.
@@ -50,7 +51,7 @@ object EmbeddingStore {
             batch: DataFrame, idCol: String, vecCol: String,
             tau: Double = 0.95, nprobe: Int = 4): DataFrame =
     Knn.searchIvf(spark, path, batch, idCol, vecCol, k = 1, nprobe,
-      exclude = tombstonesOpt(spark, path))
+      exclude = Tombstones.Default.read(spark, path))
       .where(col("sim") >= tau)
       .select(col("query_id").as("id_new"),
         col("neighbor_id").as("id_store"), col("sim"))
@@ -60,18 +61,10 @@ object EmbeddingStore {
     * [[compactStore]]. Append-only metadata — no store rewrite — so it
     * is safe per-batch (takedowns, retraction feeds). The tombstone
     * set must stay broadcast-scale between compactions (it rides into
-    * every probe's cells scan as a broadcast anti-join). Same contract
-    * as [[MinhashStore.delete]]. */
+    * every probe's cells scan as a broadcast anti-join). The table is
+    * [[graft.store.Tombstones.Default]]. */
   def delete(ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
-
-  private def tombstonesOpt(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).select("id").distinct())
-    else None
-  }
+    Tombstones.Default.add(ids, col(idCol), path)
 
   /** Threshold-driven store maintenance (round 15 —
     * [[graft.operators.Knn.maintainIvfStore]]'s embedding-store twin,
@@ -85,54 +78,40 @@ object EmbeddingStore {
     * job. Returns Some(manifest) when maintenance ran. */
   def maintainStore(spark: SparkSession, path: String,
                     maxTombstoneFrac: Double = 0.1,
-                    maxFilesPerCell: Int = 0): Option[DataFrame] = {
-    require(maxTombstoneFrac >= 0.0,
-      s"need maxTombstoneFrac >= 0, got $maxTombstoneFrac")
-    val rows = spark.read.parquet(s"$path/cells").select("id").count()
-    val nTomb = tombstonesOpt(spark, path).map(_.count()).getOrElse(0L)
-    val filesOver = maxFilesPerCell > 0 &&
-      !Knn.storeFileStats(spark, path, "cells")
-        .where(col("n_files") > maxFilesPerCell).isEmpty
-    if ((rows > 0 && nTomb.toDouble / rows > maxTombstoneFrac) ||
-        filesOver)
-      Some(compactStore(spark, path))
-    else None
-  }
+                    maxFilesPerCell: Int = 0): Option[DataFrame] =
+    Maintenance.run(maxTombstoneFrac,
+      rows = spark.read.parquet(s"$path/cells").select("id").count(),
+      tombstones = Tombstones.Default.count(spark, path),
+      overBudget = Maintenance.partitionsOver(spark, path, "cells",
+        maxFilesPerCell).nonEmpty
+    )(compactStore(spark, path))
 
   /** Rewrite `cells/` minus tombstones (cell partitioning preserved —
     * probe pruning is untouched) and drop the tombstone set. Centroids
     * are NOT retrained: compaction reclaims bytes, it does not answer
     * distribution shift — that is [[drift]]'s job, and the answer is a
-    * full [[write]] rebuild. Run in a maintenance window (the
-    * directory swap is not atomic w.r.t. concurrent probes). Returns a
-    * manifest: (component, rows). AQE sizes the anti-join — a
-    * compaction may carry an arbitrarily large tombstone backlog, so
-    * no broadcast hint here (same posture as
-    * [[MinhashStore.compactStore]]). */
+    * full [[write]] rebuild. The swap is
+    * [[graft.store.Component.replace]] (run it in a maintenance
+    * window). Returns a manifest: (component, rows). AQE sizes the
+    * anti-join — a compaction may carry an arbitrarily large tombstone
+    * backlog, so no broadcast hint here. */
   def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tomb = tombstonesOpt(spark, path)
+    val tomb = Tombstones.Default.read(spark, path)
     val nTomb = tomb.map(_.count()).getOrElse(0L)
     val cells = spark.read.parquet(s"$path/cells")
     val kept = tomb.fold(cells)(t =>
       cells.join(t, cells("id") === t("id"), "left_anti"))
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
     // one shuffle partition per cell → one file per cell: compaction
     // COALESCES the ≥1-file-per-touched-cell-per-batch accretion of
     // the append/ingest paths (round 15 — [[maintainStore]]'s
     // files-per-cell trigger relies on this resetting the count)
-    kept.repartition(col("cell"))
-      .write.partitionBy("cell").parquet(s"$tmp/cells")
-    fs.delete(new Path(s"$path/cells"), true)
-    fs.rename(new Path(s"$tmp/cells"), new Path(s"$path/cells"))
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(s"$path/tombstones"), true)
-    import spark.implicits._
-    Seq(("cells", spark.read.parquet(s"$path/cells").count()),
-        ("tombstones_applied", nTomb))
-      .toDF("component", "rows")
+    Component.replace(spark, path, "cells") { tmp =>
+      kept.repartition(col("cell"))
+        .write.partitionBy("cell").parquet(s"$tmp/cells")
+    }
+    Tombstones.Default.clear(spark, path)
+    Component.manifest(spark, Component.rows(spark, path, "cells"),
+      "tombstones_applied" -> nTomb)
   }
 
   /** Centroid-drift metric — the rebuild scheduler's input. One row:
@@ -154,7 +133,7 @@ object EmbeddingStore {
       spark.read.parquet(s"$path/centroids")
         .select(col("cell"), col("cvec")))
     val cells = spark.read.parquet(s"$path/cells")
-    val live = tombstonesOpt(spark, path).fold(cells)(t =>
+    val live = Tombstones.Default.read(spark, path).fold(cells)(t =>
       cells.join(broadcast(t), cells("id") === t("id"), "left_anti"))
     val microDist = round(
       (lit(1.0) - graft.functions.Vectors.cosine(col("vec"), col("cvec"))) * 1e6)

@@ -25,14 +25,17 @@ import org.apache.spark.sql.functions._
   * bounded by strata·bins regardless of corpus size; the corpus is
   * never re-read after ingest; compaction bounds the backlog at
   * strata·bins rows. Layout: `path/params` (lo, width, bins),
-  * `path/cells` (key, bin, n) across shard files.
+  * `path/cells` (key, bin, n) across shard files — a
+  * [[graft.store.ShardedSketch]] merged by sum.
   */
 object HistStore {
 
+  private val sketch = graft.store.ShardedSketch("cells",
+    Seq("key", "bin"), "n", sum)
+
   private def readParams(spark: SparkSession, path: String): (Long, Long, Int) = {
-    val r = spark.read.parquet(s"$path/params")
-      .select("lo", "width", "bins").head()
-    (r.getLong(0), r.getLong(1), r.getInt(2))
+    val r = sketch.params(spark, path)
+    (r.getAs[Long]("lo"), r.getAs[Long]("width"), r.getAs[Int]("bins"))
   }
 
   /** The clamp-to-edge binning rule (replayed verbatim in the q173
@@ -50,12 +53,9 @@ object HistStore {
   def write(df: DataFrame, keyCol: String, valueCol: String, path: String,
             lo: Long, width: Long, bins: Int): Unit = {
     require(width > 0 && bins > 0, "need positive bin width and count")
-    val spark = df.sparkSession
-    import spark.implicits._
-    Seq((lo, width, bins)).toDF("lo", "width", "bins")
-      .write.mode("overwrite").parquet(s"$path/params")
-    shard(df, keyCol, valueCol, lo, width, bins)
-      .write.mode("overwrite").parquet(s"$path/cells")
+    import df.sparkSession.implicits._
+    sketch.create(Seq((lo, width, bins)).toDF("lo", "width", "bins"),
+      shard(df, keyCol, valueCol, lo, width, bins), path)
   }
 
   /** Ingest another batch as a new shard (append-only cell rows, zero
@@ -63,15 +63,13 @@ object HistStore {
   def append(df: DataFrame, keyCol: String, valueCol: String,
              path: String): Unit = {
     val (lo, width, bins) = readParams(df.sparkSession, path)
-    shard(df, keyCol, valueCol, lo, width, bins)
-      .write.mode("append").parquet(s"$path/cells")
+    sketch.append(shard(df, keyCol, valueCol, lo, width, bins), path)
   }
 
   /** Merged cell table (cell-wise sum across all shards) — exactly the
     * histogram of the concatenated batches. */
   def cells(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/cells")
-      .groupBy("key", "bin").agg(sum("n").as("n"))
+    sketch.merged(spark, path)
 
   /** Per-key quantile read over the merged shards: for each q (in
     * MICROS — 500000 = median), the left edge of the first bin whose
@@ -155,18 +153,8 @@ object HistStore {
   }
 
   /** Rewrite the shard backlog as one merged shard (reads unchanged —
-    * addition is associative). Returns (component, rows). */
-  def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    cells(spark, path).write.parquet(s"$tmp/cells")
-    fs.delete(new Path(s"$path/cells"), true)
-    fs.rename(new Path(s"$tmp/cells"), new Path(s"$path/cells"))
-    fs.delete(new Path(tmp), true)
-    import spark.implicits._
-    Seq(("cells", spark.read.parquet(s"$path/cells").count()))
-      .toDF("component", "rows")
-  }
+    * addition is associative). Returns (component, rows) — the
+    * [[graft.store.ShardedSketch]] swap. */
+  def compactStore(spark: SparkSession, path: String): DataFrame =
+    sketch.compact(spark, path)
 }

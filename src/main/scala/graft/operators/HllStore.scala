@@ -16,38 +16,37 @@ import org.apache.spark.sql.functions._
   * regardless of corpus size; ingest cost is the hllRegisters
   * keys-only shuffle; estimate cost is register-table-scale only —
   * the corpus is never re-read. Layout: `path/params` (p),
-  * `path/registers` (key, bucket, r) across shard files.
+  * `path/registers` (key, bucket, r) across shard files — a
+  * [[graft.store.ShardedSketch]] merged by max.
   */
 object HllStore {
 
+  private val sketch = graft.store.ShardedSketch("registers",
+    Seq("key", "bucket"), "r", max)
+
   private def readP(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/params").select("p").head().getInt(0)
+    sketch.params(spark, path).getAs[Int]("p")
 
   /** Create the store from the first batch (overwrites `path`). */
   def write(df: DataFrame, keyCol: String, valueCol: String, path: String,
             p: Int = 10): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Seq(p).toDF("p").write.mode("overwrite").parquet(s"$path/params")
-    TextAnalytics.hllRegisters(df, keyCol, valueCol, p)
-      .write.mode("overwrite").parquet(s"$path/registers")
+    import df.sparkSession.implicits._
+    sketch.create(Seq(p).toDF("p"),
+      TextAnalytics.hllRegisters(df, keyCol, valueCol, p), path)
   }
 
   /** Ingest another batch as a new shard: append-only register rows,
     * no coordination with existing shards or concurrent appenders. */
   def append(df: DataFrame, keyCol: String, valueCol: String,
-             path: String): Unit = {
-    val p = readP(df.sparkSession, path)
-    TextAnalytics.hllRegisters(df, keyCol, valueCol, p)
-      .write.mode("append").parquet(s"$path/registers")
-  }
+             path: String): Unit =
+    sketch.append(TextAnalytics.hllRegisters(df, keyCol, valueCol,
+      readP(df.sparkSession, path)), path)
 
   /** Merged register table (cell-wise max across all shards) — the
     * union sketch, identical to single-pass registers over the
     * concatenated batches. */
   def registers(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/registers")
-      .groupBy("key", "bucket").agg(max("r").as("r"))
+    sketch.merged(spark, path)
 
   /** Per-key cardinality estimates over the merged shards:
     * (key, n_regs, est_floor) — see [[TextAnalytics.hllEstimate]]. */
@@ -57,18 +56,7 @@ object HllStore {
   /** Rewrite the shard backlog as ONE merged shard (estimates are
     * unchanged — merge is associative/idempotent; this just bounds
     * the register-row count at |keys|·2^p again). Returns
-    * (component, rows) like MinhashStore.compactStore. */
-  def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    registers(spark, path).write.parquet(s"$tmp/registers")
-    fs.delete(new Path(s"$path/registers"), true)
-    fs.rename(new Path(s"$tmp/registers"), new Path(s"$path/registers"))
-    fs.delete(new Path(tmp), true)
-    import spark.implicits._
-    Seq(("registers", spark.read.parquet(s"$path/registers").count()))
-      .toDF("component", "rows")
-  }
+    * (component, rows) — the [[graft.store.ShardedSketch]] swap. */
+  def compactStore(spark: SparkSession, path: String): DataFrame =
+    sketch.compact(spark, path)
 }

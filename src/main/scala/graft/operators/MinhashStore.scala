@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.{Component, Maintenance, Tombstones}
 
 /** Persisted MinHash fingerprint store — the dedup analog of the
   * persisted IVF index ([[Knn.writeIvfIndex]]): fingerprint the corpus
@@ -115,17 +116,10 @@ object MinhashStore {
     * rewrite happens here, so it is safe to call per-batch (GDPR-style
     * takedowns, retraction feeds). The tombstone set must stay
     * broadcast-scale between compactions (it rides into the probe as a
-    * broadcast anti-join); compaction zeroes it. */
+    * broadcast anti-join); compaction zeroes it. The table is
+    * [[graft.store.Tombstones.Default]]. */
   def delete(ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
-
-  private def tombstonesOpt(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).select("id").distinct())
-    else None
-  }
+    Tombstones.Default.add(ids, col(idCol), path)
 
   /** Threshold-driven store maintenance (round 15 —
     * [[graft.operators.Knn.maintainIvfStore]]'s fingerprint-store
@@ -140,24 +134,19 @@ object MinhashStore {
     * maintenance ran, None when within budget. */
   def maintainStore(spark: SparkSession, path: String,
                     maxTombstoneFrac: Double = 0.1,
-                    maxAppendShards: Int = 0): Option[DataFrame] = {
-    require(maxTombstoneFrac >= 0.0,
-      s"need maxTombstoneFrac >= 0, got $maxTombstoneFrac")
-    val sigs = spark.read.parquet(s"$path/sigs").select("id").count()
-    val nTomb = tombstonesOpt(spark, path).map(_.count()).getOrElse(0L)
-    val shardsOver = maxAppendShards > 0 &&
-      Knn.storeFileStats(spark, path, "bands")
-        .agg(sum("n_files")).head().getLong(0) > maxAppendShards
-    if ((sigs > 0 && nTomb.toDouble / sigs > maxTombstoneFrac) ||
-        shardsOver)
-      Some(compactStore(spark, path))
-    else None
-  }
+                    maxAppendShards: Int = 0): Option[DataFrame] =
+    Maintenance.run(maxTombstoneFrac,
+      rows = spark.read.parquet(s"$path/sigs").select("id").count(),
+      tombstones = Tombstones.Default.count(spark, path),
+      overBudget = maxAppendShards > 0 &&
+        Component.fileStats(spark, path, "bands")
+          .agg(sum("n_files")).head().getLong(0) > maxAppendShards
+    )(compactStore(spark, path))
 
   /** Rewrite the store minus tombstones and collapse the per-append
-    * `bucket_counts` shards into one exact recount. Run this in a
-    * maintenance window (the component swap is not atomic with respect
-    * to concurrent probes). Returns a manifest:
+    * `bucket_counts` shards into one exact recount, through
+    * [[graft.store.Component.replace]] (run it in a maintenance
+    * window). Returns a manifest:
     * (component, rows) for sigs/bands plus the applied tombstone count.
     *
     * Compaction restores the two properties appends and deletes erode:
@@ -165,9 +154,7 @@ object MinhashStore {
     * pre-compact cap is conservative — counts still include tombstoned
     * rows), and the counts scan stops paying one shard per append. */
   def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tomb = tombstonesOpt(spark, path)
+    val tomb = Tombstones.Default.read(spark, path)
     val nTomb = tomb.map(_.count()).getOrElse(0L)
     // no broadcast hint here: the probe-path anti-join broadcasts
     // because its candidate frame is batch-scale, but a compaction may
@@ -175,31 +162,23 @@ object MinhashStore {
     // broadcast vs shuffle from the actual size
     def minus(df: DataFrame): DataFrame = tomb.fold(df)(t =>
       df.join(t, df("id") === t("id"), "left_anti"))
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    minus(spark.read.parquet(s"$path/sigs")).write.parquet(s"$tmp/sigs")
-    // one shuffle partition per band → one file per band: compaction
-    // coalesces the per-append shard accretion ([[maintainStore]]'s
-    // maxAppendShards trigger relies on this resetting the count)
-    minus(spark.read.parquet(s"$path/bands"))
-      .repartition(col("band"))
-      .write.partitionBy("band").parquet(s"$tmp/bands")
-    // recount from the compacted bands already on disk — one shard,
-    // exact, tombstone-free
-    spark.read.parquet(s"$tmp/bands")
-      .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .write.parquet(s"$tmp/bucket_counts")
-    Seq("sigs", "bands", "bucket_counts").foreach { c =>
-      fs.delete(new Path(s"$path/$c"), true)
-      fs.rename(new Path(s"$tmp/$c"), new Path(s"$path/$c"))
+    Component.replace(spark, path, "sigs", "bands", "bucket_counts") { tmp =>
+      minus(spark.read.parquet(s"$path/sigs")).write.parquet(s"$tmp/sigs")
+      // one shuffle partition per band → one file per band: compaction
+      // coalesces the per-append shard accretion ([[maintainStore]]'s
+      // maxAppendShards trigger relies on this resetting the count)
+      minus(spark.read.parquet(s"$path/bands"))
+        .repartition(col("band"))
+        .write.partitionBy("band").parquet(s"$tmp/bands")
+      // recount from the compacted bands already on disk — one shard,
+      // exact, tombstone-free
+      spark.read.parquet(s"$tmp/bands")
+        .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
+        .write.parquet(s"$tmp/bucket_counts")
     }
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(s"$path/tombstones"), true)
-    import spark.implicits._
-    Seq(("sigs", spark.read.parquet(s"$path/sigs").count()),
-        ("bands", spark.read.parquet(s"$path/bands").count()),
-        ("tombstones_applied", nTomb))
-      .toDF("component", "rows")
+    Tombstones.Default.clear(spark, path)
+    Component.manifest(spark, Component.rows(spark, path, "sigs"),
+      Component.rows(spark, path, "bands"), "tombstones_applied" -> nTomb)
   }
 
   /** Near-dup pairs between `batch` docs and store docs:
@@ -252,7 +231,7 @@ object MinhashStore {
     // Tombstoned docs drop out of the candidate set here (broadcast
     // anti-join over the small candidate frame) — deleted history can
     // never re-surface as a pair even before compaction reclaims it.
-    val cand = tombstonesOpt(spark, path).fold(candRaw)(t =>
+    val cand = Tombstones.Default.read(spark, path).fold(candRaw)(t =>
       candRaw.join(broadcast(t), candRaw("id_store") === t("id"), "left_anti"))
     // ONE pass over the store's signatures: candidates broadcast in,
     // then the (small) matched set joins the batch signatures.

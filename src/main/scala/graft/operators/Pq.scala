@@ -488,53 +488,62 @@ object Pq {
       () => books =
         if (trainIters > 0) trainCodebooksKmeans(corpus, idCol, vecCol, m, k, dim, trainIters)
         else trainCodebooks(corpus, idCol, vecCol, m, k, dim)))
-    // One file per cell, rows SORTED BY id: the re-rank pass filters the
-    // vec scan by the shortlisted ids, and sorted row groups give that
-    // filter tight min/max stats to prune with. `keep` (round 14):
-    // attribute columns ride inside the cell directories — the
-    // filtered-search handle for the coded probe (q345's discipline on
-    // the compressed family).
+    // `keep` (round 14): attribute columns ride inside the cell
+    // directories — the filtered-search handle for the coded probe
+    // (q345's discipline on the compressed family).
     DriverPool.awaitAll(spark, Seq(
       () => books.zipWithIndex.flatMap { case (cws, s) =>
           cws.zipWithIndex.map { case (cw, code) => (s, code, cw.toSeq) }
         }.toSeq.toDF("sub", "code", "cw")
         .write.mode("overwrite").parquet(s"$path/codebooks"),
-      () => Knn.assignCells(corpus, idCol, vecCol,
-          spark.read.parquet(s"$path/centroids"), keep)
-        .withColumn("codes", codesColumn(col("vec"), books))
-        .select(Seq("id", "codes", "vec").map(col) ++ keep.map(col) :+
-          col("cell"): _*)
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "id")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")))
+      () => writeCodedCells(corpus, idCol, vecCol, path, keep,
+        codesColumn(col("vec"), books), "overwrite")))
     books
+  }
+
+  /** The coded IVF cell writer every write/append of the PQ, RQ and
+    * SQ8 stores shares: assign against the stored centroids, add the
+    * `codes` column, keep (id, codes, vec, kept attributes, cell), and
+    * land one file per cell with rows SORTED BY id — the re-rank pass
+    * filters the vec scan by the shortlisted ids, and sorted row
+    * groups give that filter tight min/max stats to prune with (each
+    * appended file keeps that property too). */
+  private def writeCodedCells(df: DataFrame, idCol: String, vecCol: String,
+                              path: String, keep: Seq[String],
+                              codes: org.apache.spark.sql.Column,
+                              mode: String): Unit =
+    Knn.assignCells(df, idCol, vecCol,
+        df.sparkSession.read.parquet(s"$path/centroids"), keep)
+      .withColumn("codes", codes)
+      .select(Seq("id", "codes", "vec").map(col) ++ keep.map(col) :+
+        col("cell"): _*)
+      .repartition(col("cell"))
+      .sortWithinPartitions("cell", "id")
+      .write.mode(mode).partitionBy("cell").parquet(s"$path/cells")
+
+  /** Append through [[writeCodedCells]] with the store's own kept
+    * attribute columns, DISCOVERED from its cells schema (round 15,
+    * r14 advice): a keep-built store requires every append batch to
+    * carry the same attribute columns, so appended rows can never be
+    * silently invisible to a later filtered search. `codes` encodes
+    * with the store's EXISTING books/ranges. */
+  private def appendCodedCells(batch: DataFrame, idCol: String,
+                               vecCol: String, path: String)
+                              (codes: => org.apache.spark.sql.Column): Unit = {
+    val kept = Knn.storedKeepColumns(batch.sparkSession, path, codes = true)
+    Knn.requireKeepCovered(batch, kept, path)
+    writeCodedCells(batch, idCol, vecCol, path, kept, codes, "append")
   }
 
   /** Append a new batch to a persisted IVF+PQ index: encode with the
     * EXISTING codebooks, assign against the existing centroids, and
-    * append id-sorted cell files (each appended file keeps tight
-    * row-group id stats, so the re-rank pushdown keeps pruning).
+    * append id-sorted cell files ([[appendCodedCells]]).
     * Build-once / append-many; codebook drift is a periodic-rebuild
-    * concern, as with the centroids. Kept attribute columns are
-    * DISCOVERED from the store's cells schema (round 15, r14 advice):
-    * a keep-built store requires every append batch to carry the same
-    * attribute columns, so appended rows can never be silently
-    * invisible to a later filtered search. */
+    * concern, as with the centroids. */
   def appendIvfPqIndex(batch: DataFrame, idCol: String, vecCol: String,
-                       path: String): Unit = {
-    val spark = batch.sparkSession
-    val books = loadCodebooks(spark, path)
-    val kept = Knn.storedKeepColumns(spark, path, codes = true)
-    Knn.requireKeepCovered(batch, kept, path)
-    Knn.assignCells(batch, idCol, vecCol,
-      spark.read.parquet(s"$path/centroids"), kept)
-      .withColumn("codes", codesColumn(col("vec"), books))
-      .select(Seq("id", "codes", "vec").map(col) ++ kept.map(col) :+
-        col("cell"): _*)
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell", "id")
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-  }
+                       path: String): Unit =
+    appendCodedCells(batch, idCol, vecCol, path)(
+      codesColumn(col("vec"), loadCodebooks(batch.sparkSession, path)))
 
   /** Reload persisted codebooks into the [m][k][subDim] layout. */
   def loadCodebooks(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
@@ -624,7 +633,7 @@ object Pq {
       .where(col("cell").isin(probed: _*))
     val codesRaw = pred.fold(cellsScan)(p => cellsScan.where(p))
       .select("id", "codes", "cell")
-    val codesScan = Knn.ivfTombstonesOpt(spark, path).fold(codesRaw)(t =>
+    val codesScan = graft.store.Tombstones.Default.read(spark, path).fold(codesRaw)(t =>
       codesRaw.join(broadcast(t), Seq("id"), "left_anti"))
     val scored = codesScan.join(q, Seq("cell"))
       .where(col("id") =!= col("query_id"))
@@ -711,7 +720,6 @@ object Pq {
         .write.mode("overwrite").parquet(s"$path/centroids"),
       () => trained = trainResidualCodebooks(corpus, idCol, vecCol, m, k, dim)))
     val (b1, b2) = trained
-    // Same sorted-by-id cell layout as writeIvfPqIndex (re-rank pruning).
     DriverPool.awaitAll(spark, Seq(
       () => Seq(b1, b2).zipWithIndex.flatMap { case (books, level) =>
           books.zipWithIndex.flatMap { case (cws, s) =>
@@ -719,13 +727,8 @@ object Pq {
           }.toSeq
         }.toDF("level", "sub", "code", "cw")
         .write.mode("overwrite").parquet(s"$path/codebooks"),
-      () => Knn.assignCells(corpus, idCol, vecCol,
-          spark.read.parquet(s"$path/centroids"))
-        .withColumn("codes", graft.plans.native.residualCodes(col("vec"), b1, b2))
-        .select("id", "codes", "vec", "cell")
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "id")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")))
+      () => writeCodedCells(corpus, idCol, vecCol, path, Nil,
+        graft.plans.native.residualCodes(col("vec"), b1, b2), "overwrite")))
     (b1, b2)
   }
 
@@ -737,20 +740,11 @@ object Pq {
     * append-many; codebook and centroid drift are a periodic-rebuild
     * concern. */
   def appendIvfRqIndex(batch: DataFrame, idCol: String, vecCol: String,
-                       path: String): Unit = {
-    val spark = batch.sparkSession
-    val (b1, b2) = loadResidualCodebooks(spark, path)
-    val kept = Knn.storedKeepColumns(spark, path, codes = true)
-    Knn.requireKeepCovered(batch, kept, path)
-    Knn.assignCells(batch, idCol, vecCol,
-      spark.read.parquet(s"$path/centroids"), kept)
-      .withColumn("codes", graft.plans.native.residualCodes(col("vec"), b1, b2))
-      .select(Seq("id", "codes", "vec").map(col) ++ kept.map(col) :+
-        col("cell"): _*)
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell", "id")
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-  }
+                       path: String): Unit =
+    appendCodedCells(batch, idCol, vecCol, path) {
+      val (b1, b2) = loadResidualCodebooks(batch.sparkSession, path)
+      graft.plans.native.residualCodes(col("vec"), b1, b2)
+    }
 
   /** Reload two-level codebooks written by writeIvfRqIndex. */
   def loadResidualCodebooks(spark: SparkSession, path: String)
@@ -806,14 +800,8 @@ object Pq {
     DriverPool.awaitAll(spark, Seq(
       () => mins.indices.map(d => (d, mins(d), maxs(d))).toDF("d", "mn", "mx")
         .write.mode("overwrite").parquet(s"$path/ranges"),
-      () => Knn.assignCells(corpus, idCol, vecCol,
-          spark.read.parquet(s"$path/centroids"), keep)
-        .withColumn("codes", sq8CodesColumn(col("vec"), mins, maxs))
-        .select(Seq("id", "codes", "vec").map(col) ++ keep.map(col) :+
-          col("cell"): _*)
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "id")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")))
+      () => writeCodedCells(corpus, idCol, vecCol, path, keep,
+        sq8CodesColumn(col("vec"), mins, maxs), "overwrite")))
     (mins, maxs)
   }
 
@@ -823,20 +811,11 @@ object Pq {
     * drift — new values outside the stored min/max clip to the grid
     * ends via round+code bounds — is a periodic-rebuild concern). */
   def appendIvfSq8Index(batch: DataFrame, idCol: String, vecCol: String,
-                        path: String): Unit = {
-    val spark = batch.sparkSession
-    val (mins, maxs) = loadSq8Ranges(spark, path)
-    val kept = Knn.storedKeepColumns(spark, path, codes = true)
-    Knn.requireKeepCovered(batch, kept, path)
-    Knn.assignCells(batch, idCol, vecCol,
-      spark.read.parquet(s"$path/centroids"), kept)
-      .withColumn("codes", sq8CodesColumn(col("vec"), mins, maxs))
-      .select(Seq("id", "codes", "vec").map(col) ++ kept.map(col) :+
-        col("cell"): _*)
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell", "id")
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-  }
+                        path: String): Unit =
+    appendCodedCells(batch, idCol, vecCol, path) {
+      val (mins, maxs) = loadSq8Ranges(batch.sparkSession, path)
+      sq8CodesColumn(col("vec"), mins, maxs)
+    }
 
   /** Reload the per-dimension ranges written by writeIvfSq8Index. */
   def loadSq8Ranges(spark: SparkSession, path: String)
