@@ -58,12 +58,12 @@ object Recall {
   }
 
   /** Run `build`, returning (recall, avg candidates scored per query)
-    * via the Knn.countCandidates instrumentation. */
+    * via the Knn.lastScored counter. */
   private def measured(truth: Map[Long, Set[Long]], nQ: Long)
                       (build: => DataFrame): (Double, Double) = {
-    Knn.lastScored = 0L
+    Knn.lastScored.reset()
     val r = recallOf(truth, build)
-    (r, Knn.lastScored.toDouble / nQ)
+    (r, Knn.lastScored.sum().toDouble / nQ)
   }
 
   private def tmp(tag: String): String =

@@ -143,7 +143,7 @@ private[graft] object EntryHelpers {
   /** Beam-walk CTE generator for the graph-index oracles: multi-seed
     * start (score every per-cell entry, keep the top `beam`), then
     * `hops` expand/score/trim rounds — the SQL twin of
-    * Knn.beamSearchIndexed. `qCte`(qid, qvec DOUBLE[]),
+    * Knn.walkLayer's exact walk. `qCte`(qid, qvec DOUBLE[]),
     * `vCte`(node, nvec DOUBLE[]), `eCte`(src, dst), `entCte`(node).
     * Emits CTEs `${pfx}s0`, `${pfx}b0` .. `${pfx}b$hops`; the final
     * beam is `${pfx}b$hops`(qid, node, sim). */
@@ -169,7 +169,7 @@ private[graft] object EntryHelpers {
   /** The HNSW DESCENT variant of [[graphBeamCtes]]: the walk's b0 is
     * the layer above's final beam (`seedCte`, already (qid, node, sim)
     * rows) instead of entry-seed scoring — the SQL twin of
-    * Knn.beamSearchIndexed's `seed` handoff. Emits `${pfx}b0` ..
+    * Knn.walkLayer's `seed` handoff. Emits `${pfx}b0` ..
     * `${pfx}b$hops`. */
   def graphDescentCtes(pfx: String, seedCte: String, qCte: String,
                        vCte: String, eCte: String,
@@ -251,7 +251,7 @@ private[graft] object EntryHelpers {
   /** The HNSW DESCENT variant of [[graphBeamAdcCtes]]: b0 is the
     * layer above's final beam (`seedCte`, (qid, node, sim) rows on
     * ADC scores) instead of entry-seed scoring — the SQL twin of
-    * Knn.beamSearchCoded's `seed` handoff. */
+    * Knn.walkLayer's `seed` handoff under ADC scoring. */
   def graphDescentAdcCtes(pfx: String, seedCte: String, qCte: String,
                           encCte: String, eCte: String,
                           beam: Int, hops: Int, m: Int): String = {

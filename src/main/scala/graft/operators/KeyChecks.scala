@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Width
+import graft.plans.{DriverPool, Width}
 
 /** Data-quality checks mirroring the reference's integrity gate
   * (ref: /root/reference/R/ffiec_manifest.R:378 check_pk_and_non_null,
@@ -17,47 +17,6 @@ import graft.plans.Width
   * all).
   */
 object KeyChecks {
-
-  private val jobGroupSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Run `body` over `items` on a bounded thread pool, each branch
-    * tagged with a shared Spark JOB GROUP. Unlike a bare
-    * `Await.result(…, Duration.Inf)` per future (the round-8 form):
-    * (a) the wait is FINITE — a wedged executor surfaces as a
-    * TimeoutException instead of hanging the driver thread forever —
-    * and (b) on ANY failure (timeout or a failed branch) the whole
-    * job group is cancelled (`interruptOnCancel`), so sibling futures
-    * stop submitting work instead of racing on after
-    * `pool.shutdown()`. Used by [[compositeKeys]] / [[inclusionDeps]];
-    * `Future.sequence` fails fast on the first error. */
-  private def runBoundedJobs[A, B](
-      spark: org.apache.spark.sql.SparkSession, items: Seq[A],
-      parallelism: Int,
-      timeout: scala.concurrent.duration.Duration =
-        scala.concurrent.duration.Duration(1, "hour"))(
-      body: A => B): Seq[B] = {
-    val sc = spark.sparkContext
-    val groupId = s"graft-keychecks-${jobGroupSeq.incrementAndGet()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, items.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val fs = items.map { a =>
-        scala.concurrent.Future {
-          sc.setJobGroup(groupId, groupId, interruptOnCancel = true)
-          try body(a) finally sc.clearJobGroup()
-        }
-      }
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fs), timeout)
-      catch {
-        case e: Throwable =>
-          sc.cancelJobGroup(groupId)
-          throw e
-      }
-    } finally pool.shutdown()
-  }
 
   /** Duplicate key groups: rows per `cols` combination having count>1. */
   def pkViolations(df: DataFrame, cols: Seq[String]): DataFrame =
@@ -656,18 +615,19 @@ object KeyChecks {
         // independent jobs at the q249 gate. Per-combo jobs also
         // column-prune their parquet scan to exactly the combo's
         // columns and shuffle only that combo's partial-deduped keys;
-        // a bounded pool keeps concurrent scheduler pressure sane and
-        // the cluster's scan parallelism shared fairly. Pruning
+        // the driver pool ([[DriverPool.awaitAll]]) is bounded by the
+        // session's parallelism, and every combo settles before the
+        // first failure is rethrown. Pruning
         // semantics are untouched — levels stay sequential so found
         // keys still imply away supersets before they scan.
-        val results = runBoundedJobs(spark, scan, 8) { s =>
+        val results = DriverPool.awaitAll(spark, scan.map { s => () =>
           val anyNull = s.map(col(_).isNull).reduce(_ || _)
           val r = df.agg(
             count_distinct(struct(s.map(col): _*)).as("__d"),
             coalesce(sum(when(anyNull, 1L).otherwise(0L)), lit(0L))
               .as("__m")).head()
           (s, r.getLong(0), r.getLong(1))
-        }
+        })
         val found = results.flatMap { case (s, d, m) =>
           val isKey = d == n
           out += ((s.mkString(","), arity.toLong, n, d, m, isKey, isKey))
@@ -691,7 +651,7 @@ object KeyChecks {
     *
     * Scale shape: each pair reduces to DISTINCT value sets (keys-only
     * aggregates — row volume never shuffles) left-joined for the miss
-    * count; pairs run as CONCURRENT bounded-pool jobs assembled
+    * count; pairs run as CONCURRENT driver-pool jobs assembled
     * driver-side (the compositeKeys level-scan pattern — p pairs stay
     * at a per-pair exchange budget instead of a p-wide union plan).
     * NULLs are ignored on both sides (SQL IND semantics).
@@ -707,8 +667,8 @@ object KeyChecks {
     // rationale): each pair's plan column-prunes its two scans to one
     // column each and shuffles only distinct keys; a union-of-branches
     // single plan would multiply the exchange count by the pair count
-    val rows = runBoundedJobs(spark, pairs, 8) {
-      case (label, child, childCol, parent, parentCol) =>
+    val rows = DriverPool.awaitAll(spark, pairs.map {
+      case (label, child, childCol, parent, parentCol) => () =>
         val c = child.where(col(childCol).isNotNull)
           .select(col(childCol).cast("string").as("v")).distinct()
         val p = parent.where(col(parentCol).isNotNull)
@@ -721,7 +681,7 @@ object KeyChecks {
           .head()
         (label, r.getLong(0), r.getLong(2), r.getLong(1),
           r.getLong(1) == 0L)
-    }
+    })
     rows.toDF("pair", "n_child_distinct", "n_parent_distinct",
       "n_missing", "holds")
   }

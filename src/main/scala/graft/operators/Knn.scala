@@ -740,13 +740,6 @@ object Knn {
         .size.toLong)
   }
 
-  /** Per-partition FILE layout of a persisted store component:
-    * (partition, n_files, bytes) — see
-    * [[graft.store.Component.fileStats]]. */
-  def storeFileStats(spark: SparkSession, path: String,
-                     component: String): DataFrame =
-    Component.fileStats(spark, path, component)
-
   /** Maintenance dashboard for a persisted IVF store (round 14 — the
     * scheduler's input beside [[EmbeddingStore.drift]]): per cell, the
     * live layout facts a compaction/rebuild policy reads — row count
@@ -906,7 +899,7 @@ object Knn {
       .select(col("query_id"), col("id").as("neighbor_id"),
         round(Vectors.cosine(col("vec"), col("qvec")), 6).as("sim"))
     if (countCandidates)
-      lastScored += scored.select("query_id", "neighbor_id").count()
+      lastScored.add(scored.select("query_id", "neighbor_id").count())
     topKPerQuery(scored, k)
   }
 
@@ -1127,15 +1120,15 @@ object Knn {
     * already materialized (e.g. [[knnGraph]]'s output kept for
     * hard-negative mining).
     *
-    * Scale shape: per hop ONE broadcast expansion of the beam against
-    * the edge list and ONE broadcast scoring join (beam rows =
-    * queries×beam, never corpus-scale) — no windows, no shuffles; the
-    * beam itself is driver-carried between hops (round 16, the
-    * [[beamSearchIndexed]] discipline), so merge and top-beam trim
-    * fold on the driver. Deterministic end-to-end, so the oracle
-    * unrolls the same hops as CTEs. Output: (query_id, neighbor_id,
-    * sim, rank ≤ k), the query itself excluded from the answer (it
-    * may still navigate through the beam). */
+    * Scale shape: the [[walkHops]] loop with every node scorable —
+    * per hop ONE broadcast expansion of the beam against the edge list
+    * and ONE broadcast scoring join (beam rows = queries×beam, never
+    * corpus-scale), no windows, no shuffles; the beam is driver-carried
+    * between hops, so merge and top-beam trim fold on the driver.
+    * Deterministic end-to-end, so the oracle unrolls the same hops as
+    * CTEs. Output: (query_id, neighbor_id, sim, rank ≤ k), the query
+    * itself excluded from the answer (it may still navigate through
+    * the beam). */
   def searchGraph(edges: DataFrame, corpus: DataFrame, idCol: String,
                   vecCol: String, queries: DataFrame, queryIdCol: String,
                   queryVecCol: String, beam: Int, hops: Int,
@@ -1143,7 +1136,6 @@ object Knn {
     require(beam >= 1 && hops >= 0 && k >= 1,
       s"need beam/hops/k sane, got beam=$beam hops=$hops k=$k")
     val spark = corpus.sparkSession
-    import spark.implicits._
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val vecs = corpus.select(col(idCol).cast("long").as("node"),
         transform(col(vecCol), _.cast("double")).as("nvec"))
@@ -1155,39 +1147,65 @@ object Knn {
         col("neighbor_id").cast("long").as("dst"))
       .persist(lvl)
     val entry = vecs.agg(min("node")).head().getLong(0)
-    // driver-carried beam (round 16 — the [[beamSearchIndexed]]
-    // discipline on the in-memory walk): per hop one expansion job +
-    // one scoring job, both shuffle-free broadcast joins; merge and
-    // trim fold on the driver over the metadata-scale beam.
-    def scoreCollect(nodes: DataFrame): LocalBeam =
-      collectBeam(nodes
-        .join(vecs, Seq("node"))
-        .join(q, Seq("qid"))
-        .select(col("qid"), col("node"),
-          round(graft.plans.native.cosineSim(col("nvec"), col("qvec")), 6)
-            .as("sim")))
-    var beamLoc: LocalBeam =
-      scoreCollect(q.select(col("qid"), lit(entry).as("node")))
-    var h = 0
-    while (h < hops && beamLoc.nonEmpty) {
-      h += 1
-      val srcDf = beamToDf(spark, beamLoc)
-        .select(col("qid"), col("node").as("src"))
-      val cand = broadcast(srcDf).join(e, Seq("src"))
-        .select(col("qid"), col("dst").as("node"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).distinct
-      val scored: LocalBeam =
-        if (cand.isEmpty) Array.empty
-        else scoreCollect(broadcast(cand.toSeq.toDF("qid", "node")))
-      beamLoc = trimLocal(mergeMaxLocal(beamLoc ++ scored), beam)
-    }
-    val fin = beamToDf(spark, beamLoc).where(col("node") =!= col("qid"))
-      .select(col("qid").as("query_id"), col("node").as("neighbor_id"),
-        col("sim"))
+    val start = collectBeam(q.select(col("qid"), lit(entry).as("node"))
+      .join(vecs, Seq("node")).join(q, Seq("qid"))
+      .select(col("qid"), col("node"), exactSim.as("sim")))
+    val fin = walkHops(q, start, beam, hops, Set.empty)(
+      _ => e, _ => vecs, exactSim)
     vecs.unpersist(false)
     e.unpersist(false)
-    topKPerQuery(fin, k)
+    beamTopK(spark, fin, k)
   }
+
+  /** The walks' exact score: 6-dp cosine of a node vector `nvec`
+    * against the query vector `qvec`. */
+  private val exactSim: Column =
+    round(graft.plans.native.cosineSim(col("nvec"), col("qvec")), 6)
+
+  /** The beam walk's HOP LOOP, shared by every graph search (in-memory,
+    * stored, ADC) and by the append's out-edge search: `hops` rounds of
+    * expand → dedup → tombstone filter → score → MAX(sim) merge →
+    * (sim DESC, node ASC) trim to `beam` rows per query. `edges(b)` is
+    * the (src, dst) frame the beam `b` expands over, `nodes(ids)` the
+    * (node, …) frame the candidates `ids` score against, `sim` the
+    * score over candidate ⋈ nodes ⋈ `q`. Each hop collects twice —
+    * the expansion and the scoring — both shuffle-free broadcast joins
+    * against driver-built frames; dedup, tombstone filter, merge and
+    * trim fold on the driver over the ≤ queries·beam·k candidate pairs
+    * (see [[trimLocal]]/[[mergeMaxLocal]]). An empty beam stays empty
+    * through every remaining hop, so the loop exits instead of running
+    * empty jobs. Every scored pair counts into [[lastScored]]. */
+  private def walkHops(q: DataFrame, start: LocalBeam, beam: Int, hops: Int,
+                       delIds: Set[Long])(
+      edges: LocalBeam => DataFrame, nodes: Array[Long] => DataFrame,
+      sim: Column): LocalBeam = {
+    val spark = q.sparkSession
+    import spark.implicits._
+    var b = start
+    var h = 0
+    while (h < hops && b.nonEmpty) {
+      h += 1
+      val src = beamToDf(spark, b).select(col("qid"), col("node").as("src"))
+      val cand = broadcast(src).join(edges(b), Seq("src"))
+        .select(col("qid"), col("dst").as("node"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .distinct.filter(t => !delIds.contains(t._2))
+      lastScored.add(cand.length)
+      val scored: LocalBeam =
+        if (cand.isEmpty) Array.empty
+        else collectBeam(broadcast(cand.toSeq.toDF("qid", "node"))
+          .join(nodes(cand.map(_._2)), Seq("node")).join(q, Seq("qid"))
+          .select(col("qid"), col("node"), sim.as("sim")))
+      b = trimLocal(mergeMaxLocal(b ++ scored), beam)
+    }
+    b
+  }
+
+  /** A walk's answer: the final beam minus each query itself, top k. */
+  private def beamTopK(spark: SparkSession, b: LocalBeam, k: Int): DataFrame =
+    topKPerQuery(beamToDf(spark, b).where(col("node") =!= col("qid"))
+      .select(col("qid").as("query_id"), col("node").as("neighbor_id"),
+        col("sim")), k)
 
   /** Deterministic GEOMETRIC LAYER LEVEL from the id hash — the HNSW
     * layer assignment (Malkov & Yashunin 2018 draw `⌊-ln U · mL⌋`; a
@@ -1233,10 +1251,9 @@ object Knn {
   }
 
   /** The store tables of one persisted graph index, each read ONCE
-    * per operator call (round 15, guide §6: every `spark.read.parquet`
-    * pays driver-side file listing + footer schema inference, and the
-    * hop/layer loops previously re-read edges/nodes/entries/deletes on
-    * EVERY hop of EVERY layer). The loops filter these shared frames,
+    * per operator call (guide §6: every `spark.read.parquet` pays
+    * driver-side file listing + footer schema inference, which a read
+    * per hop per layer would repeat). The loops filter these shared frames,
     * so (layer, bucket) partition pruning is unchanged — pruning
     * happens at each action's planning — while the InMemoryFileIndex
     * and the tombstone-emptiness probe (one job) are paid once.
@@ -1245,7 +1262,7 @@ object Knn {
     * guarantees that). */
   private[operators] final case class GraphFrames(
       edges: DataFrame, nodes: DataFrame, entries: DataFrame,
-      del: DataFrame, codes: Option[DataFrame], delIds: Set[Long]) {
+      del: DataFrame, delIds: Set[Long]) {
     /** `df` minus tombstoned `node`s — applied to seeds and candidate
       * expansions BEFORE scoring, so a masked hit never eats a rank
       * slot. */
@@ -1254,23 +1271,22 @@ object Knn {
       else df.join(del.select(col("id").as("node")), Seq("node"), "left_anti")
   }
 
-  /** Driver-carried beam state (round 16, r15 verdict ask #2): the
-    * walk's beam is (qid, node, sim) rows bounded by queries × beam —
-    * metadata-scale by the broadcast-small-queries contract
-    * ([[bruteForce]]) — so it lives on the driver between hops. That
-    * makes every per-hop bucket set a driver-side map (ZERO collect
-    * jobs where round 15 ran one blocking `distinct().collect()` per
-    * scan per hop), and the merge + top-beam trim a driver fold (no
-    * per-hop groupBy Exchange, no per-hop localCheckpoint block churn).
-    * The corpus-scale work — the (layer, bucket)-pruned edge expansion
-    * and node/codes scoring scans — stays distributed; each hop is now
-    * exactly two shuffle-free scan jobs (guide §8: decide with small
-    * rows, keep the heavy bytes in one distributed pass). */
+  /** Driver-carried beam state: the walk's beam is (qid, node, sim)
+    * rows bounded by queries × beam — metadata-scale by the
+    * broadcast-small-queries contract ([[bruteForce]]) — so it lives on
+    * the driver between hops. That makes every per-hop bucket set a
+    * driver-side map (no `distinct().collect()` probe job), and the
+    * merge + top-beam trim a driver fold (no per-hop groupBy Exchange,
+    * no per-hop localCheckpoint block churn). The corpus-scale work —
+    * the (layer, bucket)-pruned edge expansion and node/codes scoring
+    * scans — stays distributed, two shuffle-free scans per hop (guide
+    * §8: decide with small rows, keep the heavy bytes in one
+    * distributed pass). */
   private[operators] type LocalBeam = Array[(Long, Long, Double)]
 
   /** EXACTLY [[TopKAggregator]]'s order: (sim DESC, node ASC) — same
     * total Ordering[Double] (NaN greatest), so a driver-side trim is
-    * value-identical to the round-15 aggregator trim. */
+    * value-identical to the aggregator trim. */
   private val beamOrd: Ordering[(Double, Long)] =
     Ordering.by((t: (Double, Long)) => (-t._1, t._2))
 
@@ -1306,8 +1322,7 @@ object Knn {
     ids.map(id => java.lang.Math.floorMod(id, buckets.toLong).toInt)
       .toSeq.distinct.sorted
 
-  private def graphFrames(spark: SparkSession, path: String,
-                          withCodes: Boolean = false): GraphFrames = {
+  private def graphFrames(spark: SparkSession, path: String): GraphFrames = {
     import spark.implicits._
     // tombstones collected once per operator call (broadcast-scale by
     // the delete contract): the set drives the walks' driver-side
@@ -1321,9 +1336,65 @@ object Knn {
       spark.read.parquet(s"$path/nodes"),
       spark.read.parquet(s"$path/entries"),
       broadcast(delIds.toSeq.toDF("id")),
-      if (withCodes) Some(spark.read.parquet(s"$path/codes")) else None,
       delIds)
   }
+
+  /** How a stored-layer walk scores: `seed` over the query ⋈ entry rows
+    * (entries inline their vector as `nvec`), `nodes(bks)` the
+    * bucket-pruned (node, …) scan of a bucket set, `hop` over the
+    * candidate ⋈ scan ⋈ query rows. */
+  private final case class LayerScoring(seed: Column,
+                                        nodes: Seq[Int] => DataFrame,
+                                        hop: Column)
+
+  /** Exact 6-dp cosine against the stored node vectors. */
+  private def exactScoring(fr: GraphFrames): LayerScoring =
+    LayerScoring(exactSim, bks => fr.nodes
+      .where(col("bucket").isin(bks: _*)) // partition pruning
+      .select(col("id").as("node"), col("vec").as("nvec")), exactSim)
+
+  /** One LAYER of a stored walk: seed from the layer's live per-cell
+    * entry rows (keeping the best `beam` per query) — or from `seed`,
+    * the beam handed down from the layer above — then [[walkHops]] over
+    * the layer's (layer, bucket)-pruned edges. A handed-down beam can
+    * be EMPTY (every upper entry seed tombstoned, or a pre-re-clamp
+    * store whose top layer compacted away): the layer then falls back
+    * to its own entry seeds instead of propagating the empty beam down
+    * and returning zero rows for every query — soft deletes degrade
+    * seeding, never correctness. `q` is the broadcast (qid, qvec, …)
+    * frame. Returns the final beam, `beam` rows per query, self NOT
+    * excluded (search filters it; an append's batch ids are not in the
+    * store yet). */
+  private def walkLayer(fr: GraphFrames, buckets: Int, q: DataFrame,
+                        sc: LayerScoring, beam: Int, hops: Int, layer: Int,
+                        seed: LocalBeam): LocalBeam = {
+    val start =
+      if (seed.nonEmpty) seed
+      else {
+        val seeds = collectBeam(q
+          .join(broadcast(fr.live(fr.entries.where(col("layer") === layer))))
+          .select(col("qid"), col("node"), sc.seed.as("sim")))
+        lastScored.add(seeds.length)
+        trimLocal(seeds, beam)
+      }
+    walkHops(q, start, beam, hops, fr.delIds)(
+      b => fr.edges
+        .where(col("layer") === layer &&
+          col("bucket").isin(bucketsOf(b.map(_._2), buckets): _*))
+        .select(col("src"), col("dst")),
+      ids => sc.nodes(bucketsOf(ids, buckets)), sc.hop)
+  }
+
+  /** The HNSW descent of every stored search: walk the top layer from
+    * its entries, then hand each lower layer the beam above (upper
+    * layers are 4^-l samples whose edges span longer distances, so the
+    * walk crosses the corpus in few hops and spends layer 0 refining
+    * locally). A `layers = 0` store is exactly the flat walk. */
+  private def descend(fr: GraphFrames, meta: GraphMeta, q: DataFrame,
+                      sc: LayerScoring, beam: Int, hops: Int): LocalBeam =
+    (meta.layers to 0 by -1).foldLeft(Array.empty[(Long, Long, Double)]) {
+      (b, l) => walkLayer(fr, meta.buckets, q, sc, beam, hops, l, b)
+    }
 
   /** Build a PERSISTED kNN-graph (NSW / HNSW) index — the
     * build-once/probe-many store the graph ANN member was missing
@@ -1566,9 +1637,7 @@ object Knn {
     // The layers are MUTUALLY INDEPENDENT (every one beam-searches
     // the same PRE-append store), so they run from a driver pool
     // ([[DriverPool.awaitAll]], guide §2.6) and overlap their many
-    // small jobs; kept sequential under countCandidates (the probe-budget
-    // accumulator is not an atomic counter) — that flag is
-    // instrumentation-only, never set in gate/bench paths.
+    // small jobs.
     def layerDelta(l: Int): Option[DataFrame] = {
       val sub =
         if (l == 0) newNodes
@@ -1576,10 +1645,10 @@ object Knn {
       if (l > 0 && sub.isEmpty) None
       else {
         // out-edges: beam search of the layer's new nodes over the
-        // existing graph AT THIS LAYER (driver-carried beam, round 16)
-        val found = beamSearchIndexed(spark, fr, buckets,
-          sub.select(col("id").as("qid"), col("vec").as("qvec")),
-          beam, hops, layer = l)
+        // existing graph AT THIS LAYER (driver-carried beam)
+        val found = walkLayer(fr, buckets,
+          broadcast(sub.select(col("id").as("qid"), col("vec").as("qvec"))),
+          exactScoring(fr), beam, hops, l, seed = Array.empty)
         // out-edges: on a diversified store (meta alphamicro > 0) the
         // new node's k edges are α-RNG-selected from its beam
         // candidates — the build's selection discipline carried into
@@ -1671,10 +1740,8 @@ object Knn {
         Some(merged)
       }
     }
-    val mergedPerLayer: Seq[DataFrame] =
-      if (countCandidates) (0 to layers).flatMap(layerDelta)
-      else DriverPool.awaitAll(spark,
-        (0 to layers).map(l => () => layerDelta(l))).flatten
+    val mergedPerLayer: Seq[DataFrame] = DriverPool.awaitAll(spark,
+      (0 to layers).map(l => () => layerDelta(l))).flatten
     // Phase 2 — WRITES, nodes FIRST (round-11 advice): an interrupted
     // append leaves unlinked nodes, never dangling edges.
     newNodes
@@ -1943,13 +2010,13 @@ object Knn {
     * (queries × beam rows — driver-bounded). On a layered store the
     * walk DESCENDS HNSW-style (top layer seeded from its entries,
     * each lower layer seeded by the beam above — all on ADC scores);
-    * a layers = 0 store is exactly the flat coded walk. Tombstones
-    * honored pre-top-k (same live() discipline). Deterministic: ADC
-    * sims are bit-identical ordered
-    * folds in both engines (the q51 contract), ties → node ASC, so
-    * the gate oracle replays every hop. Output contract matches
-    * [[searchGraphIndex]]: (query_id, neighbor_id, sim, rank ≤ k),
-    * self excluded, sim = EXACT re-ranked cosine. */
+    * a layers = 0 store is exactly the flat coded walk ([[descend]]
+    * with ADC scoring). Tombstones honored pre-top-k. Deterministic:
+    * ADC sims are bit-identical ordered folds in both engines (the q51
+    * contract), ties → node ASC, so the gate oracle replays every hop.
+    * Output contract matches [[searchGraphIndex]]: (query_id,
+    * neighbor_id, sim, rank ≤ k), self excluded, sim = EXACT re-ranked
+    * cosine. */
   def searchGraphIndexAdc(spark: SparkSession, path: String,
                           books: Array[Array[Array[Double]]],
                           queries: DataFrame, queryIdCol: String,
@@ -1957,22 +2024,21 @@ object Knn {
                           k: Int): DataFrame = {
     require(beam >= 1 && hops >= 0 && k >= 1,
       s"need beam/hops/k sane, got beam=$beam hops=$hops k=$k")
-    val GraphMeta(_, buckets, layers, _, _, _) = readGraphMeta(spark, path)
-    val fr = graphFrames(spark, path, withCodes = true)
-    // STALENESS GUARD (round 13, r12 verdict ask #1; TIGHTENED round
-    // 14 per r13 advice, and again round 15 per r14 advice): the walk
-    // scans path/codes for every hop candidate, so a node without a
-    // codes row is INVISIBLE to it — a silent recall hole — and a
-    // node with DUPLICATE codes rows is scored twice, letting one
-    // candidate occupy multiple beam slots. One column-pruned
-    // id-aggregate job catches both: union-tag the two id scans,
-    // group by id, and fail on any id that has node rows but zero
-    // codes rows (uncoded) or more than one codes row (duplicate).
-    // (Codes rows without a node are harmless: candidates only ever
-    // arrive via edges, which reference nodes.)
+    val meta = readGraphMeta(spark, path)
+    val fr = graphFrames(spark, path)
+    val codes = spark.read.parquet(s"$path/codes")
+    // STALENESS GUARD: the walk scans path/codes for every hop
+    // candidate, so a node without a codes row is INVISIBLE to it — a
+    // silent recall hole — and a node with DUPLICATE codes rows is
+    // scored twice, letting one candidate occupy multiple beam slots.
+    // One column-pruned id-aggregate job catches both: union-tag the
+    // two id scans, group by id, and fail on any id that has node rows
+    // but zero codes rows (uncoded) or more than one codes row
+    // (duplicate). (Codes rows without a node are harmless: candidates
+    // only ever arrive via edges, which reference nodes.)
     val badIds = fr.nodes.select("id")
       .withColumn("__c", lit(0L))
-      .unionByName(fr.codes.get.select("id")
+      .unionByName(codes.select("id")
         .withColumn("__c", lit(1L)))
       .groupBy("id")
       .agg(sum("__c").as("n_codes"), count(lit(1)).as("n_all"))
@@ -1998,101 +2064,26 @@ object Knn {
       .select(col(queryIdCol).cast("long").as("qid"),
         transform(col(queryVecCol), _.cast("double")).as("qvec"))
       .withColumn("tabs", tableCol))
-    // HNSW descent on ADC scores (round 12, flat-store-only before):
-    // walk the top layer seeded from its entries, hand each lower
-    // layer the beam above — the searchGraphIndex shape with every
-    // score an ADC lookup
-    var beamLoc = beamSearchCoded(spark, fr, buckets, q, books,
-      beam, hops, layer = layers)
-    for (l <- layers - 1 to 0 by -1)
-      beamLoc = beamSearchCoded(spark, fr, buckets, q, books,
-        beam, hops, layer = l, seed = Some(beamLoc))
-    // exact re-rank: full vectors read ONLY for the final beam's ids —
-    // the bucket set and the beam itself are driver-local (round 16:
-    // the fbks collect job is gone)
-    val fbks = bucketsOf(beamLoc.map(_._2), buckets)
-    val nodes = fr.nodes
-      .where(col("bucket").isin(fbks: _*))
-      .select(col("id").as("node"), col("vec").as("nvec"))
-    val exact = broadcast(beamToDf(spark, beamLoc)
+    // the descent on ADC scores: seeds code the inlined entry vector
+    // on the fly (identical to the stored codes), hops scan (id, codes)
+    // — m bytes/node
+    val adc = LayerScoring(
+      graft.plans.native.adcScore(
+        Pq.codesColumn(col("nvec"), books), col("tabs")),
+      bks => codes.where(col("bucket").isin(bks: _*)) // partition pruning
+        .select(col("id").as("node"), col("codes")),
+      graft.plans.native.adcScore(col("codes"), col("tabs")))
+    val fin = descend(fr, meta, q, adc, beam, hops)
+    // exact re-rank: full vectors read ONLY for the final beam's ids
+    val exact = broadcast(beamToDf(spark, fin)
       .select(col("qid"), col("node"))
       .where(col("node") =!= col("qid")))
-      .join(nodes, Seq("node")).join(q, Seq("qid"))
+      .join(exactScoring(fr).nodes(bucketsOf(fin.map(_._2), meta.buckets)),
+        Seq("node"))
+      .join(q, Seq("qid"))
       .select(col("qid").as("query_id"), col("node").as("neighbor_id"),
-        round(graft.plans.native.cosineSim(col("nvec"), col("qvec")), 6)
-          .as("sim"))
+        exactSim.as("sim"))
     topKPerQuery(exact, k)
-  }
-
-  /** One LAYER of the coded walk — [[beamSearchIndexed]]'s shape with
-    * every score an ADC table lookup over the [[writeGraphCodes]]
-    * sidecar: seed from the layer's entries (codes derived on the fly
-    * from the inlined entry vector — identical to the stored codes) or
-    * from the layer above's beam (`seed`, the HNSW descent handoff;
-    * empty-beam fallback to own entries), then `hops` (layer, bucket)-
-    * pruned expand/score/trim rounds where the candidate scan is
-    * (id, codes) — m bytes/node. Tombstones pre-top-k. `q` carries
-    * (qid, qvec, tabs). */
-  private def beamSearchCoded(spark: SparkSession, fr: GraphFrames,
-                              buckets: Int, q: DataFrame,
-                              books: Array[Array[Array[Double]]],
-                              beam: Int, hops: Int, layer: Int = 0,
-                              seed: Option[LocalBeam] = None): LocalBeam = {
-    // store reads + tombstone collect hoisted to [[graphFrames]] —
-    // once per operator call (round 15, guide §6); beam state
-    // driver-carried, two shuffle-free jobs per hop (round 16 — see
-    // [[beamSearchIndexed]])
-    import fr.live
-    def entrySeed(): LocalBeam = {
-      val entries = broadcast(live(
-        fr.entries.where(col("layer") === layer)))
-      // seed scoring counts into the probe budget (round-13 advice):
-      // beamSearchIndexed already charges queries × entries — an
-      // equal-budget cand/q comparison must see the same accounting
-      // here or the ADC walk under-reports its scan volume.
-      if (countCandidates)
-        lastScored += q.count() * entries.count()
-      trimLocal(collectBeam(
-        q.join(entries)
-          .select(col("qid"), col("node"),
-            graft.plans.native.adcScore(
-              Pq.codesColumn(col("nvec"), books), col("tabs")).as("sim"))),
-        beam)
-    }
-    var beamLoc: LocalBeam = seed.filter(_.nonEmpty).getOrElse(entrySeed())
-    var h = 0
-    while (h < hops && beamLoc.nonEmpty) {
-      h += 1
-      val bks = bucketsOf(beamLoc.map(_._2), buckets)
-      val srcDf = beamToDf(spark, beamLoc)
-        .select(col("qid"), col("node").as("src"))
-      val expanded = broadcast(srcDf)
-        .join(fr.edges
-          .where(col("layer") === layer && col("bucket").isin(bks: _*))
-          .select(col("src"), col("dst")), Seq("src"))
-        .select(col("qid"), col("dst").as("node"))
-      val cand = expanded.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .distinct.filter(t => !fr.delIds.contains(t._2))
-      if (countCandidates) lastScored += cand.length
-      val scored: LocalBeam =
-        if (cand.isEmpty) Array.empty
-        else {
-          import spark.implicits._
-          val nbks = bucketsOf(cand.map(_._2), buckets)
-          val candDf = cand.toSeq.toDF("qid", "node")
-          // the coded hop: the scan is (id, codes) — m bytes/node
-          val codes = fr.codes.get
-            .where(col("bucket").isin(nbks: _*)) // partition pruning
-            .select(col("id").as("node"), col("codes"))
-          collectBeam(broadcast(candDf)
-            .join(codes, Seq("node")).join(q, Seq("qid"))
-            .select(col("qid"), col("node"),
-              graft.plans.native.adcScore(col("codes"), col("tabs"))
-                .as("sim")))
-        }
-      beamLoc = trimLocal(mergeMaxLocal(beamLoc ++ scored), beam)
-    }
-    beamLoc
   }
 
   /** Continuous NSW ingest — the streaming twin every other persisted
@@ -2142,54 +2133,31 @@ object Knn {
                        queries: DataFrame, queryIdCol: String,
                        queryVecCol: String, beam: Int, hops: Int,
                        k: Int): DataFrame = {
-    require(beam >= 1 && hops >= 0 && k >= 1,
-      s"need beam/hops/k sane, got beam=$beam hops=$hops k=$k")
-    val GraphMeta(_, buckets, layers, _, _, _) = readGraphMeta(spark, path)
-    val fr = graphFrames(spark, path)
-    val q = queries.select(col(queryIdCol).cast("long").as("qid"),
-      transform(col(queryVecCol), _.cast("double")).as("qvec"))
-    var fin = beamSearchIndexed(spark, fr, buckets, q, beam, hops,
-      layer = layers)
-    for (l <- layers - 1 to 0 by -1)
-      fin = beamSearchIndexed(spark, fr, buckets, q, beam, hops,
-        layer = l, seed = Some(fin))
-    topKPerQuery(beamToDf(spark, fin).where(col("node") =!= col("qid"))
-      .select(col("qid").as("query_id"), col("node").as("neighbor_id"),
-        col("sim")), k)
+    val (_, _, fin) =
+      walkIndex(spark, path, queries, queryIdCol, queryVecCol, beam, hops, k)
+    beamTopK(spark, fin, k)
   }
 
-  /** FILTERED search over a persisted graph index (round 13 — the
-    * graph-family twin of [[searchIvfFiltered]]): the walk itself is
-    * UNCHANGED and navigates through non-matching nodes (filtering
-    * navigation would disconnect the graph under selective predicates
-    * — the standard filtered-graph-ANN design), and `pred` evaluates
-    * over the store's `keep` attribute columns on the FINAL beam,
-    * before the top-k ranking — a filtered-out candidate never eats a
-    * rank slot. The attribute read is one bucket-pruned scan of the
-    * beam's ids (queries × beam rows). Post-filtering semantics: at
-    * most `beam` candidates per query survive to the filter, so a
-    * selective predicate wants `beam` ≫ k (the q345 nprobe guidance,
+  /** FILTERED search over a persisted graph index (the graph-family
+    * twin of [[searchIvfFiltered]]): the walk itself is UNCHANGED and
+    * navigates through non-matching nodes (filtering navigation would
+    * disconnect the graph under selective predicates — the standard
+    * filtered-graph-ANN design), and `pred` evaluates over the store's
+    * `keep` attribute columns on the FINAL beam, before the top-k
+    * ranking — a filtered-out candidate never eats a rank slot. The
+    * attribute read is one bucket-pruned scan of the beam's ids
+    * (queries × beam rows). Post-filtering semantics: at most `beam`
+    * candidates per query survive to the filter, so a selective
+    * predicate wants `beam` ≫ k (the q345 nprobe guidance,
     * graph-shaped). */
   def searchGraphIndexFiltered(spark: SparkSession, path: String,
                                queries: DataFrame, queryIdCol: String,
                                queryVecCol: String, beam: Int, hops: Int,
                                k: Int, pred: Column): DataFrame = {
-    require(beam >= 1 && hops >= 0 && k >= 1,
-      s"need beam/hops/k sane, got beam=$beam hops=$hops k=$k")
-    val GraphMeta(_, buckets, layers, _, _, _) = readGraphMeta(spark, path)
-    val fr = graphFrames(spark, path)
-    val q = queries.select(col(queryIdCol).cast("long").as("qid"),
-      transform(col(queryVecCol), _.cast("double")).as("qvec"))
-    var fin = beamSearchIndexed(spark, fr, buckets, q, beam, hops,
-      layer = layers)
-    for (l <- layers - 1 to 0 by -1)
-      fin = beamSearchIndexed(spark, fr, buckets, q, beam, hops,
-        layer = l, seed = Some(fin))
-    // bucket set driver-derived from the carried beam (round 16: the
-    // fbks collect job is gone)
-    val fbks = bucketsOf(fin.map(_._2), buckets)
+    val (fr, buckets, fin) =
+      walkIndex(spark, path, queries, queryIdCol, queryVecCol, beam, hops, k)
     val attrs = fr.nodes
-      .where(col("bucket").isin(fbks: _*)) // partition pruning
+      .where(col("bucket").isin(bucketsOf(fin.map(_._2), buckets): _*))
       .drop("vec").withColumnRenamed("id", "node")
     topKPerQuery(broadcast(beamToDf(spark, fin)
       .where(col("node") =!= col("qid")))
@@ -2199,126 +2167,30 @@ object Knn {
         col("sim")), k)
   }
 
-  /** Formatted plans of the LAST indexed hop's candidate expansion and
-    * scoring (edge scan + node scan) — the returned beam is
-    * checkpointed, so its own plan no longer shows the bucket-pruned
-    * scans; specs assert the pruning here (diagnostics only, one
-    * string, no job). Captured only when [[capturePlans]] is set
-    * (round 15, guide §1.2: building two formatted explain strings
-    * per hop is pure driver work in the walk's hot loop — the
-    * pruning spec flips the flag, production walks skip it). */
-  @volatile private[graft] var lastHopPlan: String = ""
-
-  /** When true, each indexed hop records [[lastHopPlan]]. Off by
-    * default — plan capture costs a full analyze/optimize/plan pass
-    * of the hop's candidate and merge frames per hop. */
-  @volatile private[graft] var capturePlans: Boolean = false
-
-  /** When true, each [[beamSearchIndexed]] walk adds its scored-
-    * candidate count (seed scorings + per-hop candidate pairs) to
-    * [[lastScored]] — the probe-budget readout the recall artifact
-    * reports so index families compare at EQUAL candidate budgets.
-    * Off by default: counting costs one tiny job per hop. */
-  @volatile private[graft] var countCandidates: Boolean = false
-  @volatile private[graft] var lastScored: Long = 0L
-
-  /** The shared indexed beam walk at one LAYER: seed from the layer's
-    * per-cell entry rows (or from `seed`, a layer-above beam already
-    * scored as (qid, node, sim) — the HNSW descent handoff), then
-    * `hops` (layer, bucket)-pruned expand/score/trim rounds. Returns
-    * the final beam (qid, node, sim) — `beam` rows per query, self
-    * NOT excluded (callers decide; append wants self-free ids by
-    * construction, search filters).
-    *
-    * Round 16 (r15 verdict ask #2): beam state is DRIVER-CARRIED
-    * ([[LocalBeam]], metadata-scale by the broadcast-small-queries
-    * contract). Each hop is exactly TWO shuffle-free jobs — the
-    * bucket-pruned edge expansion and the bucket-pruned node scoring
-    * scan, both broadcast-joined against driver-local frames — where
-    * round 15 ran four blocking driver round-trips per hop (two
-    * `distinct().collect()` bucket probes + two localCheckpoint
-    * materializations with groupBy Exchanges). Dedup, tombstone
-    * filtering, the MAX(sim) merge and the (sim DESC, node ASC) trim
-    * fold on the driver over the ≤ queries·beam·k-row candidate set —
-    * value-identical semantics (see [[trimLocal]]/[[mergeMaxLocal]]). */
-  private def beamSearchIndexed(spark: SparkSession, fr: GraphFrames,
-                                buckets: Int, queries: DataFrame,
-                                beam: Int, hops: Int, layer: Int = 0,
-                                seed: Option[LocalBeam] = None): LocalBeam = {
-    val q = broadcast(queries)
-    // tombstones (deleteFromGraphIndex): [[GraphFrames.live]].
-    // Broadcast-scale by the store's delete contract; pre-r11 stores
-    // have no table → empty. The read (one collect) lives in
-    // [[graphFrames]] — paid once per OPERATOR call, not once per
-    // layer walk (round 15, guide §6).
-    import fr.live
-    def entrySeed(): LocalBeam = {
-      val entries = broadcast(live(
-        fr.entries.where(col("layer") === layer)))
-      if (countCandidates)
-        lastScored += queries.count() * entries.count()
-      // one broadcast-join job; the per-query trim folds on the driver
-      trimLocal(collectBeam(
-        q.join(entries)
-          .select(col("qid"), col("node"),
-            round(graft.plans.native.cosineSim(col("nvec"), col("qvec")), 6)
-              .as("sim"))), beam)
-    }
-    // a handed-down beam can be EMPTY (every top-layer entry seed
-    // tombstoned, or a pre-re-clamp store whose top layer compacted
-    // away): fall back to this layer's own entry seeds instead of
-    // propagating the empty beam to layer 0 and returning zero rows
-    // for every query — soft deletes degrade seeding, never
-    // correctness (round-12 advice).
-    var beamLoc: LocalBeam = seed.filter(_.nonEmpty).getOrElse(entrySeed())
-    var h = 0
-    // an empty beam stays empty through every remaining hop (the
-    // round-15 joins produced empty frames); exit instead of running
-    // empty jobs — same result
-    while (h < hops && beamLoc.nonEmpty) {
-      h += 1
-      // the beam's bucket set is a driver map over the carried beam —
-      // zero collect jobs (round 15 ran one per hop)
-      val bks = bucketsOf(beamLoc.map(_._2), buckets)
-      val srcDf = beamToDf(spark, beamLoc)
-        .select(col("qid"), col("node").as("src"))
-      val expanded = broadcast(srcDf)
-        .join(fr.edges
-          .where(col("layer") === layer && col("bucket").isin(bks: _*))
-          .select(col("src"), col("dst")), Seq("src"))
-        .select(col("qid"), col("dst").as("node"))
-      if (capturePlans)
-        lastHopPlan = expanded.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      // dedup + tombstone filter fold on the driver over the
-      // ≤ queries·beam·k candidate pairs (was: distinct + anti-join +
-      // localCheckpoint + a second bucket collect)
-      val cand = expanded.collect().map(r => (r.getLong(0), r.getLong(1)))
-        .distinct.filter(t => !fr.delIds.contains(t._2))
-      if (countCandidates) lastScored += cand.length
-      val scored: LocalBeam =
-        if (cand.isEmpty) Array.empty
-        else {
-          import spark.implicits._
-          val nbks = bucketsOf(cand.map(_._2), buckets)
-          val candDf = cand.toSeq.toDF("qid", "node")
-          val nodes = fr.nodes
-            .where(col("bucket").isin(nbks: _*)) // partition pruning
-            .select(col("id").as("node"), col("vec").as("nvec"))
-          val scoredDf = broadcast(candDf)
-            .join(nodes, Seq("node")).join(q, Seq("qid"))
-            .select(col("qid"), col("node"),
-              round(graft.plans.native.cosineSim(col("nvec"), col("qvec")), 6)
-                .as("sim"))
-          if (capturePlans)
-            lastHopPlan += scoredDf.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-          collectBeam(scoredDf)
-        }
-      beamLoc = trimLocal(mergeMaxLocal(beamLoc ++ scored), beam)
-    }
-    beamLoc
+  /** The exact-scored descent of [[searchGraphIndex]] and
+    * [[searchGraphIndexFiltered]]: the store's frames, its bucket
+    * count and the final beam. */
+  private def walkIndex(spark: SparkSession, path: String,
+                        queries: DataFrame, queryIdCol: String,
+                        queryVecCol: String, beam: Int, hops: Int,
+                        k: Int): (GraphFrames, Int, LocalBeam) = {
+    require(beam >= 1 && hops >= 0 && k >= 1,
+      s"need beam/hops/k sane, got beam=$beam hops=$hops k=$k")
+    val meta = readGraphMeta(spark, path)
+    val fr = graphFrames(spark, path)
+    val q = broadcast(queries.select(col(queryIdCol).cast("long").as("qid"),
+      transform(col(queryVecCol), _.cast("double")).as("qvec")))
+    (fr, meta.buckets, descend(fr, meta, q, exactScoring(fr), beam, hops))
   }
+
+  /** When true, [[ivf]] adds its scored-candidate count to
+    * [[lastScored]] — the probe-budget readout the recall artifact
+    * reports so index families compare at EQUAL candidate budgets. Off
+    * by default: that count costs one job. The graph walks always add
+    * theirs (seed scorings + per-hop candidate pairs), which costs no
+    * job: the pairs are already on the driver. */
+  @volatile private[graft] var countCandidates: Boolean = false
+  private[graft] val lastScored = new java.util.concurrent.atomic.LongAdder
 
   /** Greedy k-CENTER coreset selection (farthest-first traversal —
     * the 2-approximation of Gonzalez 1985, used as the coreset

@@ -87,25 +87,33 @@ object FfiecPipeline {
     * reference's ffiec_list_zips (ref: ffiec_manifest.R:51). */
   def listZips(spark: SparkSession, dir: String,
                kind: String = "tsv"): Seq[(String, String)] = {
+    val dateOf = zipDate(kind)
+    val fs = new Path(dir).getFileSystem(
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    val listing = fs.listStatus(new Path(dir)).toSeq.map(_.getPath)
+    listing.flatMap(p => dateOf(p.getName).map(p.toString -> _)).sortBy(_._2)
+  }
+
+  /** The bulk-zip name rule of [[listZips]], [[processStream]] and
+    * [[processXbrls]]: a `FFIEC CDR Call Bulk All Schedules MMDDYYYY.zip`
+    * (`tsv`) or `FFIEC CDR Call Bulk XBRL MMDDYYYY.zip` (`xbrl`) file
+    * name → Some(yyyymmdd); None for any other name or for a month or
+    * day out of range. */
+  private def zipDate(kind: String): String => Option[String] = {
     val pattern = kind match {
       case "tsv"  => """^FFIEC CDR Call Bulk All Schedules (\d{8})\.zip$""".r
       case "xbrl" => """^FFIEC CDR Call Bulk XBRL (\d{8})\.zip$""".r
       case other  => throw new IllegalArgumentException(s"unknown type: $other")
     }
-    val fs = new Path(dir).getFileSystem(
-      new Configuration(spark.sparkContext.hadoopConfiguration))
-    val listing = fs.listStatus(new Path(dir)).toSeq.map(_.getPath)
-    listing.flatMap { p =>
-      p.getName match {
-        case pattern(mmddyyyy) =>
-          val (mm, dd, yyyy) =
-            (mmddyyyy.substring(0, 2), mmddyyyy.substring(2, 4), mmddyyyy.substring(4, 8))
-          if (mm >= "01" && mm <= "12" && dd >= "01" && dd <= "31")
-            Some(p.toString -> s"$yyyy$mm$dd")
-          else None
-        case _ => None
-      }
-    }.sortBy(_._2)
+    {
+      case pattern(mmddyyyy) =>
+        val (mm, dd, yyyy) =
+          (mmddyyyy.substring(0, 2), mmddyyyy.substring(2, 4), mmddyyyy.substring(4, 8))
+        if (mm >= "01" && mm <= "12" && dd >= "01" && dd <= "31")
+          Some(s"$yyyy$mm$dd")
+        else None
+      case _ => None
+    }
   }
 
   case class Written(kind: String, tpe: String, dateRaw: String,
@@ -511,7 +519,7 @@ object FfiecPipeline {
                     schemaMap: Map[String, String] = FfiecSchema.defaultSchemaMap)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
-    val pattern = """^FFIEC CDR Call Bulk All Schedules (\d{8})\.zip$""".r
+    val dateOf = zipDate("tsv")
     spark.readStream
       .format("binaryFile")
       .option("pathGlobFilter", "*.zip")
@@ -526,13 +534,7 @@ object FfiecPipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val zips = batch.select("path").collect().map(_.getString(0)).toSeq
-          .flatMap { p =>
-            new Path(p).getName match {
-              case pattern(mmddyyyy) =>
-                Some(p -> (mmddyyyy.substring(4, 8) + mmddyyyy.substring(0, 4)))
-              case _ => None
-            }
-          }.sortBy(_._2)
+          .flatMap(p => dateOf(new Path(p).getName).map(p -> _)).sortBy(_._2)
         val rows = processZips(spark, zips, outDir, schemaMap,
           FfiecSchema.defaultColOverrides, "ffiec_", strict = false, tolerant = true)
         if (rows.nonEmpty)
@@ -567,13 +569,11 @@ object FfiecPipeline {
                    prefix: String = "ffiec_",
                    tolerant: Boolean = false): DataFrame = {
     import spark.implicits._
-    val dateRe = """(\d{8})""".r
     val zips: Seq[(String, String)] =
       if (zipfiles.nonEmpty) zipfiles.map { z =>
-        val mmddyyyy = dateRe.findFirstIn(new Path(z).getName).getOrElse(
+        z -> zipDate("xbrl")(new Path(z).getName).getOrElse(
           throw new IllegalArgumentException(
             s"Could not parse MMDDYYYY date from zip filename: $z"))
-        z -> (mmddyyyy.substring(4, 8) + mmddyyyy.substring(0, 4))
       }
       else listZips(spark, rawDir, kind = "xbrl")
     require(zips.nonEmpty, s"No FFIEC XBRL zip files found in $rawDir")

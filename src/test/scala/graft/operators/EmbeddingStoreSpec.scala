@@ -172,7 +172,7 @@ class EmbeddingStoreSpec extends SparkSpec {
     assert(m.nonEmpty, "2/3 tombstones over a 0.5 budget must compact")
     assert(spark.read.parquet(s"$path/cells").count() == 2L)
     // appends accrete cell files; the files budget coalesces them
-    def maxFiles() = Knn.storeFileStats(spark, path, "cells")
+    def maxFiles() = graft.store.Component.fileStats(spark, path, "cells")
       .agg(max("n_files")).head().getLong(0)
     EmbeddingStore.append(Seq((11L, Array(0.5f, 0.5f, 0f, 0f)))
       .toDF("vec_id", "embedding"), "vec_id", "embedding", path)

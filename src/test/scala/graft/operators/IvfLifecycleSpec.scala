@@ -281,7 +281,7 @@ class IvfLifecycleSpec extends SparkSpec {
       .toDF("vec_id", "embedding"), "vec_id", "embedding", path)
     Knn.appendIvfIndex(Seq((51L, Array(0f, 0f, 0f, 1.0f)))
       .toDF("vec_id", "embedding"), "vec_id", "embedding", path)
-    def maxFiles() = Knn.storeFileStats(spark, path, "cells")
+    def maxFiles() = graft.store.Component.fileStats(spark, path, "cells")
       .agg(max("n_files")).head().getLong(0)
     val before = maxFiles()
     assert(before >= 3, s"expected accreted files, got $before")

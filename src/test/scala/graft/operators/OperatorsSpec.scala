@@ -1558,7 +1558,7 @@ class KnnSpec extends SparkSpec {
       .agg(sum("n_tombstoned")).head().getLong(0) == 0L,
       "compaction must clear the backlog")
     // appends accrete node files; the files budget coalesces them
-    def maxFiles() = Knn.storeFileStats(spark, dir, "nodes")
+    def maxFiles() = graft.store.Component.fileStats(spark, dir, "nodes")
       .agg(max("n_files")).head().getLong(0)
     Knn.appendGraphIndex((100L to 103L).map(i => (i, point((i % 2).toInt)))
       .toDF("vec_id", "embedding"), "vec_id", "embedding", dir,
@@ -1863,17 +1863,35 @@ class KnnSpec extends SparkSpec {
       Set("layer", "cell", "node", "nvec"))
 
     val queries = df.where(col("vec_id") % 30 === 1) // one per cluster
-    // plan capture is opt-in since round 15 (building two formatted
-    // explains per hop is pure driver cost in production walks)
-    Knn.capturePlans = true
-    val hits = try Knn.searchGraphIndex(spark, dir.getAbsolutePath, queries,
-      "vec_id", "embedding", beam = 6, hops = 2, k = 4)
-    finally Knn.capturePlans = false
-    // the returned frame is checkpointed — the hop's pruned scans live
-    // in the captured hop plan (edge expansion + node scoring)
-    val plan = Knn.lastHopPlan
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
-      "graph probe lost its bucket partition filter")
+    // the returned frame is built from the driver-carried beam — the
+    // hops' pruned scans (edge expansion + node scoring) live in the
+    // executed plans of the walk's own collects, captured here
+    import org.apache.spark.sql.catalyst.expressions.IsNotNull
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val bucketPruned = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq("plan_fence")) fence.countDown()
+        else if (Plans.collect(qe.executedPlan) {
+            case scan: FileSourceScanExec => scan.partitionFilters
+          }.flatten.exists(pf => !pf.isInstanceOf[IsNotNull] &&
+            pf.references.exists(_.name == "bucket")))
+          bucketPruned.set(true)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val hits = try {
+      val h = Knn.searchGraphIndex(spark, dir.getAbsolutePath, queries,
+        "vec_id", "embedding", beam = 6, hops = 2, k = 4)
+      spark.range(1).toDF("plan_fence").collect()
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      h
+    } finally spark.listenerManager.unregister(listener)
+    assert(bucketPruned.get(), "graph probe lost its bucket partition filter")
     // every query's hits come from ITS cluster (multi-seed start —
     // a single global entry cannot reach the other clusters' regions)
     val got = hits.collect()

@@ -514,6 +514,10 @@ class FfiecPipelineSpec extends SparkSpec {
     writeZip(dir, "FFIEC CDR Call Bulk All Schedules 03312024.zip",
       "FFIEC CDR Call Schedule RC 03312024.txt" ->
         "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.5\t\n")
+    // month 13, day 45: not a bulk-zip date, so listZips skips it
+    writeZip(dir, "FFIEC CDR Call Bulk All Schedules 13452020.zip",
+      "FFIEC CDR Call Schedule RC 13452020.txt" ->
+        "IDRSSD\tRCFD0010\t\nID\tCash\t\n39\t3.5\t\n")
     val q = FfiecPipeline.processStream(spark, dir.getAbsolutePath,
       outDir.getAbsolutePath, ckpt.getAbsolutePath, schemaMap)
     try {
@@ -530,6 +534,9 @@ class FfiecPipelineSpec extends SparkSpec {
       // exactly once: one rc manifest row per zip, no reprocessing
       assert(log.where(col("kind") === "rc").count() == 2)
       assert(log.where(!col("ok")).count() == 0)
+      // the bad-date zip is skipped, as processAll skips it
+      assert(log.where(col("dateRaw") === "20201345").count() == 0)
+      assert(!new java.io.File(outDir, "ffiec_rc_20201345.parquet").exists())
     } finally q.stop()
   }
 
