@@ -166,21 +166,12 @@ object GraftExtensions {
     }
     // live-session twin of injectOptimizerRule (extensions can only
     // be configured at session build)
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.LevenshteinThresholdRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.LevenshteinThresholdRule
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.SortedIntersectRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.SortedIntersectRule
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.JaroWinklerThresholdRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.JaroWinklerThresholdRule
+    Seq(graft.plans.LevenshteinThresholdRule, graft.plans.SortedIntersectRule,
+      graft.plans.JaroWinklerThresholdRule).foreach { rule =>
+      if (!spark.experimental.extraOptimizations.contains(rule))
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations :+ rule
+    }
   }
 }
 
@@ -214,7 +205,8 @@ object GraftSession {
 
   /** The local-mode session of graft's mains (Bench, Verify, Profile,
     * PlanDump, Recall): `local[cpus]`, one shuffle partition per core,
-    * UTC, no UI, [[FallbackThreshold]], WARN logging. */
+    * UTC, no UI, [[FallbackThreshold]], WARN logging, and graft's
+    * functions and optimizer rules registered before the first query. */
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -225,6 +217,7 @@ object GraftSession {
         FallbackThreshold.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.register(spark)
     spark
   }
 }

@@ -17,7 +17,6 @@ object PlanDump {
     val prefixes = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus)
-    GraftExtensions.register(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val outDir = java.nio.file.Paths.get("plans",
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "r16"))

@@ -16,7 +16,6 @@ object Profile {
     val prefixes = args.drop(1).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus)
-    GraftExtensions.register(spark)
     // same warmup as Bench
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
     Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)

@@ -7,7 +7,6 @@ object Verify {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus)
-    GraftExtensions.register(spark) // SQL surface live in the gate session
     new java.io.File(outDir).mkdirs()
     // Dev knob mirroring Bench's: SPARK_GRAFT_VERIFY_ONLY=q82 dumps just
     // those queries (prefix match) — driver runs leave it unset.

@@ -36,12 +36,12 @@ private[graft] object GatesVectorStore {
     "q113_store_semantic" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val tmp = java.nio.file.Files.createTempDirectory("graft_emb_life").toString
-      graft.operators.EmbeddingStore.write(
+      Knn.writeIvfIndex(
         emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding", tmp,
         c = 16, portableHash = true)
-      graft.operators.EmbeddingStore.delete(
+      Knn.deleteFromIvfIndex(
         emb.where(col("vec_id") % 4 === 0).select("vec_id"), "vec_id", tmp)
-      graft.operators.EmbeddingStore.compactStore(s, tmp)
+      Knn.compactIvfStore(s, tmp)
       graft.operators.EmbeddingStore.probe(s, tmp,
         emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding",
         tau = 0.3, nprobe = 4)
@@ -56,10 +56,10 @@ private[graft] object GatesVectorStore {
     "q114_centroid_drift" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val tmp = java.nio.file.Files.createTempDirectory("graft_emb_drift").toString
-      graft.operators.EmbeddingStore.write(
+      Knn.writeIvfIndex(
         emb.where(col("vec_id") % 2 === 0), "vec_id", "embedding", tmp,
         c = 16, portableHash = true)
-      graft.operators.EmbeddingStore.append(
+      Knn.appendIvfIndex(
         emb.where(col("vec_id") % 2 === 1), "vec_id", "embedding", tmp)
       graft.operators.EmbeddingStore.drift(s, tmp)
     }),

@@ -2,117 +2,46 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.store.{Component, Maintenance, Tombstones}
+import graft.store.Tombstones
 
 /** Persisted EMBEDDING store — [[MinhashStore]]'s twin at the semantic
-  * layer: fingerprint the corpus once as a cell-partitioned IVF index
-  * ([[Knn.writeIvfIndex]]'s layout), then near-dedup every arriving
-  * batch against the full history with a partition-pruned probe —
-  * incremental SemDeDup as a running service. Surface-text dedup
-  * misses paraphrases and translations; this catches anything whose
-  * EMBEDDING collides, at the cost of IVF's nprobe recall (a dup
-  * landing in an unprobed cell escapes — raise nprobe or run the
-  * MinhashStore twin alongside for the exact-surface tier).
+  * layer: fingerprint the corpus once as a cell-partitioned IVF index,
+  * then near-dedup every arriving batch against the full history with
+  * a partition-pruned probe — incremental SemDeDup as a running
+  * service. Surface-text dedup misses paraphrases and translations;
+  * this catches anything whose EMBEDDING collides, at the cost of
+  * IVF's nprobe recall (a dup landing in an unprobed cell escapes —
+  * raise nprobe or run the MinhashStore twin alongside for the
+  * exact-surface tier).
   *
-  * Layout under `path` (exactly [[Knn.writeIvfIndex]]):
-  *   - `centroids/` metadata-scale cell centers
-  *   - `cells/`     (id, vec) partitioned by cell — probes read only
-  *                  the probed cells' directories.
-  *
-  * Maintenance lifecycle ([[graft.store]]'s tombstone table, swap and
-  * maintenance check): [[delete]] tombstones ids (probes stop
-  * reporting them immediately), [[compactStore]] reclaims their bytes, and [[drift]] measures centroid staleness —
-  * appends assign against frozen centroids, so rising drift is the
-  * signal to schedule the periodic full rebuild ([[write]] on the
-  * accumulated corpus), the standard IVF maintenance trade.
+  * The store IS a [[Knn.writeIvfIndex]] store, and its lifecycle is
+  * Knn's IVF lifecycle: build with [[Knn.writeIvfIndex]], backfill with
+  * [[Knn.appendIvfIndex]], tombstone with [[Knn.deleteFromIvfIndex]]
+  * (probes stop reporting the ids immediately), reclaim bytes with
+  * [[Knn.compactIvfStore]] / [[Knn.maintainIvfStore]]. This object adds
+  * only the dedup surface — [[probe]], [[ingest]], [[ingestStream]] —
+  * and [[drift]], which measures centroid staleness: appends assign
+  * against frozen centroids, so rising drift is the signal to schedule
+  * the periodic full rebuild on the accumulated corpus, the standard
+  * IVF maintenance trade.
   */
 object EmbeddingStore {
-
-  /** Build the store from an initial corpus (overwrites `path`). */
-  def write(df: DataFrame, idCol: String, vecCol: String, path: String,
-            c: Int = 16, refineIters: Int = 0,
-            portableHash: Boolean = false): Unit =
-    Knn.writeIvfIndex(df, idCol, vecCol, path, c, refineIters, portableHash)
-
-  /** Append fingerprints without probing (bulk backfill). */
-  def append(batch: DataFrame, idCol: String, vecCol: String,
-             path: String): Unit =
-    Knn.appendIvfIndex(batch, idCol, vecCol, path)
 
   /** Semantic near-dup hits between batch docs and store docs:
     * (id_new, id_store, sim >= tau). k=1 suffices for detection — the
     * TOP neighbor beats every other, so "best >= tau" is exactly
     * "any >= tau". The probe reads ~nprobe/c of the store
-    * (partition-pruned; plan-asserted in Knn's specs). Tombstoned ids
-    * are filtered out of the cells scan BEFORE top-k ranking (see
-    * [[Knn.searchIvf]]'s `exclude` note — post-ranking masking would
-    * let a deleted doc eat the one rank slot and hide a live dup). */
+    * (partition-pruned; plan-asserted in Knn's specs). [[Knn.searchIvf]]
+    * drops the store's tombstoned ids from the cells scan BEFORE top-k
+    * ranking — post-ranking masking would let a deleted doc eat the one
+    * rank slot and hide a live dup. */
   def probe(spark: SparkSession, path: String,
             batch: DataFrame, idCol: String, vecCol: String,
             tau: Double = 0.95, nprobe: Int = 4): DataFrame =
-    Knn.searchIvf(spark, path, batch, idCol, vecCol, k = 1, nprobe,
-      exclude = Tombstones.Default.read(spark, path))
+    Knn.searchIvf(spark, path, batch, idCol, vecCol, k = 1, nprobe)
       .where(col("sim") >= tau)
       .select(col("query_id").as("id_new"),
         col("neighbor_id").as("id_store"), col("sim"))
-
-  /** Tombstone `ids` (one column, same type as the store's id): probes
-    * stop reporting them immediately; bytes are reclaimed at the next
-    * [[compactStore]]. Append-only metadata — no store rewrite — so it
-    * is safe per-batch (takedowns, retraction feeds). The tombstone
-    * set must stay broadcast-scale between compactions (it rides into
-    * every probe's cells scan as a broadcast anti-join). The table is
-    * [[graft.store.Tombstones.Default]]. */
-  def delete(ids: DataFrame, idCol: String, path: String): Unit =
-    Tombstones.Default.add(ids, col(idCol), path)
-
-  /** Threshold-driven store maintenance (round 15 —
-    * [[graft.operators.Knn.maintainIvfStore]]'s embedding-store twin,
-    * completing the policy matrix beside [[drift]]): compact when the
-    * distinct tombstone-table count (orphans included) exceeds
-    * `maxTombstoneFrac` of stored vectors, or when any cell directory
-    * has accreted more than `maxFilesPerCell` files (each
-    * [[ingest]]/[[ingestStream]] batch appends ≥1 file per touched
-    * cell; 0 disables). Compaction answers bytes/file hygiene only —
-    * distribution shift stays [[drift]]'s metric and a full rebuild's
-    * job. Returns Some(manifest) when maintenance ran. */
-  def maintainStore(spark: SparkSession, path: String,
-                    maxTombstoneFrac: Double = 0.1,
-                    maxFilesPerCell: Int = 0): Option[DataFrame] =
-    Maintenance.run(maxTombstoneFrac,
-      rows = spark.read.parquet(s"$path/cells").select("id").count(),
-      tombstones = Tombstones.Default.count(spark, path),
-      overBudget = Maintenance.partitionsOver(spark, path, "cells",
-        maxFilesPerCell).nonEmpty
-    )(compactStore(spark, path))
-
-  /** Rewrite `cells/` minus tombstones (cell partitioning preserved —
-    * probe pruning is untouched) and drop the tombstone set. Centroids
-    * are NOT retrained: compaction reclaims bytes, it does not answer
-    * distribution shift — that is [[drift]]'s job, and the answer is a
-    * full [[write]] rebuild. The swap is
-    * [[graft.store.Component.replace]] (run it in a maintenance
-    * window). Returns a manifest: (component, rows). AQE sizes the
-    * anti-join — a compaction may carry an arbitrarily large tombstone
-    * backlog, so no broadcast hint here. */
-  def compactStore(spark: SparkSession, path: String): DataFrame = {
-    val tomb = Tombstones.Default.read(spark, path)
-    val nTomb = tomb.map(_.count()).getOrElse(0L)
-    val cells = spark.read.parquet(s"$path/cells")
-    val kept = tomb.fold(cells)(t =>
-      cells.join(t, cells("id") === t("id"), "left_anti"))
-    // one shuffle partition per cell → one file per cell: compaction
-    // COALESCES the ≥1-file-per-touched-cell-per-batch accretion of
-    // the append/ingest paths (round 15 — [[maintainStore]]'s
-    // files-per-cell trigger relies on this resetting the count)
-    Component.replace(spark, path, "cells") { tmp =>
-      kept.repartition(col("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/cells")
-    }
-    Tombstones.Default.clear(spark, path)
-    Component.manifest(spark, Component.rows(spark, path, "cells"),
-      "tombstones_applied" -> nTomb)
-  }
 
   /** Centroid-drift metric — the rebuild scheduler's input. One row:
     * (n_vectors, mean_drift_micro, max_cell_drift_micro) where a
@@ -123,11 +52,12 @@ object EmbeddingStore {
     * runs). Appends assign against FROZEN centroids, so as the data
     * distribution shifts this number rises monotonically in
     * expectation; compare against the post-build baseline and trigger
-    * a [[write]] rebuild past a ratio threshold (FAISS-style IVF
-    * maintenance, made measurable). Cost: one scan of `cells/` joined
-    * to the broadcast metadata-scale centroids — no shuffle beyond the
-    * 1-row aggregate. Tombstoned rows are excluded (they will leave at
-    * the next compaction and should not hold the metric hostage). */
+    * a [[Knn.writeIvfIndex]] rebuild past a ratio threshold
+    * (FAISS-style IVF maintenance, made measurable). Cost: one scan of
+    * `cells/` joined to the broadcast metadata-scale centroids — no
+    * shuffle beyond the 1-row aggregate. Tombstoned rows are excluded
+    * (they will leave at the next compaction and should not hold the
+    * metric hostage). */
   def drift(spark: SparkSession, path: String): DataFrame = {
     val centroids = broadcast(
       spark.read.parquet(s"$path/centroids")
@@ -174,7 +104,7 @@ object EmbeddingStore {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     survivors.count()
     survivorSink.foreach(_(survivors))
-    append(survivors, idCol, vecCol, path)
+    Knn.appendIvfIndex(survivors, idCol, vecCol, path)
     survivors
   }
 

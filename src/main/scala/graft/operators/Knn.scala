@@ -600,18 +600,14 @@ object Knn {
   /** Probe a persisted IVF index. The probed cell set (queries × nprobe,
     * driver-bounded) becomes an `isin` filter on the partition column,
     * so the scan prunes to the probed directories before any join.
-    *
-    * `exclude`: optional one-column `id` frame of corpus ids to drop
-    * from the scan BEFORE scoring (broadcast anti-join — must stay
-    * broadcast-scale). Filtering pre-top-k is load-bearing: an excluded
-    * id that merely got masked post-ranking would eat a rank slot and
-    * hide a live neighbor (EmbeddingStore tombstones ride here). */
+    * The store's tombstoned ids ([[deleteFromIvfIndex]]) leave the scan
+    * BEFORE scoring: a deleted id that merely got masked post-ranking
+    * would eat a rank slot and hide a live neighbor. */
   def searchIvf(spark: SparkSession, path: String,
                 queries: DataFrame, queryId: String, queryVec: String,
-                k: Int, nprobe: Int = 4,
-                exclude: Option[DataFrame] = None): DataFrame =
+                k: Int, nprobe: Int = 4): DataFrame =
     topKPerQuery(probeIvf(spark, path, queries, queryId, queryVec,
-      nprobe, None, exclude), k)
+      nprobe, None), k)
 
   /** FILTERED vector search over a persisted IVF index (round 13) —
     * the metadata-predicate + kNN combination every production vector
@@ -628,10 +624,9 @@ object Knn {
   def searchIvfFiltered(spark: SparkSession, path: String,
                         queries: DataFrame, queryId: String,
                         queryVec: String, k: Int, pred: Column,
-                        nprobe: Int = 4,
-                        exclude: Option[DataFrame] = None): DataFrame =
+                        nprobe: Int = 4): DataFrame =
     topKPerQuery(probeIvf(spark, path, queries, queryId, queryVec,
-      nprobe, Some(pred), exclude), k)
+      nprobe, Some(pred)), k)
 
   /** RANGE search over a persisted IVF index (round 13) — every
     * neighbor with 6-dp cosine ≥ `tau` among the probed cells, no
@@ -644,10 +639,8 @@ object Knn {
   def searchIvfRange(spark: SparkSession, path: String,
                      queries: DataFrame, queryId: String,
                      queryVec: String, tau: Double, nprobe: Int = 4,
-                     pred: Option[Column] = None,
-                     exclude: Option[DataFrame] = None): DataFrame =
-    probeIvf(spark, path, queries, queryId, queryVec, nprobe, pred,
-      exclude)
+                     pred: Option[Column] = None): DataFrame =
+    probeIvf(spark, path, queries, queryId, queryVec, nprobe, pred)
       .where(col("sim") >= tau)
 
   /** TOMBSTONE delete for a persisted IVF index (round 14 — the
@@ -673,21 +666,21 @@ object Knn {
   /** MATERIALIZE IVF deletions — BUCKET-PRUNED: only the cells that
     * actually contain a tombstoned id are rewritten (one column-pruned
     * pass over (id, cell) finds them — cell is the partition column,
-    * so that scan reads id bytes only), survivors land back under
-    * dynamic partition overwrite (exactly the affected directories are
-    * replaced), and a fully-tombstoned cell's directory is deleted
-    * explicitly (dynamic overwrite only replaces partitions PRESENT in
-    * the output — round-14 hazard, covered by IvfLifecycleSpec).
-    * Untouched cells' files are never read at full width or
-    * rewritten — at 100 TB a compaction costs O(affected cells), not
-    * O(store). Survivor rows are carried verbatim (schema-discovered,
-    * so the flat store's `keep` attributes and the PQ/SQ8/RQ twins'
-    * `codes` columns all ride through — codes are a deterministic pure
-    * projection of the stored books, so carrying beats re-encoding),
-    * re-sorted by id within each cell (the coded twins' re-rank
-    * pushdown relies on tight row-group id stats). Centroids are NOT
-    * retrained: compaction reclaims bytes, it does not answer
-    * distribution shift — that is [[EmbeddingStore.drift]]'s
+    * so that scan reads id bytes only). Their survivors are written
+    * `partitionBy(cell)` under the [[graft.store.Component.replace]]
+    * scratch root, and each rewritten cell's directory is swapped for
+    * its new copy; a cell left with no survivors has no new copy, so
+    * its directory is deleted. A write that fails leaves every live
+    * cell as it was. Untouched cells' files are never read at full
+    * width or rewritten — at 100 TB a compaction costs O(affected
+    * cells), not O(store). Survivor rows are carried verbatim
+    * (schema-discovered, so the flat store's `keep` attributes and the
+    * PQ/SQ8/RQ twins' `codes` columns all ride through — codes are a
+    * deterministic pure projection of the stored books, so carrying
+    * beats re-encoding), re-sorted by id within each cell (the coded
+    * twins' re-rank pushdown relies on tight row-group id stats).
+    * Centroids are NOT retrained: compaction reclaims bytes, it does
+    * not answer distribution shift — that is [[EmbeddingStore.drift]]'s
     * metric and a full rebuild's job. Returns a manifest
     * (component, rows). Run in a maintenance window (the partition
     * swap is not atomic w.r.t. concurrent probes). */
@@ -709,33 +702,29 @@ object Knn {
     // cell to one shuffle partition, so a coalesced cell lands as one
     // file regardless of how many micro-batch appends accreted.
     val rewriteSet = (affected ++ extraCells).distinct
-    val (rewritten, emptied) =
-      if (rewriteSet.isEmpty) (0L, 0L)
-      else {
-        // lineage OFF the overwrite path: the write below replaces
-        // the very partitions this frame reads
+    val kept =
+      if (rewriteSet.isEmpty) 0L
+      else Component.replace(spark, path,
+          rewriteSet.map(c => s"cells/cell=$c"): _*) { tmp =>
         val scan = spark.read.parquet(cellsPath)
           .where(col("cell").isin(rewriteSet: _*))
-        val survivors = tombOpt.fold(scan)(t =>
+        tombOpt.fold(scan)(t =>
             scan.join(broadcast(t), Seq("id"), "left_anti"))
-          .localCheckpoint(true)
-        val keptCells = survivors.select(col("cell").cast("long"))
-          .distinct().collect().map(_.getLong(0)).toSet
-        survivors.repartition(col("cell"))
+          .repartition(col("cell"))
           .sortWithinPartitions("cell", "id")
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell").parquet(cellsPath)
-        graft.plans.Blocks.free(survivors)
-        val gone = rewriteSet.filterNot(keptCells)
-        gone.foreach(c => Component.delete(spark, s"$cellsPath/cell=$c"))
-        (keptCells.size.toLong, gone.size.toLong)
+          .write.partitionBy("cell").parquet(s"$tmp/cells")
+        // the cells that kept a row: one listing, no job
+        val out = new org.apache.hadoop.fs.Path(s"$tmp/cells")
+        out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(out).count(_.getPath.getName.startsWith("cell="))
+          .toLong
       }
     tombOpt.foreach { t =>
       graft.plans.Blocks.free(t)
       Tombstones.Default.clear(spark, path)
     }
     Component.manifest(spark, "tombstones_applied" -> nTomb,
-      "cells_rewritten" -> rewritten, "cells_emptied" -> emptied,
+      "cells_rewritten" -> kept, "cells_emptied" -> (rewriteSet.size - kept),
       "cells_coalesced" -> extraCells.distinct.filterNot(affected.toSet)
         .size.toLong)
   }
@@ -837,16 +826,15 @@ object Knn {
 
   /** Shared IVF probe: nprobe nearest cells per query (per-row
     * bounded-heap centroid ranking), directory-pruned cell scan, optional
-    * attribute predicate + exclude anti-join BEFORE scoring — the
-    * store's own tombstones ([[deleteFromIvfIndex]]) merge into that
-    * same pre-scoring anti-join — 6-dp cosine per (query, candidate).
+    * attribute predicate + the store's tombstone anti-join
+    * ([[deleteFromIvfIndex]]) BEFORE scoring, 6-dp cosine per
+    * (query, candidate).
     * Returns the scored candidate stream; callers cap (top-k) or
     * threshold (range) it. */
   private def probeIvf(spark: SparkSession, path: String,
                        queries: DataFrame, queryId: String,
                        queryVec: String, nprobe: Int,
-                       pred: Option[Column],
-                       exclude: Option[DataFrame]): DataFrame = {
+                       pred: Option[Column]): DataFrame = {
     // Probe assignment as a PER-ROW bounded-heap expression (round 15,
     // guide §2.4 — the knnGraph round-11 swap, now on the store probe
     // path): the centroid frame is metadata-scale (c rows), so collect
@@ -863,9 +851,7 @@ object Knn {
     val cellsRaw = spark.read.parquet(s"$path/cells")
       .where(col("cell").isin(probedCells: _*)) // partition pruning
     val cellsPred = pred.fold(cellsRaw)(p => cellsRaw.where(p))
-    val excl = (exclude.map(_.select(col("id"))).toSeq ++
-      Tombstones.Default.read(spark, path).toSeq).reduceOption(_ unionByName _)
-    val cells = excl.fold(cellsPred)(t =>
+    val cells = Tombstones.Default.read(spark, path).fold(cellsPred)(t =>
       cellsPred.join(broadcast(t), Seq("id"), "left_anti"))
     cells.join(broadcast(qAssign), Seq("cell"))
       .where(col("id") =!= col("query_id"))
@@ -1486,10 +1472,8 @@ object Knn {
     // The partitioned store tables overwrite with a per-write STATIC
     // partitionOverwriteMode (round-12 advice): under a session-level
     // `dynamic` mode an overwrite only replaces the partitions PRESENT
-    // in the frame — a (layer, bucket) partition whose rows were all
-    // tombstoned would keep its old files and resurrect deleted nodes
-    // after compaction, and a rebuild at an existing path would keep
-    // stale partitions. Static replaces the whole table, which is what
+    // in the frame, so a rebuild at an existing path would keep stale
+    // partitions. Static replaces the whole table, which is what
     // "overwrite the store" means; the option leaves the session
     // config alone, so no concurrent call observes a flip.
     //
@@ -1809,10 +1793,11 @@ object Knn {
     * as the min surviving id (levels re-derived from the meta's hash
     * mode), the meta layer count RE-CLAMPS to the deepest surviving
     * level (an emptied top layer must not strand descent seeds), and
-    * the tombstone table resets. Only rewrites what a compaction must:
-    * each table reads, checkpoints (lineage off the overwrite path),
-    * and lands once — under static partition-overwrite, so
-    * fully-tombstoned partitions' old files are replaced, not kept. */
+    * the tombstone table resets. Nodes, codes (when the store has
+    * them), edges, entries and meta are written under one
+    * [[graft.store.Component.replace]] and swapped only after every
+    * write succeeded, so a failed write leaves the live store as it
+    * was. */
   def compactGraphStore(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
     val GraphMeta(k, buckets, layers, portable, alphaMicro, kCand) =
@@ -1821,6 +1806,8 @@ object Knn {
     // rewrite, not an error (same fallback the walk takes)
     val del = broadcast(Tombstones.Graph.read(spark, path)
       .getOrElse(Seq.empty[Long].toDF("id")))
+    // materialized once: the layer re-clamp, the node and codes writes
+    // and the entry build all read the survivors
     val nodes2 = spark.read.parquet(s"$path/nodes")
       .join(del, Seq("id"), "left_anti")
       .localCheckpoint(true)
@@ -1828,7 +1815,6 @@ object Knn {
       .join(del.select(col("id").as("src")), Seq("src"), "left_anti")
       .join(del.select(col("id").as("dst")), Seq("dst"), "left_anti")
       .select("src", "dst", "sim", "layer", "bucket")
-      .localCheckpoint(true)
     // RE-CLAMP the layer count to the deepest SURVIVING level (round-12
     // advice): if compaction removes every top-layer node, a search
     // descending from the recorded top would seed an empty beam — the
@@ -1843,47 +1829,45 @@ object Knn {
         val row = nodes2.agg(max(levelOf(col("id"), layers, portable))).head()
         if (row.isNullAt(0)) 0 else math.min(layers, row.getInt(0))
       }
-    // static overwrites: see writeGraphIndex.
-    // repartition by the partition key → one file per directory:
-    // compaction coalesces the per-append file accretion (round 15 —
-    // [[maintainGraphStore]]'s files-per-bucket trigger relies on
-    // this resetting the count)
-    nodes2.repartition(col("bucket"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("bucket").parquet(s"$path/nodes")
-    // codes sidecar follows the survivors (round 13): re-project the
-    // compacted node table through the stored books so the ADC walk's
-    // staleness guard holds post-compaction.
-    readGraphBooks(spark, path).foreach { books =>
-      nodes2.select(col("id"),
-          pmod(col("id"), lit(buckets.toLong)).cast("int").as("bucket"),
-          Pq.codesColumn(col("vec"), books).as("codes"))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "static")
-        .partitionBy("bucket").parquet(s"$path/codes")
+    val books = readGraphBooks(spark, path)
+    val tables = Seq("nodes") ++ books.map(_ => "codes") ++
+      Seq("edges", "entries", "meta")
+    Component.replace(spark, path, tables: _*) { tmp =>
+      // repartition by the partition key → one file per directory:
+      // compaction coalesces the per-append file accretion (round 15 —
+      // [[maintainGraphStore]]'s files-per-bucket trigger relies on
+      // this resetting the count)
+      nodes2.repartition(col("bucket"))
+        .write.partitionBy("bucket").parquet(s"$tmp/nodes")
+      // codes sidecar follows the survivors (round 13): re-project the
+      // compacted node table through the stored books so the ADC walk's
+      // staleness guard holds post-compaction.
+      books.foreach { b =>
+        nodes2.select(col("id"),
+            pmod(col("id"), lit(buckets.toLong)).cast("int").as("bucket"),
+            Pq.codesColumn(col("vec"), b).as("codes"))
+          .repartition(col("bucket"))
+          .write.partitionBy("bucket").parquet(s"$tmp/codes")
+      }
+      edges2.repartition(col("layer"), col("bucket"))
+        .write.partitionBy("layer", "bucket").parquet(s"$tmp/edges")
+      val cents = spark.read.parquet(s"$path/centroids")
+      val survivors = nodes2.select(col("id"), col("vec"))
+      (0 to newLayers).map { l =>
+        val sub =
+          if (l == 0) survivors
+          else survivors.where(levelOf(col("id"), layers, portable) >= l)
+        assignCells(sub, "id", "vec", cents)
+          .groupBy("cell")
+          .agg(min_by(struct(col("id"), col("vec")), col("id")).as("m"))
+          .select(lit(l).as("layer"), col("cell"), col("m.id").as("node"),
+            col("m.vec").as("nvec"))
+      }.reduce(_ unionByName _).write.parquet(s"$tmp/entries")
+      Seq((k, buckets, newLayers, portable, alphaMicro, kCand))
+        .toDF("k", "buckets", "layers", "portable", "alphamicro", "kcand")
+        .write.parquet(s"$tmp/meta")
     }
-    edges2.repartition(col("layer"), col("bucket"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("layer", "bucket").parquet(s"$path/edges")
-    graft.plans.Blocks.free(edges2)
-    val cents = spark.read.parquet(s"$path/centroids")
-    val survivors = nodes2.select(col("id"), col("vec"))
-    val entries = (0 to newLayers).map { l =>
-      val sub =
-        if (l == 0) survivors
-        else survivors.where(levelOf(col("id"), layers, portable) >= l)
-      assignCells(sub, "id", "vec", cents)
-        .groupBy("cell")
-        .agg(min_by(struct(col("id"), col("vec")), col("id")).as("m"))
-        .select(lit(l).as("layer"), col("cell"), col("m.id").as("node"),
-          col("m.vec").as("nvec"))
-    }.reduce(_ unionByName _).localCheckpoint(true)
-    entries.write.mode("overwrite").parquet(s"$path/entries")
-    graft.plans.Blocks.free(entries)
     graft.plans.Blocks.free(nodes2)
-    Seq((k, buckets, newLayers, portable, alphaMicro, kCand))
-      .toDF("k", "buckets", "layers", "portable", "alphamicro", "kcand")
-      .write.mode("overwrite").parquet(s"$path/meta")
     Tombstones.Graph.reset(spark, path)
   }
 
@@ -1931,7 +1915,7 @@ object Knn {
     * bound as the IVF policy), or when any nodes bucket directory has
     * accreted more than `maxFilesPerBucket` files (0 disables — the
     * [[ingestGraphStream]] small-file bound; [[compactGraphStore]]
-    * rewrites every table under static overwrite, which coalesces).
+    * rewrites every table at one file per partition).
     * Returns Some(manifest: tombstones_applied, nodes_live) when a
     * compaction ran, None when the store is within budget. */
   def maintainGraphStore(spark: SparkSession, path: String,

@@ -32,27 +32,35 @@ object Component {
   }
 
   /** Replace the components `names` of the store at `path` with what
-    * `write` lands under the scratch root it is given (`write` must
-    * write `<root>/<name>` for every name). Each live component is
-    * deleted and the new one renamed into place only after `write`
-    * returns, so a write that throws leaves every live component
-    * readable and unchanged (and its partial output is removed). The
-    * swap itself is delete-then-rename per component — not atomic
-    * with respect to concurrent readers, so run compactions in a
-    * maintenance window; a failed rename leaves the scratch root in
-    * place for recovery. */
-  def replace(spark: SparkSession, path: String, names: String*)
-             (write: String => Unit): Unit = {
+    * `write` lands under the scratch root it is given: the new copy of
+    * `name` is `<root>/<name>`. A name may be a nested path (one
+    * partition, `cells/cell=3`); a name `write` did not produce is
+    * gone, so its live copy is deleted and nothing takes its place.
+    * Each live component is deleted and the new one renamed into place
+    * only after `write` returns, so a write that throws leaves every
+    * live component readable and unchanged (and its partial output is
+    * removed). The swap itself is delete-then-rename per component —
+    * not atomic with respect to concurrent readers, so run compactions
+    * in a maintenance window; a rename that fails raises and leaves
+    * the scratch root in place for recovery. Returns what `write`
+    * returned. */
+  def replace[A](spark: SparkSession, path: String, names: String*)
+                (write: String => A): A = {
     val tmp = new Path(s"$path/_compact_tmp")
     val fs = fsOf(spark, tmp)
     fs.delete(tmp, true)
-    try write(tmp.toString)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    val out =
+      try write(tmp.toString)
+      catch { case e: Throwable => fs.delete(tmp, true); throw e }
     names.foreach { c =>
-      fs.delete(new Path(s"$path/$c"), true)
-      fs.rename(new Path(tmp, c), new Path(s"$path/$c"))
+      val (src, dst) = (new Path(tmp, c), new Path(s"$path/$c"))
+      fs.delete(dst, true)
+      if (fs.exists(src) && !fs.rename(src, dst))
+        throw new java.io.IOException(
+          s"rename $src -> $dst failed; the new copy stays under $tmp")
     }
     fs.delete(tmp, true)
+    out
   }
 
   /** (name, row count) of a live component — one manifest row. */

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM, with
+  * graft's functions and optimizer rules registered. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -14,10 +15,39 @@ object TestSpark {
       .appName("graft-tests")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftExtensions.register(s)
     s
   }
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** The number of jobs `body` launches, counted by a SparkListener on
+    * a job group the calling thread sets. A fence job in a second group
+    * marks when every earlier event was delivered. */
+  protected def jobCount(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"spec-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-fence" => fence.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, null)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
 }

@@ -214,7 +214,6 @@ class AsOfJoinSpec extends SparkSpec {
 
 class ExtensionsSpec extends SparkSpec {
   test("SQL functions registered on a live session run the native kernels") {
-    graft.GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,
         |       word_shingles('a b c d', 3) AS sh,
@@ -254,7 +253,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("SQL composition functions equal their Column-API forms (drift guard)") {
-    graft.GraftExtensions.register(spark)
     val s = spark
     import s.implicits._
     val tricky = Seq(

@@ -24,7 +24,7 @@ class EmbeddingStoreSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val path = tmpDir("emb_store")
     // c=2 cells, nprobe=2 → every cell probed: full recall in-spec
-    EmbeddingStore.write(store, "vec_id", "embedding", path, c = 2)
+    Knn.writeIvfIndex(store, "vec_id", "embedding", path, c = 2)
     val survivors = EmbeddingStore.ingest(batch, "vec_id", "embedding",
       path, tau = 0.95, nprobe = 2)
     val ids = survivors.select("vec_id").collect().map(_.getLong(0)).toSet
@@ -45,7 +45,7 @@ class EmbeddingStoreSpec extends SparkSpec {
     // 1 and 2 are BOTH near the probe vector, 1 nearer; deleting 1 must
     // surface 2 — a post-ranking mask would return nothing (1 ate the
     // k=1 slot) and silently let a real dup through.
-    EmbeddingStore.write(Seq(
+    Knn.writeIvfIndex(Seq(
       (1L, Array(1.0f, 0f, 0f, 0f)),
       (2L, Array(0.999f, 0.045f, 0f, 0f)),
       (3L, Array(0f, 0f, 1.0f, 0f))
@@ -55,7 +55,7 @@ class EmbeddingStoreSpec extends SparkSpec {
       "vec_id", "embedding", tau = 0.95, nprobe = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(hits() == Set((11L, 1L)))
-    EmbeddingStore.delete(Seq(1L).toDF("vec_id"), "vec_id", path)
+    Knn.deleteFromIvfIndex(Seq(1L).toDF("vec_id"), "vec_id", path)
     assert(hits() == Set((11L, 2L)), "deleting the top neighbor must surface the live runner-up")
     // ingest path honors tombstones too: the batch doc still dups live 2
     val surv = EmbeddingStore.ingest(batch, "vec_id", "embedding", path,
@@ -68,16 +68,27 @@ class EmbeddingStoreSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val path = tmpDir("emb_cmp")
-    EmbeddingStore.write(Seq(
+    Knn.writeIvfIndex(Seq(
       (1L, Array(1.0f, 0f, 0f, 0f)),
       (2L, Array(0f, 1.0f, 0f, 0f)),
       (3L, Array(0f, 0f, 1.0f, 0f)),
       (4L, Array(0f, 0f, 0f, 1.0f))
     ).toDF("vec_id", "embedding"), "vec_id", "embedding", path, c = 2)
-    EmbeddingStore.delete(Seq(2L, 4L).toDF("vec_id"), "vec_id", path)
-    val manifest = EmbeddingStore.compactStore(spark, path)
+    val cellOf = spark.read.parquet(s"$path/cells")
+      .select(col("id"), col("cell").cast("long"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Knn.deleteFromIvfIndex(Seq(2L, 4L).toDF("vec_id"), "vec_id", path)
+    val manifest = Knn.compactIvfStore(spark, path)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(manifest("cells") == 2L && manifest("tombstones_applied") == 2L, manifest.toString)
+    // the cells holding 2 or 4 are rewritten; one holding nothing else
+    // is emptied
+    val affected = Set(2L, 4L).map(cellOf)
+    val emptied = affected.filter(c =>
+      cellOf.forall { case (id, cc) => cc != c || id == 2L || id == 4L })
+    assert(manifest == Map("tombstones_applied" -> 2L,
+      "cells_rewritten" -> (affected -- emptied).size.toLong,
+      "cells_emptied" -> emptied.size.toLong, "cells_coalesced" -> 0L),
+      manifest.toString)
     val left = spark.read.parquet(s"$path/cells")
     assert(left.columns.contains("cell"), "cell partitioning must survive the rewrite")
     assert(left.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 3L))
@@ -98,13 +109,13 @@ class EmbeddingStoreSpec extends SparkSpec {
       if (i % 2 == 0) (i.toLong, Array(1.0f, 0.01f * i, 0f, 0f))
       else (i.toLong, Array(0.01f * i, 1.0f, 0f, 0f))
     }
-    EmbeddingStore.write(base.toDF("vec_id", "embedding"),
+    Knn.writeIvfIndex(base.toDF("vec_id", "embedding"),
       "vec_id", "embedding", path, c = 2, refineIters = 2)
     def mdrift() = EmbeddingStore.drift(spark, path)
       .collect()(0).getLong(1)
     val before = mdrift()
     // appended batch lives on axis 2 — far from both frozen centroids
-    EmbeddingStore.append(
+    Knn.appendIvfIndex(
       (100 until 120).map(i => (i.toLong, Array(0f, 0.01f * (i - 100), 1.0f, 0f)))
         .toDF("vec_id", "embedding"),
       "vec_id", "embedding", path)
@@ -114,7 +125,7 @@ class EmbeddingStoreSpec extends SparkSpec {
     // rebuild on the accumulated corpus resets the metric
     val all = base ++ (100 until 120).map(i =>
       (i.toLong, Array(0f, 0.01f * (i - 100), 1.0f, 0f)))
-    EmbeddingStore.write(all.toDF("vec_id", "embedding"),
+    Knn.writeIvfIndex(all.toDF("vec_id", "embedding"),
       "vec_id", "embedding", path, c = 3, refineIters = 2)
     assert(mdrift() < after, "rebuild must reduce drift")
   }
@@ -124,7 +135,7 @@ class EmbeddingStoreSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val path = tmpDir("emb_stream_store")
-    EmbeddingStore.write(
+    Knn.writeIvfIndex(
       Seq((1L, Array(1.0f, 0f, 0f, 0f))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", path, c = 1)
     val land = tmpDir("emb_land")
@@ -158,26 +169,26 @@ class EmbeddingStoreSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val path = tmpDir("emb_maint")
-    EmbeddingStore.write(Seq(
+    Knn.writeIvfIndex(Seq(
       (1L, Array(1.0f, 0f, 0f, 0f)),
       (2L, Array(0.9f, 0.4f, 0f, 0f)),
       (3L, Array(0f, 0f, 1.0f, 0f))
     ).toDF("vec_id", "embedding"), "vec_id", "embedding", path, c = 1)
-    assert(EmbeddingStore.maintainStore(spark, path,
+    assert(Knn.maintainIvfStore(spark, path,
       maxTombstoneFrac = 0.5).isEmpty)
     // one live + one ORPHAN tombstone = 2/3 > 0.5 — orphans ride the
     // probe anti-join too, so they count against the budget
-    EmbeddingStore.delete(Seq(1L, 99L).toDF("vec_id"), "vec_id", path)
-    val m = EmbeddingStore.maintainStore(spark, path, maxTombstoneFrac = 0.5)
+    Knn.deleteFromIvfIndex(Seq(1L, 99L).toDF("vec_id"), "vec_id", path)
+    val m = Knn.maintainIvfStore(spark, path, maxTombstoneFrac = 0.5)
     assert(m.nonEmpty, "2/3 tombstones over a 0.5 budget must compact")
     assert(spark.read.parquet(s"$path/cells").count() == 2L)
     // appends accrete cell files; the files budget coalesces them
     def maxFiles() = graft.store.Component.fileStats(spark, path, "cells")
       .agg(max("n_files")).head().getLong(0)
-    EmbeddingStore.append(Seq((11L, Array(0.5f, 0.5f, 0f, 0f)))
+    Knn.appendIvfIndex(Seq((11L, Array(0.5f, 0.5f, 0f, 0f)))
       .toDF("vec_id", "embedding"), "vec_id", "embedding", path)
     assert(maxFiles() > 1, s"append did not accrete files: ${maxFiles()}")
-    val m2 = EmbeddingStore.maintainStore(spark, path,
+    val m2 = Knn.maintainIvfStore(spark, path,
       maxTombstoneFrac = 1.0, maxFilesPerCell = 1)
     assert(m2.nonEmpty, "over-accreted store must compact")
     assert(maxFiles() == 1L, s"compaction did not coalesce: ${maxFiles()}")

@@ -7,34 +7,6 @@ import org.apache.spark.sql.functions._
   * so each hop collects once to expand and once to score. */
 class GraphWalkJobsSpec extends SparkSpec {
 
-  /** The number of jobs `body` launches, counted by a SparkListener on
-    * a job group the calling thread sets. A fence job in a second group
-    * marks when every earlier event was delivered. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"graph-walk-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val fence = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-fence" => fence.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, null)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    jobs.get()
-  }
-
   test("stored graph walk: searchGraphIndex and searchGraphIndexAdc run " +
     "a fixed job count, two collects per hop per layer") {
     val s = spark
@@ -54,9 +26,9 @@ class GraphWalkJobsSpec extends SparkSpec {
     Knn.writeGraphCodes(spark, dir, books)
     val queries = df.where(col("vec_id") % 40 === 1)
 
-    def exact(hops: Int): Int = jobsOf(Knn.searchGraphIndex(spark, dir,
+    def exact(hops: Int): Int = jobCount(Knn.searchGraphIndex(spark, dir,
       queries, "vec_id", "embedding", beam = 6, hops = hops, k = 4))
-    def adc(hops: Int): Int = jobsOf(Knn.searchGraphIndexAdc(spark, dir,
+    def adc(hops: Int): Int = jobCount(Knn.searchGraphIndexAdc(spark, dir,
       books, queries, "vec_id", "embedding", beam = 6, hops = hops, k = 4))
 
     val (exact2, exact3, adc2, adc3) = (exact(2), exact(3), adc(2), adc(3))

@@ -39,6 +39,40 @@ class ComponentSpec extends SparkSpec {
       .as[(String, Long)].collect().toSeq == Seq("part" -> 3L))
   }
 
+  test("replace: nested names swap single partitions, and a name the " +
+    "write did not produce is deleted") {
+    val s = spark
+    import s.implicits._
+    val path = Files.createTempDirectory("component_nested").toString
+    Seq((1L, 0), (2L, 1), (3L, 2)).toDF("id", "p")
+      .write.partitionBy("p").parquet(s"$path/t")
+    Component.replace(spark, path, "t/p=1", "t/p=2") { tmp =>
+      Seq((20L, 1)).toDF("id", "p").write.partitionBy("p").parquet(s"$tmp/t")
+    }
+    assert(live(s"$path/t") == Seq(1L, 20L))
+    assert(!new java.io.File(s"$path/t/p=2").exists())
+    assert(!new java.io.File(s"$path/_compact_tmp").exists())
+  }
+
+  test("replace: a rename that fails raises and keeps the new copy under " +
+    "the scratch root") {
+    val s = spark
+    import s.implicits._
+    FaultFs.register(spark)
+    val path = FaultFs.tempDir("component_rename")
+    (1L to 5L).toDF("id").write.parquet(s"$path/part")
+    val err = FaultFs.failingRenames {
+      intercept[java.io.IOException] {
+        Component.replace(spark, path, "part") { t =>
+          (10L to 12L).toDF("id").write.parquet(s"$t/part")
+        }
+      }
+    }
+    assert(err.getMessage.contains("_compact_tmp"), err.getMessage)
+    assert(live(s"$path/_compact_tmp/part") == (10L to 12L),
+      "the replacement must stay recoverable")
+  }
+
   test("an unreadable graph-store tombstone table raises instead of " +
     "resurrecting deleted nodes") {
     val s = spark
